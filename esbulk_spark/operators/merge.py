@@ -99,6 +99,18 @@ def _expand_attached(segment_dirs: list[str]) -> list[str]:
     return out
 
 
+def _union_bounds(seg_stats: list[dict]) -> dict:
+    """max_dl / min_doc_id of a union of segments, from their stats (the
+    postings stage picks its packing tier from them). A bound that some
+    non-empty segment does not record is left out, not guessed."""
+    out = {}
+    for key, pick in (("max_dl", max), ("min_doc_id", min)):
+        vals = [s.get(key) for s in seg_stats if s.get("n_docs")]
+        if vals and None not in vals:
+            out[key] = pick(vals)
+    return out
+
+
 def merge_segments(
     spark: SparkSession,
     segment_dirs: list[str],
@@ -148,6 +160,7 @@ def merge_segments(
         "chunk_cap": out_cfg.chunk_cap,
         "block_size": out_cfg.block_size,
         "text_col": out_cfg.text_col,
+        **_union_bounds(seg_stats),
         # positions outcome: merged from segments (exact union under the
         # disjoint-range contract), OR rebuilt from content by the
         # build_index positions stage when the caller's cfg asks for
@@ -257,7 +270,8 @@ def merge_segments_fast(
     avgdl = (total_tokens / n_docs) if n_docs else 1.0
     n_shards = sum(s["n_shards"] for s in seg_stats)
     stats = dict(
-        seg_stats[0],
+        {k: v for k, v in seg_stats[0].items() if k not in ("max_dl", "min_doc_id")},
+        **_union_bounds(seg_stats),
         n_docs=int(n_docs),
         avgdl=avgdl,
         total_tokens=total_tokens,
@@ -291,7 +305,7 @@ def merge_segments_fast(
         )
         .withColumn("bucket", bucket_col(F.col("term"), stats["n_buckets"]))
         .repartition(stats["n_buckets"], "bucket")
-        .sortWithinPartitions("term", "shard", "chunk")
+        .sortWithinPartitions("bucket", "term", "shard", "chunk")
     )
     from esbulk_spark.plans.build import _TERM_TABLE_WRITE_OPTIONS
 
@@ -305,7 +319,7 @@ def merge_segments_fast(
         .agg(F.sum("n").alias("df"), F.sum("chunk_cf").alias("cf"))
         .withColumn("bucket", bucket_col(F.col("term"), stats["n_buckets"]))
         .repartition(stats["n_buckets"], "bucket")
-        .sortWithinPartitions("term")
+        .sortWithinPartitions("bucket", "term")
     )
     _atomic_write(dictionary, os.path.join(out, "dictionary"),
                   partition_by=["bucket"], options=_TERM_TABLE_WRITE_OPTIONS)

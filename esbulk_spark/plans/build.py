@@ -9,16 +9,18 @@ Spark-first dataflow, every stage a materialized checkpoint
             (the DDL prologue analog, run.go:160-198)
   stats   : tiny aggregates over the docs norm columns -> stats.json
   postings: ALL-JVM until the encoder — tokenize (single-pass
-            regexp_extract_all in whole-stage codegen) -> explode ->
-            ONE (term, shard) shuffle of raw token rows -> in-partition
-            sort -> the vectorized chunk encoder (run-length tf counting
-            + delta+varint blobs + per-block max-tfnorm + byte offsets),
-            partitioned by term bucket. No Python tokenizer, no
-            hash-agg pass: tf falls out of the sort the shuffle needs
-            anyway. (At 10^12-doc scale, prefer building per-partition
-            SEGMENTS with zero token shuffle and merging them —
-            operators/merge.py — so shuffle volume is index-sized, not
-            token-sized.)
+            regexp_extract_all in whole-stage codegen) -> per-document
+            run-length tf over the sorted token array (one row per
+            POSTING, no token-occurrence rows) -> pack (doc_id, tf, dl)
+            into one cell -> ONE (term, shard) exchange -> collect_list
+            per group -> the vectorized chunk encoder (doc ordering +
+            delta+varint blobs + per-block max-tfnorm + byte offsets),
+            partitioned by term bucket. Positional builds carry each
+            posting's position list in the same rows; the merge
+            re-encode feeds decoded segment rows into the same pack
+            and exchange. (At 10^12-doc scale, prefer building
+            per-partition SEGMENTS and merging them — operators/merge.py
+            — so the exchange covers one wave at a time.)
   dict    : (term, df, cf) aggregated from postings CHUNK METADATA
             (chunk row counts + chunk_cf), partitioned by term bucket.
 
@@ -50,6 +52,7 @@ import json
 import math
 import os
 import shutil
+from contextlib import contextmanager, nullcontext
 
 import numpy as np
 
@@ -76,16 +79,35 @@ def bucket_col(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
 
 
-def _rle_tf_entries(toks_col: str):
-    """Per-document (term, tf) pairs computed MAP-SIDE from the token
-    array: sort the array, take run starts, pair each with its run
-    length. All tokens of a document live in one row, so tf needs no
-    shuffle at all — the (term, shard) exchange then carries one row
-    per POSTING instead of one per token occurrence (~2.5-3x fewer rows
-    at ~2 KB/doc; guide §2.3 "aggregate before you shuffle"), and the
-    post-shuffle tf hash-agg disappears. Byte-identical index output:
-    the encoder receives the same (doc_id, term, tf, dl) multiset."""
+def _rle_entries(toks_col: str, with_positions: bool = False):
+    """Per-document (term, tf[, positions]) entries computed MAP-SIDE
+    from the token array: sort the array, take run starts, pair each
+    with its run length. All tokens of a document live in one row, so
+    tf needs no shuffle at all — the (term, shard) exchange carries one
+    row per POSTING instead of one per token occurrence (~2.5-3x fewer
+    rows at ~2 KB/doc; guide §2.3 "aggregate before you shuffle"), and
+    no post-shuffle aggregate keyed on the document exists.
+
+    ``with_positions`` sorts (term, pos) pairs instead of bare terms:
+    each run is then one term's occurrences in ascending position
+    order, and its ``positions`` are the run's pos values — the same
+    sorted list a posexplode + per-(term, doc) collect would build."""
     toks = F.col(toks_col)
+    if with_positions:
+        # sort_array compares the (term, pos) structs natively; array_sort's
+        # default comparator is an interpreted lambda (noop-sink RLE pass
+        # at 20k docs: 4.3 s vs 5.6 s)
+        items = F.sort_array(
+            F.transform(toks, lambda t, i: F.struct(t.alias("term"), i.alias("pos")))
+        )
+
+        def term_at(st, i):
+            return F.get(st, i)["term"]
+
+        empty = "array<struct<term:string,tf:int,positions:array<int>>>"
+    else:
+        items, term_at = F.array_sort(toks), F.get
+        empty = "array<struct<term:string,tf:int>>"
 
     # "let"-bind each intermediate as a HOF lambda variable (transform
     # over a 1-element array): higher-order functions interpret their
@@ -98,27 +120,64 @@ def _rle_tf_entries(toks_col: str):
         starts_expr = F.filter(
             F.sequence(F.lit(0), n - F.lit(1)),
             lambda i: (i == F.lit(0))
-            | (F.get(st, i) != F.get(st, i - F.lit(1))),
+            | (term_at(st, i) != term_at(st, i - F.lit(1))),
         )
+
+        def run(s, e):
+            fields = [term_at(st, s).alias("term"), (e - s).alias("tf")]
+            if with_positions:
+                fields.append(
+                    F.transform(
+                        F.slice(st, s + F.lit(1), e - s), lambda x: x["pos"]
+                    ).alias("positions")
+                )
+            return F.struct(*fields)
 
         def with_starts(starts):
             ends = F.concat(
                 F.slice(starts, 2, F.size(starts) - F.lit(1)), F.array(n)
             )
-            return F.zip_with(
-                starts,
-                ends,
-                lambda s, e: F.struct(
-                    F.get(st, s).alias("term"), (e - s).alias("tf")
-                ),
-            )
+            return F.zip_with(starts, ends, run)
 
         return F.get(F.transform(F.array(starts_expr), with_starts), 0)
 
-    ent = F.get(F.transform(F.array(F.array_sort(toks)), with_st), 0)
-    return F.when(F.size(toks) > 0, ent).otherwise(
-        F.array().cast("array<struct<term:string,tf:int>>")
-    )
+    ent = F.get(F.transform(F.array(items), with_st), 0)
+    return F.when(F.size(toks) > 0, ent).otherwise(F.array().cast(empty))
+
+
+def _rle_rows(src: DataFrame, with_positions: bool = False) -> DataFrame:
+    """(doc_id, __toks) -> one (doc_id, dl, term, tf[, positions]) row
+    per posting — the postings-stage input, computed without a shuffle
+    (see _rle_entries)."""
+    fields = [F.col("e.term").alias("term"), F.col("e.tf").cast("int").alias("tf")]
+    if with_positions:
+        fields.append(F.col("e.positions").alias("positions"))
+    return src.select(
+        "doc_id",
+        F.size("__toks").alias("dl"),
+        F.explode(_rle_entries("__toks", with_positions)).alias("e"),
+    ).select("doc_id", "dl", *fields)
+
+
+@contextmanager
+def _token_source(spark: SparkSession, docs: DataFrame, cfg: IndexConfig, docs_path: str):
+    """Yield (doc_id, __toks) per document for the postings and positions
+    stages. Content comes from the docs table, or — sha-only mode — from
+    the SOURCE table, with ids re-derived deterministically (same sort
+    keys -> same range partitioning -> same ids). The doc-id cache that
+    re-derivation pins is unpersisted on exit."""
+    pinned = None
+    if cfg.store_content:
+        src = spark.read.parquet(docs_path)
+    elif cfg.id_col:
+        src = docs.withColumn("doc_id", F.col(cfg.id_col).cast("long"))
+    else:
+        src, _, pinned = assign_doc_ids_pinned(docs, cfg.sort_keys)
+    try:
+        yield src.select("doc_id", tokens_col(cfg.text_col).alias("__toks"))
+    finally:
+        if pinned is not None:
+            pinned.unpersist()
 
 
 def _tfnorm(tf: np.ndarray, dl: np.ndarray, k1: float, b: float, avgdl: float) -> np.ndarray:
@@ -291,13 +350,13 @@ def make_chunk_builder(cfg: IndexConfig, avgdl: float, shard_size: int | None = 
     Why arrays instead of one row per posting: the JVM->Python Arrow
     boundary on commodity boxes moves only a few million CELLS per
     second per core, so the fast plan minimizes cells crossing it —
-    tf counting and doc ordering happen JVM-side (hash agg + sort_array
-    inside codegen), and Python receives |groups| rows whose list
-    offsets are exactly the starts/ends frame the vectorized encoder
-    wants. No group ever spans an Arrow batch (a row is atomic), so no
-    tail-carry logic exists. A per-(term,shard) applyInPandas would pay
-    one Python round trip PER GROUP — this pays one per ~thousands of
-    groups.
+    tf counting happens JVM-side before the exchange (_rle_rows), each
+    posting crosses as one packed cell, and Python receives |groups|
+    rows whose list offsets are exactly the starts/ends frame the
+    vectorized encoder wants. No group ever spans an Arrow batch (a row
+    is atomic), so no tail-carry logic exists. A per-(term,shard)
+    applyInPandas would pay one Python round trip PER GROUP — this pays
+    one per ~thousands of groups.
 
     Group size is bounded by the doc-range shard (cfg.target_shard_docs)
     — the salt that keeps a stopword's array from blowing up one
@@ -396,11 +455,18 @@ def _atomic_write(
 # bucket file one undivisible group (nothing prunes); 4 MB groups cut
 # the warm multi-term pruned-postings scan ~2x at the 2M-doc scale
 # (0.16-0.18 s -> 0.08 s). Values/blobs are unchanged — layout only.
-_TERM_TABLE_WRITE_OPTIONS = {
-    "parquet.block.size": os.environ.get(
-        "ESBULK_TERM_TABLE_ROWGROUP", str(4 * 1024 * 1024)
-    )
-}
+# A/B archived in bench/sorted_layout_ab_r06b.json.
+_TERM_TABLE_WRITE_OPTIONS = {"parquet.block.size": str(4 * 1024 * 1024)}
+
+# exchange width for the (term, shard) shuffle: bound POSTINGS PER
+# REDUCE TASK instead of inheriting the session shuffle width (guide §2
+# — partitioning derives from input size, not a constant tuned for one
+# scale). At 218M postings a 32-wide exchange gives every reduce task
+# ~7M postings (~175 MB of collect_list buffers feeding a serial
+# per-partition encode); quiet A/B at 2M docs: 66.8 s (32-wide) vs
+# 45.6-51.5 s (256-wide) for the exchange+agg+encode sub-plan
+# (bench/build2m_width_r06b.json).
+_POSTINGS_PER_TASK = 1_000_000
 
 
 def build_index(
@@ -415,7 +481,9 @@ def build_index(
     ``tf_source``: pre-computed (doc_id, term, tf, dl) rows — the segment
     merge path provides these (decoded from segment postings) so content
     is never re-tokenized; such callers must pre-populate the docs and
-    stats stages in the manifest."""
+    stats stages in the manifest. The stats' ``max_dl`` and
+    ``min_doc_id`` pick the packing tier; without them the rows cross
+    the Arrow boundary unpacked."""
     if cfg.segmented:
         if tf_source is not None:
             raise ValueError("segmented build cannot take a tf_source")
@@ -535,151 +603,47 @@ def build_index(
     stats = json.load(open(stats_path))
 
     # ---- stage: postings chunks by bucket ----
-    # All-JVM until the encoder, ONE action: tokenize (regexp_extract_all
-    # inside whole-stage codegen) -> explode -> hash-agg tf per
-    # (term, doc) with map-side partial aggregation -> groupBy
-    # (term, shard) into a doc-sorted postings ARRAY per group. Only
-    # |groups| rows (with ~16 B/posting array cells) ever cross the
-    # JVM->Python boundary — the Arrow pipe is cell-bound, so this is
-    # 4-5x less traffic than per-posting rows and ~30x fewer rows than
-    # raw tokens.
+    # One shape for every build (plain, positional, sha-only, resume,
+    # merge re-encode): per-posting rows (doc_id, dl, term, tf) -> pack
+    # into one Arrow cell -> ONE repartition(exch_width, term, shard) ->
+    # collect_list per (term, shard) -> the vectorized chunk encoder ->
+    # bucket-partitioned write. Fresh builds derive the rows map-side
+    # from each document's token array (_rle_rows: no token-occurrence
+    # shuffle, no aggregate keyed on the document); the merge path
+    # hands in rows decoded from segment postings (tf_source). Only
+    # |groups| rows (with ~8 B/posting array cells) cross the
+    # JVM->Python boundary — the Arrow pipe is cell-bound.
     post_path = os.path.join(d, "postings")
     pos_path = os.path.join(d, "positions")
-    # one-pass positions+postings (VERDICT r3 item 6): with
-    # store_positions on, BOTH tables derive from a single tokenize +
-    # posexplode + (term, shard) exchange — the per-(term, doc) agg
-    # computes tf AND the sorted position list together; the postings
-    # branch drops the positions column, the positions table rides the
-    # shared persisted agg. Without fusion the build tokenized the
-    # corpus twice and ran a second token-sized shuffle.
-    fuse_positions = (
+    # with store_positions, the postings rows carry each posting's
+    # position list too, persisted for the positions stage: one tokenize
+    # pass feeds both tables. The merge path has no token arrays; its
+    # positions come from the segments or from the stage's own pass.
+    shared_positions = (
         cfg.store_positions
         and tf_source is None
         and not man.is_done("positions", pos_path)
     )
-    tfp_cache = None
-    # map-side run-length tf (see _rle_tf_entries); the positions-fused
-    # and tf_source paths keep their own shapes. ESBULK_BUILD_RLE=0
-    # restores the explode + post-shuffle hash-agg plan for A/B runs.
-    rle = (
-        tf_source is None
-        and not fuse_positions
-        and os.environ.get("ESBULK_BUILD_RLE", "1") != "0"
-    )
-    # exchange width for the (term, shard) shuffle: bound POSTINGS PER
-    # REDUCE TASK instead of inheriting the session shuffle width
-    # (guide §2 — partitioning derives from input size, not a constant
-    # tuned for one scale). At 218M postings a 32-wide exchange gives
-    # every reduce task ~7M postings (~175 MB of collect_list buffers
-    # feeding a serial per-partition encode); quiet A/B at 2M docs:
-    # 66.8 s (32-wide) vs 45.6-51.5 s (256-wide) for the exchange+agg+
-    # encode sub-plan. total_postings is already known from the stats
-    # stage, so the width is data-derived with the session width as the
-    # floor — sf0.1 scale (21.8M postings) keeps its previous plan.
-    _per_task = int(os.environ.get("ESBULK_POSTINGS_PER_TASK", str(1_000_000)))
+    pos_rows = None
     exch_width = max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         spark.sparkContext.defaultParallelism,
-        math.ceil(stats.get("total_postings", 0) / max(_per_task, 1)),
+        math.ceil(stats.get("total_postings", 0) / _POSTINGS_PER_TASK),
     )
     if not man.is_done("postings", post_path):
         from pyspark import StorageLevel
 
-        with StageTimer() as t:
-            tf_pinned = None
-            if tf_source is not None:
-                tfrows = tf_source
-            else:
-                if cfg.store_content:
-                    src = spark.read.parquet(docs_path).select(
-                        "doc_id", tokens_col(cfg.text_col).alias("__toks")
-                    )
-                else:
-                    # sha-only mode: content comes from the SOURCE table;
-                    # ids re-derive deterministically (same sort keys ->
-                    # same range partitioning -> same ids)
-                    if cfg.id_col:
-                        src = docs.withColumn(
-                            "doc_id", F.col(cfg.id_col).cast("long")
-                        )
-                    else:
-                        src, _, tf_pinned = assign_doc_ids_pinned(
-                            docs, cfg.sort_keys
-                        )
-                    src = src.select(
-                        "doc_id", tokens_col(cfg.text_col).alias("__toks")
-                    )
-                # ONE exchange for the whole agg pipeline (r3): raw token
-                # rows repartition by (term, shard) FIRST; then both the
-                # tf hash-agg (keys ⊇ partition keys) and the collect_list
-                # run exchange-free in-partition — measured 20-30% faster
-                # than the old two-shuffle plan (tf-agg shuffle then
-                # regroup shuffle) despite shipping unaggregated tokens.
-                if fuse_positions:
-                    tokens = src.select(
-                        "doc_id",
-                        F.size("__toks").alias("dl"),
-                        F.posexplode("__toks").alias("pos", "term"),
-                    ).withColumn(
-                        "shard", (F.col("doc_id") / F.lit(shard_size)).cast("int")
-                    )
-                    tfp_cache = (
-                        tokens.repartition(exch_width, "term", "shard")
-                        .groupBy("term", "shard", "doc_id", "dl")
-                        .agg(
-                            F.count(F.lit(1)).cast("int").alias("tf"),
-                            # posexplode positions arrive partition-local
-                            # unordered after the exchange; sort per doc
-                            F.sort_array(F.collect_list("pos")).alias(
-                                "positions"
-                            ),
-                        )
-                        .persist(StorageLevel.MEMORY_AND_DISK)
-                    )
-                    tfrows = tfp_cache.drop("positions")
-                elif rle:
-                    # r6: tf via map-side run-length over the sorted
-                    # token array (_rle_tf_entries) — the exchange
-                    # shrinks from token-occurrence rows to posting
-                    # rows and the post-shuffle tf hash-agg vanishes;
-                    # packing ALSO moves map-side (see `grouped`), so
-                    # the one exchange carries (term, shard, packed)
-                    tfrows = (
-                        src.select(
-                            "doc_id",
-                            F.size("__toks").alias("dl"),
-                            F.explode(_rle_tf_entries("__toks")).alias("e"),
-                        )
-                        .select(
-                            "doc_id",
-                            "dl",
-                            F.col("e.term").alias("term"),
-                            F.col("e.tf").cast("int").alias("tf"),
-                        )
-                        .withColumn(
-                            "shard",
-                            (F.col("doc_id") / F.lit(shard_size)).cast("int"),
-                        )
-                    )
-                else:
-                    tokens = src.select(
-                        "doc_id",
-                        F.size("__toks").alias("dl"),
-                        F.explode("__toks").alias("term"),
-                    ).withColumn(
-                        "shard", (F.col("doc_id") / F.lit(shard_size)).cast("int")
-                    )
-                    tfrows = (
-                        tokens.repartition(exch_width, "term", "shard")
-                        .groupBy("term", "shard", "doc_id", "dl")
-                        .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-                    )
-            if "shard" in tfrows.columns:
-                sharded = tfrows
-            else:  # tf_source path (merge re-encode): tf pre-computed
-                sharded = tfrows.withColumn(
-                    "shard", (F.col("doc_id") / F.lit(shard_size)).cast("int")
-                )
+        with StageTimer() as t, (
+            nullcontext(None)
+            if tf_source is not None
+            else _token_source(spark, docs, cfg, docs_path)
+        ) as src:
+            rows = tf_source if src is None else _rle_rows(src, shared_positions)
+            if shared_positions:
+                pos_rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+            sharded = rows.withColumn(
+                "shard", (F.col("doc_id") / F.lit(shard_size)).cast("int")
+            )
             # Arrow-boundary packing tiers (the pipe is CELL-bound, so
             # fewer columns per posting = proportionally faster):
             #   tier 1: (rel_doc_id, tf, dl) in ONE long — rel_doc_id =
@@ -689,9 +653,9 @@ def build_index(
             #     HALF the cells of tier 2; byte-identical blobs
             #     (A/B-asserted in tests/test_chunk_builder.py).
             #   tier 2: (doc_id, tf<<20|dl) struct — big shards.
-            #   tier 3: (doc_id, tf, dl) struct — dl >= 2^20 or merge
-            #     tf_source (max dl unknown).
-            max_dl_ok = tf_source is None and 0 < stats.get("max_dl", 0) < (1 << 20)
+            #   tier 3: (doc_id, tf, dl) struct — dl >= 2^20, or stats
+            #     that do not record max_dl.
+            max_dl_ok = 0 < stats.get("max_dl", 0) < (1 << 20)
             # tier 1 additionally needs NON-NEGATIVE doc ids: rel =
             # doc_id - shard*shard_size is only in [0, shard_size) for
             # doc_id >= 0 (int cast truncates toward zero, so a negative
@@ -701,7 +665,7 @@ def build_index(
                 if (
                     max_dl_ok
                     and shard_size <= (1 << 22)
-                    and stats.get("min_doc_id", 0) >= 0
+                    and stats.get("min_doc_id", -1) >= 0
                 )
                 else ("packed2" if max_dl_ok else "struct")
             )
@@ -709,37 +673,28 @@ def build_index(
                 rel = F.col("doc_id") - F.col("shard").cast("long") * F.lit(
                     int(shard_size)
                 )
-                entry_struct = (
+                entry = (
                     rel * F.lit(1 << 40)
                     + F.col("tf").cast("long") * F.lit(1 << 20)
                     + F.col("dl")
                 )
             elif tier == "packed2":
-                entry_struct = F.struct(
+                entry = F.struct(
                     F.col("doc_id"),
                     (F.col("tf").cast("long") * F.lit(1 << 20) + F.col("dl")).alias("packed"),
                 )
             else:
-                entry_struct = F.struct("doc_id", "tf", "dl")
-            if rle:
-                # pack BEFORE the exchange: the one (term, shard)
-                # shuffle carries (term, shard, packed) posting rows —
-                # tf/dl/doc_id already folded into the packed value
-                # map-side (guide §2.3: project before the exchange)
-                grouped = (
-                    sharded.select("term", "shard", entry_struct.alias("__p"))
-                    .repartition(exch_width, "term", "shard")
-                    .groupBy("term", "shard")
-                    # NO sort_array: doc-ordering happens in the encoder
-                    .agg(F.collect_list("__p").alias("postings"))
-                )
-            else:
-                grouped = (
-                    sharded.groupBy("term", "shard")
-                    # NO sort_array here: doc-ordering happens in the encoder
-                    # (numpy lexsort) — cheaper than the JVM struct sort
-                    .agg(F.collect_list(entry_struct).alias("postings"))
-                )
+                entry = F.struct("doc_id", "tf", "dl")
+            # pack BEFORE the exchange (guide §2.3: project before the
+            # exchange): the shuffle carries (term, shard, packed) rows,
+            # and the collect_list runs exchange-free in-partition
+            grouped = (
+                sharded.select("term", "shard", entry.alias("__p"))
+                .repartition(exch_width, "term", "shard")
+                .groupBy("term", "shard")
+                # NO sort_array: doc-ordering happens in the encoder
+                .agg(F.collect_list("__p").alias("postings"))
+            )
             chunks = (
                 grouped.mapInArrow(
                     make_chunk_builder(cfg, stats["avgdl"], int(shard_size)),
@@ -749,20 +704,21 @@ def build_index(
                 # one output file per bucket directory (instead of one per
                 # task x bucket): query-time partition listing stays O(1).
                 # TERM-SORTED within each bucket file so row-group stats
-                # prune query scans (see _TERM_TABLE_WRITE_OPTIONS).
+                # prune query scans (see _TERM_TABLE_WRITE_OPTIONS);
+                # bucket leads the sort, so the partitioned writer's
+                # required ordering holds without a second sort.
                 .repartition(cfg.n_buckets, "bucket")
-                .sortWithinPartitions("term", "shard", "chunk")
+                .sortWithinPartitions("bucket", "term", "shard", "chunk")
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
             # evidence hook (guide §1/§7.2): dump the postings-stage
             # physical plan before executing it, so plan-shape claims
-            # (exchange count/width, RLE vs explode shape) are checkable
-            # without the Spark UI. No effect when the env var is unset.
+            # (exchange count/width) are checkable without the Spark UI.
+            # No effect when the env var is unset.
             exp_dir = os.environ.get("ESBULK_BUILD_EXPLAIN_DIR")
             if exp_dir:
                 os.makedirs(exp_dir, exist_ok=True)
-                tag = "rle" if rle else "explode"
-                with open(os.path.join(exp_dir, f"postings_{tag}.txt"), "w") as fh:
+                with open(os.path.join(exp_dir, "postings.txt"), "w") as fh:
                     fh.write(
                         chunks._jdf.queryExecution().explainString(
                             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -772,8 +728,6 @@ def build_index(
                 chunks, post_path, partition_by=["bucket"],
                 options=_TERM_TABLE_WRITE_OPTIONS,
             )
-            if tf_pinned is not None:
-                tf_pinned.unpersist()
         # skew metric from the still-cached chunks: postings per
         # (term,shard) group max vs mean
         srow = chunks.agg(
@@ -805,7 +759,7 @@ def build_index(
                 .agg(F.sum("n").alias("df"), F.sum("chunk_cf").alias("cf"))
                 .withColumn("bucket", bucket_col(F.col("term"), cfg.n_buckets))
                 .repartition(cfg.n_buckets, "bucket")
-                .sortWithinPartitions("term")
+                .sortWithinPartitions("bucket", "term")
                 .persist()
             )
             _atomic_write(
@@ -831,50 +785,28 @@ def build_index(
     # (term, doc_id, positions over the ANALYZED token stream), bucket-
     # partitioned like the postings so phrase queries prune the same
     # way. No custom codec: parquet's columnar delta encoding handles
-    # sorted int arrays; Catalyst handles the pivot (posexplode ->
-    # sorted collect_list). Phrase semantics: adjacency in the analyzed
-    # stream (stopwords removed before numbering), identical in the
-    # DuckDB oracle.
-    if cfg.store_positions:
-        if not man.is_done("positions", pos_path):
-            with StageTimer() as t:
-                if tfp_cache is not None:
-                    # fused path: positions ride the shared per-(term,doc)
-                    # agg — zero extra tokenize, zero extra token shuffle
-                    positions = tfp_cache.select("term", "doc_id", "positions")
-                else:
-                    # resume path (postings already done, positions not):
-                    # standalone tokenize + posexplode
-                    psrc = spark.read.parquet(docs_path)
-                    if cfg.store_content:
-                        psrc = psrc.select(
-                            "doc_id", tokens_col(cfg.text_col).alias("__toks")
-                        )
-                    else:
-                        if cfg.id_col:
-                            psrc = docs.withColumn(
-                                "doc_id", F.col(cfg.id_col).cast("long")
-                            )
-                        else:
-                            psrc, _, _pp = assign_doc_ids_pinned(docs, cfg.sort_keys)
-                        psrc = psrc.select(
-                            "doc_id", tokens_col(cfg.text_col).alias("__toks")
-                        )
-                    positions = (
-                        psrc.select(
-                            "doc_id", F.posexplode("__toks").alias("pos", "term")
-                        )
-                        .groupBy("term", "doc_id")
-                        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-                    )
-                positions = positions.withColumn(
-                    "bucket", bucket_col(F.col("term"), cfg.n_buckets)
-                ).repartition(cfg.n_buckets, "bucket")
-                _atomic_write(positions, pos_path, partition_by=["bucket"])
-            man.record("positions", secs=t.secs, fused=tfp_cache is not None)
+    # sorted int arrays. The rows are the postings stage's own
+    # (_rle_rows with positions): persisted ones when both stages ran,
+    # else one tokenize pass of this stage's own. Phrase semantics:
+    # adjacency in the analyzed stream (stopwords removed before
+    # numbering), identical in the DuckDB oracle.
+    if cfg.store_positions and not man.is_done("positions", pos_path):
+        with StageTimer() as t, (
+            nullcontext(None)
+            if pos_rows is not None
+            else _token_source(spark, docs, cfg, docs_path)
+        ) as src:
+            rows = pos_rows if src is None else _rle_rows(src, with_positions=True)
+            positions = (
+                rows.select("term", "doc_id", "positions")
+                .withColumn("bucket", bucket_col(F.col("term"), cfg.n_buckets))
+                .repartition(cfg.n_buckets, "bucket")
+            )
+            _atomic_write(positions, pos_path, partition_by=["bucket"])
+        man.record("positions", secs=t.secs, fused=pos_rows is not None)
 
-    if tfp_cache is not None:
-        tfp_cache.unpersist()
+    if pos_rows is not None:
+        pos_rows.unpersist()
     if chunks_cache is not None:
         chunks_cache.unpersist()
     return stats

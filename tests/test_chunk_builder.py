@@ -127,10 +127,16 @@ def test_chunk_splitting_and_blocks():
 
 def test_pack_tiers_byte_identical(spark, corpus, tmp_path):
     """The three Arrow-boundary packing tiers (packed1 single-long,
-    packed2 struct, struct) must produce byte-identical postings tables
-    — packing is a transport optimization, never a semantic one."""
+    packed2 struct, struct) and a positional build must produce
+    byte-identical postings tables — packing is a transport
+    optimization and positions ride beside the postings rows, never
+    a semantic change. The positional build's positions table must
+    equal a posexplode -> sorted collect_list reference."""
     import os
 
+    from pyspark.sql import functions as F
+
+    from esbulk_spark.functions.analyzer import tokens_col
     from esbulk_spark.plans import build as build_mod
     from esbulk_spark.plans.build import build_index
 
@@ -146,14 +152,39 @@ def test_pack_tiers_byte_identical(spark, corpus, tmp_path):
         }
 
     maps = {}
-    for tier in ("packed1", "packed2", "struct"):
+    # name -> (forced tier, store_positions)
+    for name, (tier, positional) in {
+        "packed1": ("packed1", False),
+        "packed2": ("packed2", False),
+        "struct": ("struct", False),
+        "positional": (None, True),
+    }.items():
         build_mod._FORCE_PACK = tier
         try:
-            d = str(tmp_path / tier)
-            cfg = IndexConfig(index_dir=d, n_buckets=8, n_shards=4, chunk_cap=256)
-            build_index(spark, corpus, cfg, input_sig=f"tier-{tier}")
+            d = str(tmp_path / name)
+            cfg = IndexConfig(index_dir=d, n_buckets=8, n_shards=4, chunk_cap=256,
+                              store_positions=positional)
+            build_index(spark, corpus, cfg, input_sig=f"tier-{name}")
         finally:
             build_mod._FORCE_PACK = None
-        maps[tier] = _postings_map(d)
+        maps[name] = _postings_map(d)
     assert maps["packed1"] == maps["struct"]
     assert maps["packed2"] == maps["struct"]
+    assert maps["positional"] == maps["struct"]
+
+    d = str(tmp_path / "positional")
+    ref = (
+        spark.read.parquet(os.path.join(d, "docs"))
+        .select("doc_id", F.posexplode(tokens_col("content")).alias("pos", "term"))
+        .groupBy("term", "doc_id")
+        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
+    )
+
+    def _rows(df):
+        return sorted(
+            (r.term, r.doc_id, list(r.positions))
+            for r in df.select("term", "doc_id", "positions").collect()
+        )
+
+    got = _rows(spark.read.parquet(os.path.join(d, "positions")))
+    assert got and got == _rows(ref)

@@ -4,7 +4,7 @@ Reuses the docs table of an existing bench index dir and re-runs the
 postings-stage sub-plans cumulatively, timing each with a noop sink:
 
   P0 tokenize                    scan + tokens_col
-  P1 +rle+pack                   + _rle_tf_entries explode + packed project
+  P1 +rle+pack                   + _rle_rows explode + packed project
   P2 +exchange+collect_list      + repartition(term,shard) + groupBy agg
   P3 +encode                     + mapInArrow chunk builder
   P4 +bucket-repartition         + repartition(n_buckets, bucket)
@@ -32,7 +32,7 @@ def main() -> None:
     from esbulk_spark.functions.analyzer import tokens_col
     from esbulk_spark.plans.build import (
         POSTINGS_SCHEMA,
-        _rle_tf_entries,
+        _rle_rows,
         bucket_col,
         make_chunk_builder,
     )
@@ -59,19 +59,8 @@ def main() -> None:
         return src()
 
     def tfrows():
-        return (
-            src()
-            .select(
-                "doc_id",
-                F.size("__toks").alias("dl"),
-                F.explode(_rle_tf_entries("__toks")).alias("e"),
-            )
-            .select(
-                "doc_id", "dl",
-                F.col("e.term").alias("term"),
-                F.col("e.tf").cast("int").alias("tf"),
-            )
-            .withColumn("shard", (F.col("doc_id") / F.lit(shard_size)).cast("int"))
+        return _rle_rows(src()).withColumn(
+            "shard", (F.col("doc_id") / F.lit(shard_size)).cast("int")
         )
 
     def packed(t):
