@@ -75,6 +75,16 @@ POSTINGS_SCHEMA = (
 STATS_FILE = "stats.json"
 
 
+def _shuffle_width(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as an int. A non-numeric setting
+    (``auto`` on platforms whose AQE picks the width) falls back to the
+    default parallelism instead of failing the build."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def bucket_col(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
 
@@ -626,7 +636,7 @@ def build_index(
     )
     pos_rows = None
     exch_width = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        _shuffle_width(spark),
         spark.sparkContext.defaultParallelism,
         math.ceil(stats.get("total_postings", 0) / _POSTINGS_PER_TASK),
     )

@@ -8,14 +8,19 @@ custom Catalyst rule would):
 
   query text
     -> analyze with the SAME analyzer as indexing (determinism contract)
-    -> dictionary lookup, bucket-pruned (terms hash to partition dirs;
-       only those directories are scanned — partition pruning visible in
-       the physical plan) -> per-term idf (driver-side: a handful of rows
-       of METADATA, not data)
-    -> postings scan, bucket- AND term-pruned (parquet predicate pushdown
-       on the sorted `term` column)
-    -> groupBy(qid, shard) applyInPandas block-max scorer (plans/wand.py)
-       — shards are the parallelism unit, exactly like ES shards
+    -> dictionary lookup -> per-term df / idf: the query's terms hash to
+       bucket directories, and only those files are read, on the driver
+       through pyarrow with a `term in terms` filter that prunes the
+       term-sorted row groups (`read_terms`, no Spark job — a handful of
+       rows of METADATA, not data)
+    -> small queries (postings under driver_score_max): the chunk rows
+       come through the same driver read and are scored on the driver
+       with the block-max WAND kernel (plans/wand.py) — zero Spark jobs
+       per query
+    -> large queries and batches: a bucket- AND term-pruned Spark
+       postings scan -> groupBy(qid, shard) applyInPandas scorer with the
+       same kernel — shards are the parallelism unit, exactly like ES
+       shards
     -> global top-k merge of the tiny per-shard winners.
 """
 
@@ -30,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from esbulk_spark.functions.analyzer import analyze_query
-from esbulk_spark.plans.build import STATS_FILE, bucket_col
+from esbulk_spark.plans.build import STATS_FILE
 from esbulk_spark.plans.wand import RESULT_SCHEMA, idf as idf_fn, make_group_scorer
 from esbulk_spark.plans.score import topk_deterministic
 
@@ -140,8 +145,8 @@ class IndexReader:
             if not self.io.exists("deletes"):
                 self._del_arr = None
             else:
-                pdf = self._table("deletes").select("doc_id").toPandas()
-                arr = np.sort(pdf["doc_id"].to_numpy(np.int64))
+                ids = self.read_terms("deletes", columns=["doc_id"])["doc_id"]
+                arr = np.sort(ids.to_numpy().astype(np.int64))
                 self._del_arr = arr if arr.size else None
         return self._del_arr
 
@@ -194,25 +199,46 @@ class IndexReader:
             return bool(v)
         return self.io.exists("positions")
 
-    # ---- planning helpers ----
+    # ---- driver-side reads: the one seam (no Spark job) ----
 
-    def lookup_terms(self, terms: list[str]) -> dict[str, int]:
-        """term -> df, via bucket-pruned dictionary scan. Collects at most
-        len(terms) rows — query metadata, not data."""
+    def read_terms(self, name: str, terms: list[str] | None = None,
+                   columns: list[str] | None = None):
+        """``pyarrow.Table`` of table ``name``'s rows for ``terms`` (None:
+        the whole table), read on the driver from the terms' bucket
+        files through the storage backend. Every driver-side read of
+        dictionary, postings or tombstone rows goes through here;
+        SegmentSetReader overrides it to union its segments."""
+        if terms is not None:
+            terms = sorted(set(terms))
+        buckets = None if terms is None else self._buckets(terms)
+        return self.io.read_terms(name, buckets, terms, columns)
+
+    def read_postings(self, terms: list[str], columns: list[str] | None = None):
+        """Postings chunk rows of ``terms`` as a ``pyarrow.Table`` — the
+        driver-side twin of ``_pruned_postings`` (same rows, no job)."""
+        return self.read_terms("postings", terms, columns)
+
+    def lookup_term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """term -> (df, cf) from the bucket-pruned dictionary rows: at
+        most len(terms) rows of query metadata. cf (collection
+        frequency) feeds the LM Dirichlet similarity's collection
+        language model."""
         if not terms:
             return {}
-        d = self.dictionary().filter(
-            bucket_col(F.col("term"), self.stats["n_buckets"]).isin(
-                self._buckets(terms)
-            )
-            & F.col("term").isin(terms)
-        )
-        return {r["term"]: int(r["df"]) for r in d.select("term", "df").collect()}
+        t = self.read_terms("dictionary", terms, ["term", "df", "cf"])
+        return dict(zip(t["term"].to_pylist(),
+                        zip(t["df"].to_pylist(), t["cf"].to_pylist())))
+
+    def lookup_terms(self, terms: list[str]) -> dict[str, int]:
+        """term -> df (lookup_term_stats without cf)."""
+        return {t: df for t, (df, _cf) in self.lookup_term_stats(terms).items()}
+
+    # ---- planning helpers ----
 
     def _dfs_cached(self, terms: list[str]) -> dict[str, int]:
-        """term -> df via the memoized driver cache; one bucket-pruned
-        lookup job for cache misses only (absence is cached too). Cleared
-        by refresh()."""
+        """term -> df via the memoized driver cache; one dictionary read
+        for cache misses only (absence is cached too). Cleared by
+        refresh()."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
             found = self.lookup_terms(missing)
@@ -230,6 +256,8 @@ class IndexReader:
         return sorted({term_bucket(t, n) for t in terms})
 
     def _pruned_postings(self, terms: list[str]) -> DataFrame:
+        """Spark scan of ``terms``' postings for the distributed plans;
+        driver-side reads use read_postings."""
         return self.postings().filter(
             F.col("bucket").isin(self._buckets(terms)) & F.col("term").isin(terms)
         )
@@ -265,9 +293,8 @@ class IndexReader:
             return None
         # per-term df is query METADATA (<= |terms| ints): resolve it
         # driver-side through the memoized cache and inline the values
-        # as literals. One tiny bucket-pruned lookup job on cold terms,
-        # ZERO extra jobs warm — vs a dictionary broadcast join, whose
-        # broadcast-build job ran on every single search.
+        # as literals. No Spark job, cold or warm — vs a dictionary
+        # broadcast join, whose broadcast-build job ran on every search.
         dfs = self._dfs_cached(all_terms)
         if not dfs:
             return None
@@ -317,9 +344,9 @@ class IndexReader:
     ) -> DataFrame:
         """Batch top-k: ONE Spark job for all queries.
 
-        The per-term df (for idf) rides in via a broadcast join with the
-        bucket-pruned dictionary instead of a separate driver-side lookup
-        job; the scorer computes idf inline. Returns (qid, doc_id, score)
+        The per-term df (for idf) comes from the driver-side dictionary
+        read and rides in as a broadcast (qid, term, df) table; the
+        scorer computes idf inline. Returns (qid, doc_id, score)
         with per-qid top-k, ordered within qid by (score desc, doc_id asc)."""
         analyzed = {qid: analyze_query(q) for qid, q in queries.items()}
         per_shard = self._per_shard_scores(analyzed, k, prune)
@@ -343,8 +370,8 @@ class IndexReader:
 
     # single-query driver-scoring gate: when the query's total postings
     # (known driver-side from the df cache) fit under this bound, the
-    # pruned chunk rows are COLLECTED (one scan stage, no exchange, no
-    # Python workers) and scored on the driver with the same WAND
+    # chunk rows are read on the driver (read_postings: pyarrow over the
+    # terms' bucket files, no Spark job) and scored with the same WAND
     # kernel — the ES coordinator-node role. Hot/huge queries exceed the
     # gate and take the distributed per-shard plan, so this is a latency
     # fast path, not a scale ceiling. ~2M postings ≈ 8-16 MB of blobs.
@@ -362,7 +389,7 @@ class IndexReader:
         kernel, same per-shard top-k contract."""
         from esbulk_spark.plans.wand import score_group
 
-        pdf = self._pruned_postings(sorted(dfs)).toPandas()
+        pdf = self.read_postings(sorted(dfs)).to_pandas()
         if not len(pdf):
             return []
         pdf["df"] = pdf["term"].map(dfs)
@@ -405,9 +432,10 @@ class IndexReader:
     ) -> list[tuple[int, float]]:
         """Top-k as driver-side (doc_id, score) rows — the SERVING path
         (what an ES client gets back as JSON): no result DataFrame is
-        materialized, so per-query cost is one pruned scan stage (small
-        queries) with the global merge on the driver. search_response
-        builds on the same candidates."""
+        materialized. Small queries run no Spark job at all (driver-side
+        dictionary and postings reads, driver scoring); larger ones run
+        the distributed per-shard plan. The global merge is on the
+        driver. search_response builds on the same candidates."""
         cand = self._topk_candidates(query, k, prune)
         if round_to is not None:
             merged = [(d, round(sc, round_to)) for _, d, sc in cand]
@@ -427,9 +455,10 @@ class IndexReader:
         into further Spark plans; for serving latency use search_rows).
 
         Small queries (sum of term dfs under driver_score_max) score on
-        the driver after a single pruned scan stage — no shuffle, no
-        Python workers. Larger queries run the distributed per-shard
-        plan and skip search_many's window-rank merge: the global top-k
+        the driver from the driver-side postings read (search_rows);
+        only the result DataFrame is Spark's. Larger queries run the
+        distributed per-shard plan and skip search_many's window-rank
+        merge: the global top-k
         is a plain orderBy+limit (TakeOrderedAndProject). The ordering
         key is the ROUNDED score when round_to is set — the same
         contract as the full-scan and DuckDB oracles."""
@@ -1443,8 +1472,8 @@ class IndexReader:
         return topk_deterministic(out, k, round_to)
 
     # conjunctive-seed gate: when the rarest required term's df is under
-    # this bound, its doc-id set is decoded driver-side (one pruned scan
-    # of THAT term only) and pushed into the other terms' decoders as a
+    # this bound, its doc-id set is decoded driver-side (read_postings of
+    # THAT term only) and pushed into the other terms' decoders as a
     # sorted-array membership filter — a `must=[hot-term]` query then
     # ships only the rarest term's candidate rows through Arrow and the
     # agg instead of the hot term's entire posting set. Above the bound
@@ -1457,7 +1486,9 @@ class IndexReader:
     # a wash — the vectorized decode of ~1M rows costs about what one
     # extra Spark job does (~0.3-0.4 s). The seed exists for the regime
     # where hot terms carry 10^7+ postings and decode+Arrow+agg grows
-    # linearly while the seed job stays one bounded scan.
+    # linearly while the seed job stays one bounded scan. The seed is now
+    # a driver-side read, not a job, so this bound is conservative; it
+    # was not re-measured.
     seed_min_prunable: int = 5_000_000
 
     def _seed_doc_ids(self, dfs: dict[str, int], total_postings: int | None = None):
@@ -1484,10 +1515,10 @@ class IndexReader:
         total = sum(dfs.values()) if total_postings is None else total_postings
         if total - dfs[rarest] < self.seed_min_prunable:
             return None
-        pdf = self._pruned_postings([rarest]).select("blob_ids").toPandas()
+        blobs = self.read_postings([rarest], ["blob_ids"])["blob_ids"]
         parts = [
             delta_decode(varint_decode(b)).astype(np.int64)
-            for b in pdf["blob_ids"].values
+            for b in blobs.to_pylist()
         ]
         if not parts:
             return None
@@ -1871,23 +1902,6 @@ class IndexReader:
         if round_to is not None:
             out = out.withColumn("score", F.round("score", round_to))
         return out
-
-    def lookup_term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """term -> (df, cf) via the same bucket-pruned dictionary scan as
-        lookup_terms; cf (collection frequency) feeds the LM Dirichlet
-        similarity's collection language model."""
-        if not terms:
-            return {}
-        d = self.dictionary().filter(
-            bucket_col(F.col("term"), self.stats["n_buckets"]).isin(
-                self._buckets(terms)
-            )
-            & F.col("term").isin(terms)
-        )
-        return {
-            r["term"]: (int(r["df"]), int(r["cf"]))
-            for r in d.select("term", "df", "cf").collect()
-        }
 
     def search_similarity(
         self,

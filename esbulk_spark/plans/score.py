@@ -74,6 +74,7 @@ def bm25_fullscan(
     dfs = {r["term"]: r["df"] for r in
            tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).collect()}
     if not dfs:
+        red.unpersist()
         return empty
     idf_map = F.create_map(
         *[x for t, d in sorted(dfs.items())

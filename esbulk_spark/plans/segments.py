@@ -96,9 +96,10 @@ class SegmentSetReader(IndexReader):
 
     Every IndexReader query surface (search/WAND, bool, phrase,
     expansions, aggs, count, get_doc, ...) works unchanged: the class
-    only overrides WHERE tables come from (`_table`: unions with shard
-    remap and a df-summed dictionary) and where statistics come from
-    (additive over the segments' stats.json files). Doc ids must be
+    only overrides WHERE tables come from (`_table` for Spark plans and
+    `read_terms` for driver-side reads: unions with shard remap and a
+    df-summed dictionary) and where statistics come from (additive over
+    the segments' stats.json files). Doc ids must be
     globally unique across segments — the same contract every merge
     path enforces."""
 
@@ -202,6 +203,34 @@ class SegmentSetReader(IndexReader):
         self._tables[name] = df
         return df
 
+    def read_terms(self, name: str, terms: list[str] | None = None,
+                   columns: list[str] | None = None):
+        """The driver-side twin of ``_table``: per-segment Arrow reads,
+        concatenated, with the same shard remap and bound inflation on
+        postings and per-term df/cf sums on the dictionary."""
+        import pyarrow as pa
+
+        if terms is not None:
+            terms = sorted(set(terms))
+        buckets = None if terms is None else self._buckets(terms)
+        parts = []
+        shard_off = 0
+        for io, st in zip(self.ios, self.seg_stats):
+            if not (name in _MultiIO._ANY and not io.exists(name)):
+                t = io.read_terms(name, buckets, terms, columns)
+                if name == "postings":
+                    t = _remap_postings(t, shard_off, self.bound_scale)
+                parts.append(t)
+            shard_off += int(st["n_shards"])
+        if not parts:
+            raise FileNotFoundError(f"no segment has table {name!r}")
+        t = pa.concat_tables(parts, promote_options="permissive")
+        if name == "dictionary":
+            sums = [c for c in ("df", "cf") if c in t.column_names]
+            g = t.group_by("term").aggregate([(c, "sum") for c in sums])
+            t = pa.table({"term": g["term"], **{c: g[f"{c}_sum"] for c in sums}})
+        return t
+
     def refresh(self) -> None:
         self._tables.clear()
         self._df_cache.clear()
@@ -214,3 +243,37 @@ class SegmentSetReader(IndexReader):
         self.stats = self._global_stats(self.seg_stats)
         for name in ("docs", "dictionary", "postings", "positions", "deletes"):
             self.io.refresh(self.spark, name)
+
+
+def _remap_postings(t, shard_off: int, scale: float):
+    """``_table("postings")``'s per-segment remap on an Arrow table: shard
+    ids shifted by the segment's offset, stored bounds multiplied by
+    ``scale`` (the same IEEE double multiply as the Spark ``transform``,
+    so both paths carry bit-identical bounds)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def put(t, name, col):
+        return t.set_column(t.schema.get_field_index(name), name, col)
+
+    names = t.column_names
+    if "shard" in names:
+        t = put(t, "shard", pc.add(t["shard"], pa.scalar(shard_off, pa.int32())))
+    if scale == 1.0:
+        return t
+    if "max_tfnorm" in names:
+        t = put(t, "max_tfnorm", pc.multiply(t["max_tfnorm"], scale))
+    if "block_max_tfnorm" in names:
+        # every chunk row carries its block list (never null), so the
+        # offsets carry over as they are
+        ty = t.schema.field("block_max_tfnorm").type
+        t = put(t, "block_max_tfnorm", pa.chunked_array(
+            [
+                pa.ListArray.from_arrays(
+                    c.offsets, pc.multiply(c.values, scale), type=ty
+                )
+                for c in t["block_max_tfnorm"].chunks
+            ],
+            ty,
+        ))
+    return t

@@ -15,6 +15,11 @@ committed is a backend concern:
   a real deployment asks for first: snapshot isolation, concurrent
   readers during rebuild, and time travel on the index tables.
 
+Besides the Spark ``read``, a backend serves one driver-side read,
+``read_terms``: the rows of a term-keyed table for a few terms, as an
+Arrow table and without a Spark job. It is how the reader fetches
+dictionary rows, small-query postings and tombstones (plans/reader.py).
+
 The engine talks ONLY to the interface; backends are chosen per index
 (``for_index_dir`` picks Iceberg when the location is a table-ident
 string like ``iceberg:catalog.db.myindex`` AND the jars are present).
@@ -27,6 +32,7 @@ table storage.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
@@ -65,6 +71,21 @@ class TableIO:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         raise NotImplementedError
 
+    def read_terms(
+        self,
+        name: str,
+        buckets: list[int] | None = None,
+        terms: list[str] | None = None,
+        columns: list[str] | None = None,
+    ):
+        """Driver-side read of table ``name`` as a ``pyarrow.Table``: the
+        rows whose ``term`` is in ``terms`` from the ``bucket``
+        partitions in ``buckets``. ``None`` lifts that restriction (the
+        unpartitioned, term-less ``deletes`` table is read whole).
+        ``columns`` defaults to every column but the ``bucket`` partition
+        key."""
+        raise NotImplementedError
+
     def exists(self, name: str) -> bool:
         raise NotImplementedError
 
@@ -79,9 +100,31 @@ class ParquetDirIO(TableIO):
 
     def __init__(self, root: str):
         self.root = root
+        # (name, bucket) -> the table's parquet files in that partition
+        # directory; bucket None = every file of the table
+        self._files: dict[tuple[str, int | None], list[str]] = {}
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+    def _list(self, name: str, bucket: int | None) -> list[str]:
+        key = (name, bucket)
+        files = self._files.get(key)
+        if files is None:
+            path = glob.escape(self._path(name))
+            pats = (
+                [os.path.join(path, f"bucket={bucket}", "*.parquet")]
+                if bucket is not None
+                else [os.path.join(path, "*.parquet"),
+                      os.path.join(path, "*", "*.parquet")]
+            )
+            files = sorted(f for p in pats for f in glob.glob(p))
+            self._files[key] = files
+        return files
+
+    def _forget(self, name: str) -> None:
+        for key in [k for k in self._files if k[0] == name]:
+            del self._files[key]
 
     def write(
         self,
@@ -118,14 +161,44 @@ class ParquetDirIO(TableIO):
         if os.path.exists(path):
             shutil.rmtree(path)
         os.rename(tmp, path)
+        self._forget(name)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self._path(name))
+
+    def read_terms(self, name, buckets=None, terms=None, columns=None):
+        """``pyarrow.parquet`` over the listed files of the wanted bucket
+        directories; the ``term in terms`` filter prunes the term-sorted
+        row groups by their min/max statistics."""
+        import pyarrow.parquet as pq
+
+        files = (
+            [f for b in buckets for f in self._list(name, b)]
+            if buckets is not None
+            else []
+        )
+        if not files:
+            # no such bucket directory: read the whole table, which also
+            # covers a table written without partitions (an empty index
+            # keeps `bucket` as a plain column in top-level files)
+            files = self._list(name, None)
+        if not files:
+            raise FileNotFoundError(f"no parquet files under {self._path(name)}")
+        t = pq.read_table(
+            files,
+            columns=columns,
+            filters=None if terms is None else [("term", "in", list(terms))],
+            partitioning=None,
+        )
+        if columns is None and "bucket" in t.column_names:
+            t = t.drop_columns(["bucket"])
+        return t
 
     def exists(self, name: str) -> bool:
         return os.path.exists(self._path(name))
 
     def refresh(self, spark: SparkSession, name: str) -> None:
+        self._forget(name)
         if self.exists(name):
             spark.catalog.refreshByPath(self._path(name))
 
@@ -167,6 +240,22 @@ class IcebergIO(TableIO):
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.table(self._ident(name))
+
+    def read_terms(self, name, buckets=None, terms=None, columns=None):
+        """The same pruned read as a Spark filter collected through
+        ``toArrow`` (one small job): Iceberg's file list lives in its
+        snapshot metadata, which only the catalog resolves."""
+        from pyspark.sql import SparkSession as _S
+        from pyspark.sql import functions as F
+
+        df = self.read(_S.getActiveSession(), name)
+        if buckets is not None:
+            df = df.filter(F.col("bucket").isin(list(buckets)))
+        if terms is not None:
+            df = df.filter(F.col("term").isin(list(terms)))
+        if columns is None:
+            columns = [c for c in df.columns if c != "bucket"]
+        return df.select(*columns).toArrow()
 
     def exists(self, name: str) -> bool:
         from pyspark.sql import SparkSession as _S

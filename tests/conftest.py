@@ -1,6 +1,9 @@
+import itertools
 import os
 import shutil
+from contextlib import contextmanager
 
+import numpy as np
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
@@ -41,3 +44,42 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``with count_jobs() as c: ...`` leaves ``c["jobs"]``, the number of
+    Spark jobs the block started (its own job group, read back from the
+    status tracker)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def counting():
+        gid = f"count-jobs-{next(_job_groups)}"
+        box: dict[str, int] = {}
+        sc.setJobGroup(gid, "count_jobs")
+        try:
+            yield box
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            box["jobs"] = len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return counting
+
+
+@pytest.fixture
+def chunk_rows():
+    """pandas postings rows -> comparable tuples sorted by (term, shard,
+    chunk), array cells as lists, over ``cols``."""
+
+    def rows(pdf, cols):
+        pdf = pdf[cols].sort_values(["term", "shard", "chunk"])
+        return [
+            tuple(v.tolist() if isinstance(v, np.ndarray) else v for v in row)
+            for row in pdf.itertuples(index=False)
+        ]
+
+    return rows

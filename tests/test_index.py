@@ -1814,3 +1814,32 @@ def test_constant_score_filter_context(reader):
     assert all(r["score"] == 2.5 for r in hits)
     ids = [r["doc_id"] for r in hits]
     assert ids == sorted(ids)  # _doc order
+
+
+def test_fullscan_no_match_releases_its_cache(spark):
+    """The oracle persists its reduced projection; a query no document
+    matches must unpersist it before returning the empty result."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, content string"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert bm25_fullscan(docs, "zzznotaterm").collect() == []
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_shuffle_width_falls_back_on_non_numeric_conf():
+    """A non-numeric spark.sql.shuffle.partitions (``auto``) must not fail
+    the build's exchange sizing; a numeric one is used as is."""
+    from types import SimpleNamespace
+
+    from esbulk_spark.plans.build import _shuffle_width
+
+    def stub(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: value),
+            sparkContext=SimpleNamespace(defaultParallelism=7),
+        )
+
+    assert _shuffle_width(stub("auto")) == 7
+    assert _shuffle_width(stub("24")) == 24

@@ -331,3 +331,72 @@ def test_overwrite_build_drops_stale_overlays(spark, tmp_path):
     # a re-append of the same delta now works (no id clash)
     res = append_docs(spark, idx, rest, merge=False)
     assert res["appended"] == rest.count()
+
+
+def test_segment_set_read_terms_matches_spark(spark, seg_dirs, chunk_rows):
+    """The driver-side read over the set carries the Spark union's rows
+    exactly: shard offsets, inflated bounds (bound_scale > 1 here) and
+    per-term df/cf sums."""
+    r = SegmentSetReader(spark, seg_dirs)
+    assert r.bound_scale != 1.0
+    terms = sorted(
+        x.term for x in r.dictionary().select("term").limit(40).collect()
+    ) + ["return", "zzznotaterm"]
+    got = r.read_postings(terms).to_pandas()
+    want = r._pruned_postings(terms).toPandas()
+    cols = list(got.columns)
+    assert set(cols) == set(want.columns) - {"bucket"}
+    assert len(got) and chunk_rows(got, cols) == chunk_rows(want, cols)
+    assert got["shard"].max() >= 4  # the third segment's offset applied
+    d = r.read_terms("dictionary", terms).to_pandas()
+    sd = r.dictionary().filter(F.col("term").isin(terms)).toPandas()
+    assert dict(zip(d.term, zip(d.df, d.cf))) == dict(zip(sd.term, zip(sd.df, sd.cf)))
+
+
+def test_segment_set_serving_runs_no_spark_job(spark, tmp_path, count_jobs):
+    """search_rows over main + an attached segment, with tombstones, runs
+    no Spark job; it serves the full-scan oracle's ranking (minus the
+    tombstoned doc, survivors' scores unchanged) and what the forced
+    WAND sweep and the distributed scorer serve."""
+    from esbulk_spark.operators.docids import assign_doc_ids_with_count
+    from esbulk_spark.plans.admin import append_docs, delete_by_ids, open_reader
+
+    corpus = synth_corpus(spark, 90, seed=51)
+    idx = str(tmp_path / "idx")
+    withid, _ = assign_doc_ids_with_count(
+        corpus.filter("crc32(path) % 2 = 0"), ("repo", "path", "commit"),
+        out_col="doc_id",
+    )
+    build_index(
+        spark, withid,
+        IndexConfig(index_dir=idx, id_col="doc_id", n_buckets=8, n_shards=2,
+                    chunk_cap=256),
+        input_sig="nojobs",
+    )
+    append_docs(spark, idx, corpus.filter("crc32(path) % 2 = 1"), merge=False)
+    qs = ("flushBuffer retry", "return error")
+
+    def rounded(rows):
+        return [(d, round(s, 6)) for d, s in rows]
+
+    rr = open_reader(spark, idx)
+    oracle = {
+        q: [(x.doc_id, round(x.score, 6)) for x in
+            bm25_fullscan(rr.docs(), q, text_col="content", k=11).collect()]
+        for q in qs
+    }
+    victim = oracle[qs[0]][0][0]
+    delete_by_ids(spark, idx, [victim])
+    rr = open_reader(spark, idx)
+    assert isinstance(rr, SegmentSetReader)
+    with count_jobs() as c:
+        fresh = {q: rr.search_rows(q) for q in qs}
+        cached = {q: rr.search_rows(q) for q in qs}
+    assert c["jobs"] == 0
+    assert fresh == cached
+    for q in qs:
+        assert rounded(fresh[q]) == [x for x in oracle[q] if x[0] != victim][:10]
+    rr.dense_max = 0  # driver-side WAND sweep
+    assert {q: rr.search_rows(q) for q in qs} == fresh
+    rr.driver_score_max = 0  # distributed WAND sweep
+    assert {q: rr.search_rows(q) for q in qs} == fresh
