@@ -235,28 +235,6 @@ def jaccard_pairs(
     return out
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, n_perm: int = 16, n: int = 3, seed: int = 42
-) -> DataFrame:
-    """(id, perm, minhash) — n_perm universal-hash minima over shingles."""
-    params = minhash_params(n_perm, seed)
-    sh = ngram_shingles(df, text_col, id_col, n)
-    x = F.pmod(F.col("sh"), F.lit(MINHASH_PRIME))
-    perms = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("perm"),
-                F.pmod(F.lit(a) * x + F.lit(b), F.lit(MINHASH_PRIME)).alias("h"),
-            )
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-    exploded = sh.select("id", F.explode(perms).alias("p")).select(
-        "id", F.col("p.perm").alias("perm"), F.col("p.h").alias("h")
-    )
-    return exploded.groupBy("id", "perm").agg(F.min("h").alias("minhash"))
-
-
 def minhash_band_keys(
     df: DataFrame,
     text_col: str,
@@ -596,24 +574,6 @@ def duplicate_spans(
 
 
 # ------------------------------------------------- incremental dedup
-
-
-def minhash_state_write(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    state_dir: str,
-    n_perm: int = 16,
-    band_size: int = 4,
-    n: int = 3,
-    seed: int = 42,
-) -> None:
-    """Append a batch's (id, band_key) rows to the dedup state table.
-    The state is band-key-sized (bands x docs rows), not corpus-sized —
-    the artifact an incremental 100 TB pipeline keeps between runs."""
-    minhash_band_keys(
-        df, text_col, id_col, n_perm, band_size, n, seed
-    ).write.mode("append").parquet(state_dir)
 
 
 def minhash_lsh_pairs_incremental(

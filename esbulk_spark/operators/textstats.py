@@ -99,11 +99,6 @@ SCRIPT_LANGS: tuple[tuple[str, str], ...] = (
 STOP_EN = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
-def _count_word(text_col, w: str):
-    # word-boundary occurrences, case-insensitive
-    return F.size(F.regexp_extract_all(F.lower(text_col), F.lit(rf"\b{w}\b"), 0))
-
-
 def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Two-stage language ID, pure Catalyst: (1) Unicode-SCRIPT check —
     if >= 10% of non-space chars are Han/Kana/Hangul/Cyrillic, that

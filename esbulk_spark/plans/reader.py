@@ -1,27 +1,36 @@
 """Index-backed query execution (SURVEY.md §3.3 query lifecycle).
 
 The reference's query path is its integration tests' `_search` call
-(/root/reference/run_test.go:300-320): analyze -> look up -> score ->
-top-k. Here that becomes a Python-side planner that builds the right
-DataFrame (SURVEY.md §4.1: a library function achieves the same plan a
-custom Catalyst rule would):
+(esbulk's run_test.go:300-320): analyze -> look up -> score -> top-k.
+Here that becomes a Python-side planner (SURVEY.md §4.1: a library
+function achieves the same plan a custom Catalyst rule would).
+IndexReader's query families are adapters over three shared pieces:
 
-  query text
-    -> analyze with the SAME analyzer as indexing (determinism contract)
-    -> dictionary lookup -> per-term df / idf: the query's terms hash to
-       bucket directories, and only those files are read, on the driver
-       through pyarrow with a `term in terms` filter that prunes the
-       term-sorted row groups (`read_terms`, no Spark job — a handful of
-       rows of METADATA, not data)
-    -> small queries (postings under driver_score_max): the chunk rows
-       come through the same driver read and are scored on the driver
-       with the block-max WAND kernel (plans/wand.py) — zero Spark jobs
-       per query
-    -> large queries and batches: a bucket- AND term-pruned Spark
-       postings scan -> groupBy(qid, shard) applyInPandas scorer with the
-       same kernel — shards are the parallelism unit, exactly like ES
-       shards
-    -> global top-k merge of the tiny per-shard winners.
+  * the read seam, ``read_terms``: dictionary, postings and tombstone
+    rows of the query's terms, read on the driver. The terms hash to
+    bucket directories and only those files are read, through pyarrow
+    with a ``term in terms`` filter that prunes the term-sorted row
+    groups — no Spark job. SegmentSetReader overrides only this and
+    ``_table``.
+  * the single-query top-k gate, ``_topk_candidates``: when the terms'
+    postings fit under ``driver_score_max`` their chunk rows come
+    through the seam and the block-max WAND kernel (plans/wand.py)
+    scores them on the driver, with zero Spark jobs; above it a bucket-
+    and term-pruned Spark scan feeds the same kernel per shard (shards
+    are the parallelism unit, exactly like ES shards). Either way the
+    <= n_shards * k per-shard winners merge on the driver. search,
+    search_rows, search_response, the expansion families (prefix,
+    fuzzy, wildcard, regexp, stemmed) and more_like_this all pass
+    through it; search_many is the batch plan, one job for all queries.
+  * the positional slot core for phrase, sloppy phrase, span_near,
+    span_first and phrase_prefix: one pruned positions scan
+    (``_positions``, the only has-positions guard), slots joined rarest
+    term first, one BM25 tail (``_score_phrase_cand``) and the shared
+    ``topk_deterministic`` cut.
+
+Families that need the full match set (bool, AND, aggs, count, explain,
+the other similarities) decode the pruned postings with
+``_decode_to_rows``.
 """
 
 from __future__ import annotations
@@ -34,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from esbulk_spark.functions.analyzer import analyze_query
+from esbulk_spark.functions.analyzer import analyze_query, tokenize_text
 from esbulk_spark.plans.build import STATS_FILE
 from esbulk_spark.plans.wand import RESULT_SCHEMA, idf as idf_fn, make_group_scorer
 from esbulk_spark.plans.score import topk_deterministic
@@ -407,12 +416,13 @@ class IndexReader:
         return out
 
     def _topk_candidates(
-        self, query: str, k: int, prune: bool
+        self, dfs: dict[str, int], k: int, prune: bool
     ) -> list[tuple[int, int, float]]:
-        """(shard, doc_id, score) per-shard top-k for one query, via the
-        driver fast path when the query's postings fit under
-        driver_score_max, else the distributed per-shard plan."""
-        dfs = self._dfs_cached(analyze_query(query))
+        """(shard, doc_id, score) per-shard top-k for one disjunction over
+        the resolved ``term -> df`` map — the single-query gate every
+        top-k family goes through: the driver fast path when the terms'
+        postings fit under driver_score_max, else the distributed
+        per-shard plan, collected (<= n_shards * k rows)."""
         if not dfs:
             return []
         if sum(dfs.values()) <= self.driver_score_max:
@@ -422,6 +432,21 @@ class IndexReader:
             (r.shard, r.doc_id, r.score)
             for r in per_shard.select("shard", "doc_id", "score").collect()
         ]
+
+    @staticmethod
+    def _merge_topk(
+        cand: list[tuple[int, int, float]], k: int, round_to: int | None
+    ) -> list[tuple[int, float]]:
+        """Global top-k (doc_id, score) of per-shard candidates, merged on
+        the driver: ordered by (published score desc, doc_id asc), the
+        score rounded first when round_to is set — topk_deterministic's
+        contract."""
+        if round_to is not None:
+            merged = [(d, round(sc, round_to)) for _, d, sc in cand]
+        else:
+            merged = [(d, sc) for _, d, sc in cand]
+        merged.sort(key=lambda t: (-t[1], t[0]))
+        return [(int(d), float(sc)) for d, sc in merged[:k]]
 
     def search_rows(
         self,
@@ -436,13 +461,11 @@ class IndexReader:
         dictionary and postings reads, driver scoring); larger ones run
         the distributed per-shard plan. The global merge is on the
         driver. search_response builds on the same candidates."""
-        cand = self._topk_candidates(query, k, prune)
-        if round_to is not None:
-            merged = [(d, round(sc, round_to)) for _, d, sc in cand]
-        else:
-            merged = [(d, sc) for _, d, sc in cand]
-        merged.sort(key=lambda t: (-t[1], t[0]))
-        return [(int(d), float(sc)) for d, sc in merged[:k]]
+        dfs = self._dfs_cached(analyze_query(query))
+        return self._merge_topk(self._topk_candidates(dfs, k, prune), k, round_to)
+
+    def _rows_df(self, rows: list[tuple[int, float]]) -> DataFrame:
+        return self.spark.createDataFrame(rows, "doc_id long, score double")
 
     def search(
         self,
@@ -454,26 +477,13 @@ class IndexReader:
         """Single-query top-k -> (doc_id, score) DataFrame (compose it
         into further Spark plans; for serving latency use search_rows).
 
-        Small queries (sum of term dfs under driver_score_max) score on
-        the driver from the driver-side postings read (search_rows);
-        only the result DataFrame is Spark's. Larger queries run the
-        distributed per-shard plan and skip search_many's window-rank
-        merge: the global top-k
-        is a plain orderBy+limit (TakeOrderedAndProject). The ordering
-        key is the ROUNDED score when round_to is set — the same
-        contract as the full-scan and DuckDB oracles."""
-        dfs = self._dfs_cached(analyze_query(query))
-        if not dfs:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        if sum(dfs.values()) <= self.driver_score_max:
-            top = self.search_rows(query, k=k, prune=prune, round_to=round_to)
-            return self.spark.createDataFrame(
-                top or [], "doc_id long, score double"
-            )
-        per_shard = self._per_shard_scores({"q": sorted(dfs)}, k, prune)
-        if per_shard is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return topk_deterministic(per_shard.select("doc_id", "score"), k, round_to)
+        The rows are search_rows' at every size: the driver gate scores
+        small queries on the driver and sends larger ones through the
+        distributed per-shard plan, then the <= n_shards * k candidates
+        merge on the driver and only the result DataFrame is Spark's.
+        The ordering key is the ROUNDED score when round_to is set — the
+        same contract as the full-scan and DuckDB oracles."""
+        return self._rows_df(self.search_rows(query, k, prune, round_to))
 
     def search_response(
         self,
@@ -535,22 +545,19 @@ class IndexReader:
             )
         t0 = _time.monotonic()
         n_shards_total = int(self.stats.get("n_shards", 0))
-        cand = self._topk_candidates(query, k, prune)
+        cand = self._topk_candidates(
+            self._dfs_cached(analyze_query(query)), k, prune
+        )
         shards_seen = {sh for sh, _, _ in cand}
-        if round_to is not None:
-            merged = [(round(float(sc), round_to), d) for _, d, sc in cand]
-        else:
-            merged = [(float(sc), d) for _, d, sc in cand]
-        merged.sort(key=lambda t: (-t[0], t[1]))
         index_name = os.path.basename(os.path.normpath(self.index_dir))
         hits = [
             {
                 "_index": index_name,
                 "_type": "_doc",
                 "_id": doc_id,
-                "_score": float(score),
+                "_score": score,
             }
-            for score, doc_id in merged[:k]
+            for doc_id, score in self._merge_topk(cand, k, round_to)
         ]
         if es_version >= 8:  # ES8 removed mapping types from responses
             for h in hits:
@@ -799,16 +806,12 @@ class IndexReader:
     def _search_expanded(
         self, dfs: dict[str, int], k: int, round_to: int | None
     ) -> DataFrame:
-        """Score an expansion result as a multi-term disjunction over
-        the same pruned postings scan + per-shard scorer every
-        multi-term query uses; postings of non-matching terms are never
-        read."""
-        if not dfs:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        per_shard = self._per_shard_scores({"q": sorted(dfs)}, k, prune=True)
-        if per_shard is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return topk_deterministic(per_shard.select("doc_id", "score"), k, round_to)
+        """Score an expansion result as a multi-term disjunction through
+        the single-query gate every top-k family uses; postings of
+        non-matching terms are never read."""
+        return self._rows_df(
+            self._merge_topk(self._topk_candidates(dfs, k, True), k, round_to)
+        )
 
     def search_prefix(
         self,
@@ -869,8 +872,6 @@ class IndexReader:
         disjunction with each term's own idf — ES's scoring_boolean
         rewrite of synonym expansion. The synonym map is a driver-side
         dict (ES: index-settings resource); expansion adds zero jobs."""
-        from esbulk_spark.functions.analyzer import tokenize_text
-
         expanded: list[str] = []
         for t in analyze_query(query):
             for cand in (t, *(x for s in synonyms.get(t, ())
@@ -881,69 +882,106 @@ class IndexReader:
             return self.spark.createDataFrame([], "doc_id long, score double")
         return self.search(" ".join(expanded), k=k, round_to=round_to)
 
+    # ---- positional families: one positions scan, one slot core ----
+
+    def _positions(self, terms: list[str], family: str) -> DataFrame:
+        """The bucket+term-pruned positions scan of ``terms`` — every
+        positional family reads positions through here, and only here
+        checks that the index has them."""
+        if not self.has_positions():
+            raise ValueError(
+                f"{family} needs a positions table: this index was built "
+                "without store_positions (rebuild with "
+                "IndexConfig(store_positions=True) / `cli index "
+                "--store-positions`)"
+            )
+        uniq = sorted(set(terms))
+        return self._table("positions").filter(
+            F.col("bucket").isin(self._buckets(uniq)) & F.col("term").isin(uniq)
+        )
+
+    def _all_dfs(self, terms: list[str]) -> dict[str, int] | None:
+        """term -> df for every distinct slot term, or None when one is
+        absent from the corpus (an absent slot term matches nothing)."""
+        dfs = self._dfs_cached(sorted(set(terms)))
+        return dfs if len(dfs) == len(set(terms)) else None
+
+    def _idf_sum(self, terms: list[str], dfs: dict[str, int]) -> float:
+        return float(sum(idf_fn(dfs[t], self.n_docs) for t in terms))
+
+    def _no_match(self, freq_col: str) -> DataFrame:
+        return self.spark.createDataFrame(
+            [], f"doc_id long, {freq_col} int, score double"
+        )
+
+    @staticmethod
+    def _join_slots(
+        pruned: DataFrame, terms: list[str], dfs: dict[str, int],
+        last: DataFrame | None = None,
+    ) -> DataFrame:
+        """(doc_id, p0..): slot i's position list as column p{i}, slots
+        inner-joined on doc_id RAREST TERM FIRST (phrase_join_order), so
+        the chain's intermediate cardinality is bounded by the rarest
+        term's posting set and docs missing any slot drop out. ``last``
+        is an extra, already-shaped slot joined at the end. Join order
+        is invisible to the slot math, which addresses slots by index."""
+        base = None
+        for i in phrase_join_order(terms, dfs):
+            p_i = pruned.filter(F.col("term") == terms[i]).select(
+                "doc_id", F.col("positions").alias(f"p{i}")
+            )
+            base = p_i if base is None else base.join(p_i, "doc_id")
+        if last is not None:
+            base = last if base is None else base.join(last, "doc_id")
+        return base
+
+    @staticmethod
+    def _phrase_freq(n_slots: int):
+        """Exact-phrase frequency of slots p0..p{n-1}, pure Catalyst:
+        S_1 = p0, S_{i+1} = intersect(S_i + 1, p_i); |S_n| is the number
+        of phrase occurrences."""
+        s = F.col("p0")
+        for i in range(1, n_slots):
+            s = F.array_intersect(F.transform(s, lambda x: x + 1), F.col(f"p{i}"))
+        return F.size(s)
+
+    def _score_phrase_cand(
+        self, cand: DataFrame, sum_idf: float, freq_col: str = "phrase_freq"
+    ) -> DataFrame:
+        """BM25 over a (doc_id, freq) candidate set with tf = freq and
+        idf = ``sum_idf`` (the slots' summed idfs) — the shared scoring
+        tail of every positional family (Lucene PhraseQuery scoring,
+        public). Rows with freq 0 are not matches."""
+        st = self.stats
+        k1, b, avgdl = st["k1"], st["b"], st["avgdl"]
+        tf = F.col(freq_col).cast("double")
+        tfn = (tf * (k1 + 1.0)) / (
+            tf + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
+        )
+        # _live: soft-deleted docs never surface as phrase matches
+        return self._live(cand.filter(F.col(freq_col) > 0)).join(
+            self.norms().select("doc_id", "dl"), "doc_id"
+        ).select("doc_id", freq_col, (F.lit(sum_idf) * tfn).alias("score"))
+
     def search_phrase(
-        self, query: str, k: int = 10, round_to: int | None = None,
-        prune: bool = False,
+        self, query: str, k: int = 10, round_to: int | None = None
     ) -> DataFrame:
         """Phrase (match_phrase) top-k over the opt-in positions table
         (cfg.store_positions): docs whose ANALYZED token stream contains
         the query's analyzed tokens consecutively.
+        -> (doc_id, phrase_freq, score).
 
-        Adjacency is pure Catalyst — iterated array_intersect over
-        shifted position lists: S_1 = P_1, S_{i+1} = intersect(S_i + 1,
-        P_{i+1}); |S_last| IS the phrase frequency. The positions scan
-        is bucket+term pruned exactly like postings; slot tables join
-        on doc_id (docs missing any phrase term drop out of the inner
-        join — at 10^12 docs the join keys are the rarest-term's
-        posting set, not the corpus). Scoring follows Lucene's
-        PhraseQuery (public): BM25 with tf = phrase_freq and
-        idf = sum of per-slot idfs. -> (doc_id, phrase_freq, score).
-
-        The slot join chain runs RAREST TERM FIRST (ascending df): the
-        intermediate join cardinality is then bounded by the rarest
-        term's posting count instead of whatever term happens to open
-        the phrase — a phrase starting with a hot token ("data ...")
-        no longer drives the join with the biggest position lists.
-        Join order is invisible to the adjacency math, which addresses
-        slots by index (p0..p{n-1}) regardless of join sequence.
-
-        ``prune=True`` (opt-in, NOT the default) adds block-max-style
-        CANDIDATE pruning before any position list is read
-        (_phrase_topk_pruned): phrase_freq <= min slot tf, so a
-        postings-only decode yields an exact per-doc score upper bound;
-        only the top candidates by bound decode positions, with an
-        adaptive widening loop that certifies exactness against the
-        best unread bound (the WAND argument applied to phrases). It is
-        exact (pytest pins pruned == unpruned) but MEASURED SLOWER at
-        every tested scale (sf0.1, 200k docs: hot-first phrase 0.56 s
-        unpruned vs 10.1 s pruned; normal phrase 0.27 s vs 4.4 s —
-        BENCH.md 'phrase pruning' table): the bound phase costs as much
-        as the full positional join, per-doc restriction skips no I/O
-        because position blobs are per (term, bucket) chunk rather than
-        per doc-range, and the min-tf bound is a weak predictor of
-        phrase presence for hot pairs, so the widening loop pays
-        multi-job round-trips. The default single-job plan is the one
-        that survives scale-up: it reads only the slots' position
-        chunks, driven rarest-first. Candidate pruning would pay only
-        with doc-range-partitioned position blobs (skippable I/O) on a
-        corpus where a slot's position volume dwarfs its postings."""
-        if prune:
-            from esbulk_spark.functions.analyzer import tokenize_text
-
-            if len(tokenize_text(query)) >= 2:
-                out = self._phrase_topk_pruned(query, k, round_to)
-                if out is not None:
-                    if round_to is not None:
-                        out = out.withColumn(
-                            "score", F.round("score", round_to)
-                        )
-                    return out.orderBy(
-                        F.desc("score"), F.asc("doc_id")
-                    ).limit(k)
-        out = self._phrase_scores(query)
-        if round_to is not None:
-            out = out.withColumn("score", F.round("score", round_to))
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        One Spark plan: the bucket+term-pruned positions scan, the slot
+        tables joined on doc_id rarest term first (at 10^12 docs the
+        join keys are the rarest term's posting set, not the corpus),
+        and the shifted array_intersect chain whose size IS the phrase
+        frequency. Scoring follows Lucene's PhraseQuery (public): BM25
+        with tf = phrase_freq and idf = sum of per-slot idfs. Pruning
+        candidates by a postings-only bound before reading positions was
+        measured slower at every tested scale, because position blobs
+        are per (term, bucket) chunk and a doc-id filter skips no I/O
+        (BENCH.md 'Phrase candidate pruning')."""
+        return topk_deterministic(self._phrase_scores(query), k, round_to)
 
     def search_phrase_sloppy(
         self, query: str, slop: int, k: int = 10, round_to: int | None = None
@@ -969,40 +1007,20 @@ class IndexReader:
         shuffles; per-step state is bounded by |positions(slot_0)| x
         |positions(slot_i)| per doc. Scoring = BM25 with
         tf = sloppy_freq, idf = sum of slot idfs (as search_phrase)."""
-        from esbulk_spark.functions.analyzer import tokenize_text
-
         terms = tokenize_text(query)
         if terms and (len(terms) == 1 or slop <= 0):
             out = self.search_phrase(query, k=k, round_to=round_to)
             return out.withColumnRenamed("phrase_freq", "sloppy_freq")
-        out = self._sloppy_scores(query, slop)
-        if round_to is not None:
-            out = out.withColumn("score", F.round("score", round_to))
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return topk_deterministic(self._sloppy_scores(query, slop), k, round_to)
 
     def _sloppy_scores(self, query: str, slop: int) -> DataFrame:
         """search_phrase_sloppy's core: unrounded, un-limited
         (doc_id, sloppy_freq, score) for every sloppy-phrase match."""
-        from esbulk_spark.functions.analyzer import tokenize_text
-
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, sloppy_freq int, score double"
-        )
         terms = tokenize_text(query)
-        if not terms:
-            return empty
-        uniq = sorted(set(terms))
-        dfs = self._dfs_cached(uniq)
-        if any(t not in dfs for t in uniq):
-            return empty
-        if not self.has_positions():
-            raise ValueError(
-                "sloppy phrase search needs a positions table (rebuild "
-                "with IndexConfig(store_positions=True))"
-            )
-        pruned = self._table("positions").filter(
-            F.col("bucket").isin(self._buckets(uniq)) & F.col("term").isin(uniq)
-        )
+        dfs = self._all_dfs(terms) if terms else None
+        if dfs is None:
+            return self._no_match("sloppy_freq")
+        pruned = self._positions(terms, "sloppy phrase search")
 
         def slot(i: int, name: str) -> DataFrame:
             return pruned.filter(F.col("term") == terms[i]).select(
@@ -1028,7 +1046,9 @@ class IndexReader:
         cand = base.groupBy("doc_id").agg(
             F.count_distinct("q0").cast("int").alias("sloppy_freq")
         )
-        return self._score_phrase_cand(cand, terms, dfs, freq_col="sloppy_freq")
+        return self._score_phrase_cand(
+            cand, self._idf_sum(terms, dfs), "sloppy_freq"
+        )
 
     def search_span_near(
         self,
@@ -1055,36 +1075,19 @@ class IndexReader:
         1/(1 + matchLength) weighting, and repeated clause terms may
         align to the same occurrence.
 
-        Plan: per-clause positions are bucket+term-pruned scans joined
-        on doc_id rarest-first (only docs containing ALL clauses
-        survive, the same candidate shape as search_phrase); the window
-        test runs JVM-side as nested array HOFs — no Python, no
-        explode. Scoring = BM25 with tf = span_freq, idf = sum of
-        clause idfs (the shared phrase tail)."""
+        Plan: the shared slot core — per-clause positions joined on
+        doc_id rarest-first (only docs containing ALL clauses survive,
+        the same candidate shape as search_phrase); the window test
+        runs JVM-side as nested array HOFs — no Python, no explode.
+        Scoring = BM25 with tf = span_freq, idf = sum of clause idfs
+        (the shared phrase tail)."""
         terms = [t for q in terms for t in analyze_query(q)]
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, span_freq int, score double"
-        )
         if len(terms) < 2:
             raise ValueError("span_near needs >= 2 clause terms")
-        uniq = sorted(set(terms))
-        dfs = self._dfs_cached(uniq)
-        if any(t not in dfs for t in uniq):
-            return empty
-        if not self.has_positions():
-            raise ValueError(
-                "span_near needs a positions table (rebuild with "
-                "IndexConfig(store_positions=True))"
-            )
-        pruned = self._table("positions").filter(
-            F.col("bucket").isin(self._buckets(uniq)) & F.col("term").isin(uniq)
-        )
-        base = None
-        for i in phrase_join_order(terms, dfs):
-            p_i = pruned.filter(F.col("term") == terms[i]).select(
-                "doc_id", F.col("positions").alias(f"p{i}")
-            )
-            base = p_i if base is None else base.join(p_i, "doc_id")
+        dfs = self._all_dfs(terms)
+        if dfs is None:
+            return self._no_match("span_freq")
+        base = self._join_slots(self._positions(terms, "span_near"), terms, dfs)
         n = len(terms)
         w = n + slop  # max window width (max - min + 1)
         arrs = [F.col(f"p{i}") for i in range(n)]
@@ -1114,15 +1117,9 @@ class IndexReader:
                 return cond
 
             freq = F.size(F.filter(union, covers))
-        cand = (
-            base.withColumn("span_freq", freq)
-            .filter(F.col("span_freq") > 0)
-            .select("doc_id", "span_freq")
-        )
-        out = self._score_phrase_cand(cand, terms, dfs, freq_col="span_freq")
-        if round_to is not None:
-            out = out.withColumn("score", F.round("score", round_to))
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        cand = base.select("doc_id", freq.alias("span_freq"))
+        out = self._score_phrase_cand(cand, self._idf_sum(terms, dfs), "span_freq")
+        return topk_deterministic(out, k, round_to)
 
     def search_span_first(
         self, term: str, end: int, k: int = 10, round_to: int | None = None
@@ -1135,145 +1132,17 @@ class IndexReader:
         toks = analyze_query(term)
         if len(toks) != 1:
             raise ValueError(f"span_first takes one clause term, got {toks!r}")
-        t = toks[0]
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, span_freq int, score double"
+        dfs = self._all_dfs(toks)
+        if dfs is None:
+            return self._no_match("span_freq")
+        cand = self._positions(toks, "span_first").select(
+            "doc_id",
+            F.size(
+                F.filter(F.col("positions"), lambda p: p + 1 <= F.lit(end))
+            ).alias("span_freq"),
         )
-        dfs = self._dfs_cached([t])
-        if t not in dfs:
-            return empty
-        if not self.has_positions():
-            raise ValueError(
-                "span_first needs a positions table (rebuild with "
-                "IndexConfig(store_positions=True))"
-            )
-        cand = (
-            self._table("positions")
-            .filter(
-                F.col("bucket").isin(self._buckets([t])) & (F.col("term") == t)
-            )
-            .select(
-                "doc_id",
-                F.size(
-                    F.filter(F.col("positions"), lambda p: p + 1 <= F.lit(end))
-                ).alias("span_freq"),
-            )
-            .filter(F.col("span_freq") > 0)
-        )
-        out = self._score_phrase_cand(cand, [t], dfs, freq_col="span_freq")
-        if round_to is not None:
-            out = out.withColumn("score", F.round("score", round_to))
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def _score_phrase_cand(
-        self, cand: DataFrame, terms: list[str], dfs: dict[str, int],
-        freq_col: str = "phrase_freq",
-    ) -> DataFrame:
-        """BM25 over a (doc_id, freq) candidate set with idf = sum of
-        per-slot idfs — the shared scoring tail of the exact and sloppy
-        phrase paths (Lucene PhraseQuery scoring, public)."""
-        from esbulk_spark.plans.wand import idf as idf_fn
-
-        sum_idf = float(sum(idf_fn(dfs[t], self.n_docs) for t in terms))
-        st = self.stats
-        k1, b, avgdl = st["k1"], st["b"], st["avgdl"]
-        tf = F.col(freq_col).cast("double")
-        tfn = (tf * (k1 + 1.0)) / (
-            tf + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-        )
-        # _live: soft-deleted docs never surface as phrase matches
-        return self._live(cand).join(
-            self.norms().select("doc_id", "dl"), "doc_id"
-        ).select("doc_id", freq_col, (F.lit(sum_idf) * tfn).alias("score"))
-
-    def _phrase_topk_pruned(
-        self, query: str, k: int, round_to: int | None = None
-    ) -> DataFrame | None:
-        """Exact two-phase phrase top-k (block-max pruning for phrases).
-
-        Phase 1 decodes only the POSTINGS of the phrase terms (rarest-
-        term seed prune applies) and computes, per doc containing all
-        terms, the exact score upper bound sum_idf * bm25_tfn(min slot
-        tf, dl) — valid because a phrase can occur at most as often as
-        its rarest slot occurs (phrase_freq <= min_i tf_i). Phase 2
-        evaluates the real position-intersection ONLY for the top-M
-        candidates by bound (the id IN-list pushes into the positions
-        scan), then certifies: if the k-th true score strictly beats the
-        best unevaluated bound (by a 10^-round_to margin when scores
-        are published rounded — rounding is monotone, so a gap wider
-        than one grid step cannot invert), the result equals the full
-        evaluation; otherwise M doubles. Worst case degenerates to
-        evaluating every candidate. MEASURED SLOWER than the single-job
-        unpruned plan at every tested scale on this index layout — see
-        search_phrase's docstring and BENCH.md 'Phrase candidate
-        pruning' for the numbers and the structural reasons (per-(term,
-        bucket) blob granularity means candidate ids skip no I/O).
-
-        Returns the top-k (doc_id, phrase_freq, score) local DataFrame,
-        or None to tell the caller to use the unpruned plan (term
-        missing / no positions handled there for unified errors)."""
-        from esbulk_spark.functions.analyzer import tokenize_text
-        from esbulk_spark.plans.wand import idf as idf_fn
-
-        terms = tokenize_text(query)
-        uniq = sorted(set(terms))
-        dfs = self._dfs_cached(uniq)
-        if any(t not in dfs for t in uniq) or not self.has_positions():
-            return None  # unpruned path owns the empty/raise contract
-        sum_idf = float(sum(idf_fn(dfs[t], self.n_docs) for t in terms))
-        st = self.stats
-        k1, b, avgdl = st["k1"], st["b"], st["avgdl"]
-        seed = self._seed_doc_ids(dfs) if len(uniq) >= 2 else None
-        rows = self._decode_to_rows(uniq, doc_filter=seed)
-        mtf = F.min("tf").cast("double")
-        tfn = (F.col("mtf") * (k1 + 1.0)) / (
-            F.col("mtf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-        )
-        ub = (
-            rows.groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("nt"),
-                mtf.alias("mtf"),
-                F.min("dl").cast("double").alias("dl"),
-            )
-            .filter(F.col("nt") == len(uniq))
-            .select("doc_id", (F.lit(sum_idf) * tfn).alias("ub"))
-            .orderBy(F.desc("ub"), F.asc("doc_id"))
-        )
-        margin = (10.0 ** -round_to) if round_to is not None else 0.0
-        ub = ub.persist()
-        try:
-            m = max(4 * k, 64)
-            while True:
-                cand = ub.limit(m + 1).collect()
-                ids = [int(r["doc_id"]) for r in cand[:m]]
-                got = self._phrase_scores(query, doc_ids=ids).collect()
-                got.sort(key=lambda r: (-r["score"], r["doc_id"]))
-                exhausted = len(cand) <= m
-                if exhausted:
-                    break
-                theta = (
-                    float(got[k - 1]["score"])
-                    if len(got) >= k
-                    else float("-inf")
-                )
-                if theta > float(cand[m]["ub"]) + margin:
-                    break
-                m *= 2
-        finally:
-            ub.unpersist()
-        out = got[:k]
-        if not out:
-            return self.spark.createDataFrame(
-                [], "doc_id long, phrase_freq int, score double"
-            )
-        return self.spark.createDataFrame(
-            [
-                (int(r["doc_id"]), int(r["phrase_freq"]), float(r["score"]))
-                for r in out
-            ],
-            "doc_id long, phrase_freq int, score double",
-        )
+        out = self._score_phrase_cand(cand, self._idf_sum(toks, dfs), "span_freq")
+        return topk_deterministic(out, k, round_to)
 
     def _phrase_scores(self, query: str, doc_ids: list[int] | None = None) -> DataFrame:
         """search_phrase's core: unrounded, un-limited (doc_id,
@@ -1281,50 +1150,21 @@ class IndexReader:
         restricted to ``doc_ids`` (a small candidate set, e.g. a rescore
         window: the id IN-list pushes into every slot's positions scan,
         so only the candidates' position lists are ever joined)."""
-        from esbulk_spark.functions.analyzer import tokenize_text
-
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, phrase_freq int, score double"
-        )
         terms = tokenize_text(query)  # ORDERED, duplicates kept
-        if not terms:
-            return empty
-        uniq = sorted(set(terms))
-        dfs = self._dfs_cached(uniq)
-        if any(t not in dfs for t in uniq):
-            return empty  # a term absent from the corpus kills the phrase
-        if not self.has_positions():
-            raise ValueError(
-                "phrase search needs a positions table: this index was "
-                "built without store_positions (rebuild with "
-                "IndexConfig(store_positions=True) / `cli index "
-                "--store-positions`)"
-            )
-        pruned = self._table("positions").filter(
-            F.col("bucket").isin(self._buckets(uniq)) & F.col("term").isin(uniq)
-        )
+        # a term absent from the corpus kills the phrase
+        dfs = self._all_dfs(terms) if terms else None
+        if dfs is None:
+            return self._no_match("phrase_freq")
+        pruned = self._positions(terms, "phrase search")
         if doc_ids is not None:
             ids = [int(i) for i in doc_ids]
             if not ids:
-                return empty
+                return self._no_match("phrase_freq")
             pruned = pruned.filter(F.col("doc_id").isin(ids))
-        base = None
-        for i in phrase_join_order(terms, dfs):
-            p_i = pruned.filter(F.col("term") == terms[i]).select(
-                "doc_id", F.col("positions").alias(f"p{i}")
-            )
-            base = p_i if base is None else base.join(p_i, "doc_id")
-        s = F.col("p0")
-        for i in range(1, len(terms)):
-            s = F.array_intersect(
-                F.transform(s, lambda x: x + 1), F.col(f"p{i}")
-            )
-        cand = (
-            base.withColumn("phrase_freq", F.size(s))
-            .filter(F.col("phrase_freq") > 0)
-            .select("doc_id", "phrase_freq")
+        cand = self._join_slots(pruned, terms, dfs).select(
+            "doc_id", self._phrase_freq(len(terms)).alias("phrase_freq")
         )
-        return self._score_phrase_cand(cand, terms, dfs)
+        return self._score_phrase_cand(cand, self._idf_sum(terms, dfs))
 
     def rescore_phrase(
         self,
@@ -1481,14 +1321,12 @@ class IndexReader:
     # pruned and shard-parallel), so this is a fast path, not a ceiling.
     seed_decode_max: int = 2_000_000
     # ...and only when the PRUNABLE volume (other terms' postings) is
-    # large enough to repay the seed's extra scan job: measured at 200k
-    # and 500k docs (~0.4-1M prunable postings), seeded and unseeded are
-    # a wash — the vectorized decode of ~1M rows costs about what one
-    # extra Spark job does (~0.3-0.4 s). The seed exists for the regime
-    # where hot terms carry 10^7+ postings and decode+Arrow+agg grows
-    # linearly while the seed job stays one bounded scan. The seed is now
-    # a driver-side read, not a job, so this bound is conservative; it
-    # was not re-measured.
+    # large enough to repay the seed's own cost: its driver-side decode
+    # plus a broadcast into every decoder. The bound dates from when the
+    # seed was an extra Spark scan job (~0.3-0.4 s): at 200k and 500k
+    # docs (~0.4-1M prunable postings) seeded and unseeded were then a
+    # wash. The seed is now a driver-side read, so the bound is
+    # conservative; it was not re-measured.
     seed_min_prunable: int = 5_000_000
 
     def _seed_doc_ids(self, dfs: dict[str, int], total_postings: int | None = None):
@@ -1511,7 +1349,7 @@ class IndexReader:
         if 2 * dfs[rarest] > self.n_docs:
             return None
         # volume guard: seeding must have enough postings to prune to
-        # repay its extra scan job (see seed_min_prunable above)
+        # repay its own decode (see seed_min_prunable above)
         total = sum(dfs.values()) if total_postings is None else total_postings
         if total - dfs[rarest] < self.seed_min_prunable:
             return None
@@ -1536,39 +1374,21 @@ class IndexReader:
         matched as a PREFIX. The last slot's position list is the union
         of the expanded terms' positions (positions are disjoint across
         terms within a doc, so the union is a sorted merge); body slots
-        run through the same rarest-first adjacency chain as
-        search_phrase. Scoring: BM25 with tf = phrase_freq and idf =
-        sum of body-slot idfs + idf of the expansion set (its summed
-        dfs, clamped to n_docs — a deterministic dictionary-metadata
-        bound both the engine and the DuckDB oracle compute
-        identically). -> (doc_id, phrase_freq, score)."""
-        from esbulk_spark.functions.analyzer import tokenize_text
-        from esbulk_spark.plans.wand import idf as idf_fn
-
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, phrase_freq int, score double"
-        )
+        run through the same rarest-first slot core as search_phrase.
+        Scoring: BM25 with tf = phrase_freq and idf = sum of body-slot
+        idfs + idf of the expansion set (its summed dfs, clamped to
+        n_docs — a deterministic dictionary-metadata bound both the
+        engine and the DuckDB oracle compute identically).
+        -> (doc_id, phrase_freq, score)."""
         terms = tokenize_text(query)
         if not terms:
-            return empty
+            return self._no_match("phrase_freq")
         *body, last = terms
         exp = self.expand_prefix(last, max_expansions)
-        if not exp:
-            return empty
-        uniq_body = sorted(set(body))
-        dfs = self._dfs_cached(uniq_body)
-        if any(t not in dfs for t in uniq_body):
-            return empty
-        if not self.has_positions():
-            raise ValueError(
-                "phrase-prefix search needs a positions table: this "
-                "index was built without store_positions"
-            )
-        all_terms = sorted(set(body) | set(exp))
-        pruned = self._table("positions").filter(
-            F.col("bucket").isin(self._buckets(all_terms))
-            & F.col("term").isin(all_terms)
-        )
+        dfs = self._all_dfs(body)
+        if not exp or dfs is None:
+            return self._no_match("phrase_freq")
+        pruned = self._positions(body + sorted(exp), "phrase-prefix search")
         n_slots = len(body) + 1
         # last slot: per-doc union of the expansions' position lists
         p_last = (
@@ -1580,42 +1400,13 @@ class IndexReader:
                 )
             )
         )
-        base = None
-        for i in (phrase_join_order(body, dfs) if body else []):
-            p_i = pruned.filter(F.col("term") == body[i]).select(
-                "doc_id", F.col("positions").alias(f"p{i}")
-            )
-            base = p_i if base is None else base.join(p_i, "doc_id")
-        base = p_last if base is None else base.join(p_last, "doc_id")
-        s = F.col("p0")
-        for i in range(1, n_slots):
-            s = F.array_intersect(
-                F.transform(s, lambda x: x + 1), F.col(f"p{i}")
-            )
-        cand = (
-            base.withColumn("phrase_freq", F.size(s))
-            .filter(F.col("phrase_freq") > 0)
-            .select("doc_id", "phrase_freq")
+        cand = self._join_slots(pruned, body, dfs, last=p_last).select(
+            "doc_id", self._phrase_freq(n_slots).alias("phrase_freq")
         )
         df_last = min(sum(exp.values()), self.n_docs)
-        sum_idf = float(
-            sum(idf_fn(dfs[t], self.n_docs) for t in body)
-            + idf_fn(df_last, self.n_docs)
-        )
-        st = self.stats
-        k1, b, avgdl = st["k1"], st["b"], st["avgdl"]
-        tf = F.col("phrase_freq").cast("double")
-        tfn = (tf * (k1 + 1.0)) / (
-            tf + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-        )
-        out = self._live(cand).join(
-            self.norms().select("doc_id", "dl"), "doc_id"
-        ).select(
-            "doc_id", "phrase_freq", (F.lit(sum_idf) * tfn).alias("score")
-        )
-        if round_to is not None:
-            out = out.withColumn("score", F.round("score", round_to))
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        # body idfs first, then the expansion's: the oracle's summation order
+        sum_idf = self._idf_sum(body, dfs) + float(idf_fn(df_last, self.n_docs))
+        return topk_deterministic(self._score_phrase_cand(cand, sum_idf), k, round_to)
 
     def search_and(self, query: str, k: int = 10) -> DataFrame:
         """Conjunctive (AND) search (SURVEY.md B10): only docs containing
@@ -1625,7 +1416,7 @@ class IndexReader:
         terms decode-and-drop everything outside the rarest term's
         postings before any row crosses to the aggregation."""
         terms = analyze_query(query)
-        dfs = self.lookup_terms(terms)
+        dfs = self._dfs_cached(terms)
         if not terms or len(dfs) < len(terms):
             return self.spark.createDataFrame([], "doc_id long, score double")
         seed = self._seed_doc_ids(dfs) if len(dfs) >= 2 else None
@@ -1779,7 +1570,7 @@ class IndexReader:
         import numpy as np
         from esbulk_spark.functions.codec import varint_decode, delta_decode
 
-        dfs = self.lookup_terms(terms)
+        dfs = self._dfs_cached(terms)
         idfs = {t: float(idf_fn(d, self.n_docs)) for t, d in dfs.items()}
         k1, b, avgdl = self.stats["k1"], self.stats["b"], self.stats["avgdl"]
         bflt = (
@@ -1846,8 +1637,6 @@ class IndexReader:
         the summed score and whether the doc matches at all. Reads only
         the pruned postings of the query's terms (the same decode path
         the intersection search uses)."""
-        from esbulk_spark.plans.wand import idf as idf_fn
-
         terms = analyze_query(query)
         dfs = self._dfs_cached(terms)
         details = []
@@ -2274,11 +2063,8 @@ class IndexReader:
         from functools import reduce as _reduce
 
         u = _reduce(lambda a, b: a.unionByName(b), per)
-        return (
-            u.groupBy("doc_id")
-            .agg(F.max("s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return topk_deterministic(
+            u.groupBy("doc_id").agg(F.max("s").alias("score")), k, None
         )
 
     def rank_eval(
@@ -2520,8 +2306,6 @@ class IndexReader:
         the same pruned-postings plan every multi-term query uses."""
         import math
 
-        from esbulk_spark.functions.analyzer import tokenize_text
-
         empty = self.spark.createDataFrame([], "doc_id long, score double")
         doc = self.get_doc(doc_id)
         if not doc.get("found"):
@@ -2548,23 +2332,20 @@ class IndexReader:
         selected = sorted(cand, key=lambda st: (-st[0], st[1]))[:max_query_terms]
         if not selected:
             return empty
-        per_shard = self._per_shard_scores(
-            {"q": sorted(t for _, t in selected)}, k + 1, prune=True
+        # k + 1 per shard: dropping the seed still leaves every shard's
+        # top k of the other docs
+        cand = self._topk_candidates(
+            {t: dfs[t] for _, t in selected}, k + 1, prune=True
         )
-        if per_shard is None:
-            return empty
-        out = per_shard.select("doc_id", "score").filter(
-            F.col("doc_id") != int(doc_id)
-        )
-        return topk_deterministic(out, k, round_to)
+        return self._rows_df(self._merge_topk(
+            [c for c in cand if c[1] != int(doc_id)], k, round_to
+        ))
 
     def analyze(self, text: str) -> list[dict]:
         """ES ``_analyze`` API analog: the token stream the index-time
         analyzer produces for ``text``, with positions — the contract
         debugging tool (ES returns [{token, position}, ...]). Pure
         driver-side; zero Spark jobs."""
-        from esbulk_spark.functions.analyzer import tokenize_text
-
         return [
             {"token": t, "position": i}
             for i, t in enumerate(tokenize_text(text))
@@ -2584,8 +2365,6 @@ class IndexReader:
             raise ValueError(
                 "term_vectors needs stored content (store_content index)"
             )
-        from esbulk_spark.functions.analyzer import tokenize_text
-
         terms: dict[str, dict] = {}
         for i, t in enumerate(tokenize_text(text)):
             e = terms.setdefault(t, {"term_freq": 0, "positions": []})

@@ -339,36 +339,6 @@ def test_phrase_search_semantics(spark, tmp_path):
     assert [x.doc_id for x in r.search_phrase("merge sort join").collect()] == [0]
 
 
-def test_phrase_pruned_equals_unpruned(spark, corpus, tmp_path):
-    """The two-phase block-max phrase path (postings-bound candidates +
-    adaptive widening) is EXACT: same (doc_id, phrase_freq, score) as
-    the full position-intersection, including hot-first-token phrases
-    and with/without published rounding."""
-    from esbulk_spark.config import IndexConfig
-    from esbulk_spark.plans.build import build_index
-
-    d = str(tmp_path / "idx_pp")
-    cfg = IndexConfig(index_dir=d, n_buckets=8, n_shards=4,
-                      chunk_cap=256, store_positions=True)
-    build_index(spark, corpus, cfg, input_sig="pp150")
-    r = IndexReader(spark, d)
-    for q in ("return value", "get user", "the return"):
-        for rt in (None, 4):
-            a = [(x.doc_id, x.phrase_freq, round(x.score, 6))
-                 for x in r.search_phrase(q, k=10, round_to=rt,
-                                          prune=True).collect()]
-            b = [(x.doc_id, x.phrase_freq, round(x.score, 6))
-                 for x in r.search_phrase(q, k=10, round_to=rt,
-                                          prune=False).collect()]
-            assert a == b, (q, rt)
-    # tiny k forces the adaptive loop to certify against unread bounds
-    a1 = [x.doc_id
-          for x in r.search_phrase("return value", k=1, prune=True).collect()]
-    b1 = [x.doc_id
-          for x in r.search_phrase("return value", k=1, prune=False).collect()]
-    assert a1 == b1
-
-
 def test_phrase_survives_fast_merge(spark, corpus, tmp_path):
     """Positions tables union through merge_segments_fast (disjoint doc
     ids): phrase results on the merged index == on a single-pass build
@@ -547,8 +517,16 @@ def test_phrase_without_positions_clear_error(spark, index_dir):
     r = IndexReader(spark, index_dir)
     assert r.has_positions() is False
     assert r.stats.get("store_positions") is False
-    with pytest.raises(ValueError, match="store_positions"):
-        r.search_phrase("def func")  # terms present -> reaches the check
+    # terms present -> every positional family reaches the one guard
+    for run in (
+        lambda: r.search_phrase("def func"),
+        lambda: r.search_phrase_sloppy("def func", slop=2),
+        lambda: r.search_span_near(["def", "func"], slop=1),
+        lambda: r.search_span_first("def", 3),
+        lambda: r.search_phrase_prefix("def fun"),
+    ):
+        with pytest.raises(ValueError, match="store_positions"):
+            run()
     # an absent term still returns empty (never reaches the positions scan)
     assert r.search_phrase("zzzznotaterm def").collect() == []
 
@@ -1254,6 +1232,62 @@ def test_more_like_this(spark, tmp_path):
     assert got3  # still returns similar docs via the single term
     # absent seed -> empty
     assert r.more_like_this(999).collect() == []
+
+
+MLT_SEED = 0
+
+# the top-k families that pass through the single-query driver gate
+GATED = {
+    "search": lambda r, **kw: r.search("flushBuffer retry score", **kw),
+    "prefix": lambda r, **kw: r.search_prefix("get", **kw),
+    "fuzzy": lambda r, **kw: r.search_fuzzy("retri", **kw),
+    "wildcard": lambda r, **kw: r.search_wildcard("f*sh", **kw),
+    "regexp": lambda r, **kw: r.search_regexp("re.*", **kw),
+    "stemmed": lambda r, **kw: r.search_stemmed("values", **kw),
+    "more_like_this": lambda r, **kw: r.more_like_this(MLT_SEED, **kw),
+}
+
+
+def test_gated_families_score_on_the_driver(spark, index_dir, monkeypatch):
+    """search, the expansion families and more_like_this share one
+    single-query gate: under the default driver_score_max none of them
+    runs the distributed per-shard plan."""
+    def no_plan(self, *args, **kwargs):
+        raise AssertionError("distributed plan below the driver gate")
+
+    monkeypatch.setattr(IndexReader, "_per_shard_scores", no_plan)
+    r = IndexReader(spark, index_dir)
+    for name, run in GATED.items():
+        assert run(r, k=5).collect(), name
+
+
+def test_gated_families_rank_identical_across_the_gate(spark, index_dir, tmp_path):
+    """Every gated family returns the same rows on the driver path and
+    on the distributed plan (driver_score_max=0), also with tombstones;
+    more_like_this never returns its seed."""
+    from esbulk_spark.plans import admin
+
+    def ranks(d, gate):
+        r = IndexReader(spark, d)
+        r.driver_score_max = gate
+        return {
+            name: [(x.doc_id, x.score) for x in run(r, k=8, round_to=4).collect()]
+            for name, run in GATED.items()
+        }
+
+    drv, dist = ranks(index_dir, 2_000_000), ranks(index_dir, 0)
+    assert drv == dist and all(drv.values())
+    # tombstone every family's top hit (the seed stays live)
+    victims = sorted({rows[0][0] for rows in drv.values()} - {MLT_SEED})
+    d = str(tmp_path / "tomb")
+    admin.snapshot_index(index_dir, str(tmp_path / "snap"))
+    admin.restore_index(str(tmp_path / "snap"), d)
+    admin.delete_by_ids(spark, d, victims)
+    t_drv, t_dist = ranks(d, 2_000_000), ranks(d, 0)
+    assert t_drv == t_dist and all(t_drv.values())
+    assert not set(victims) & {x for rows in t_drv.values() for x, _ in rows}
+    for got in (drv, dist, t_drv, t_dist):
+        assert MLT_SEED not in {x for x, _ in got["more_like_this"]}
 
 
 def test_analyze_api_and_term_vectors(reader):

@@ -70,3 +70,24 @@ def test_refresh_drops_stale_file_lists(spark, tmp_path):
     assert after != before
     terms = analyze_query(" ".join(QUERIES))
     assert r.read_postings(terms).equals(fresh.read_postings(terms))
+
+
+def test_decode_paths_reuse_the_df_cache(spark, index_dir, monkeypatch):
+    """Full-match-set families resolve df through the reader's cache: once
+    a query's terms are known, count / search_and / explain / score_all
+    read no dictionary rows."""
+    r = IndexReader(spark, index_dir)
+    reads = []
+    plain = r.lookup_term_stats
+    monkeypatch.setattr(
+        r, "lookup_term_stats", lambda terms: reads.append(terms) or plain(terms)
+    )
+    q = QUERIES[0]
+    n = r.count(q)
+    assert n > 0 and reads
+    reads.clear()
+    assert r.count(q) == n
+    r.search_and(q).collect()
+    r.score_all(q).collect()
+    r.explain(q, 0)
+    assert reads == []
