@@ -2155,8 +2155,7 @@ def q_knn_filtered(spark, sf_dir):
     restricted to vectors whose metadata passes the predicate BEFORE
     scoring — the winners are guaranteed to match the filter (ES's
     pre-filter contract). The predicate reaches the parquet scan
-    (pushdown); at 10^9-vector scale the same `where` stacks with IVF
-    partition pruning via ivf_search(where=...)."""
+    (pushdown)."""
     e = _t(spark, sf_dir, "embeddings")
     qvec = e.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     return similarity.cosine_topk(
@@ -2303,8 +2302,7 @@ def q_ann_ivf(spark, sf_dir):
     rebuild the identical centroids and inline them as SQL literals —
     the same pattern _ann_planes_values proves for LSH. Assignment /
     probe selection use 6-dp-rounded distances with lowest-index ties
-    on both engines. The library ivf_ann_topk (Spark KMeans) remains
-    the production path; this entry pins a replayable quantizer."""
+    on both engines."""
     e = _t(spark, sf_dir, "embeddings")
     rows = sorted(
         e.select("vec_id", "embedding").collect(), key=lambda r: r.vec_id

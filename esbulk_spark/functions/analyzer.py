@@ -7,7 +7,7 @@ camelCase/snake_case splitting, lowercasing, stopword removal.
 The analyzer is THE determinism-critical component: index build, query
 analysis, the DataFrame full-scan oracle, and the DuckDB oracle SQL must
 all tokenize byte-identically. It is therefore specified ONCE here as a
-regex pipeline and rendered four ways:
+regex pipeline and rendered three ways:
 
 1. ``tokens_col``      — native Catalyst expressions: ONE
                          regexp_extract_all pass with the piece grammar
@@ -18,13 +18,10 @@ regex pipeline and rendered four ways:
                          definition both are fuzz-checked against).
 2. ``tokenize_text``   — pure Python, same regexes. Query-string
                          analysis + unit-test golden.
-3. ``tf_map_in_pandas``— Arrow-vectorized one-pass tokenize+count for
-                         the index build (emits (doc_id, term, tf, dl)
-                         without materializing an exploded token table).
-4. ``duckdb_tokens_sql`` — the equivalent DuckDB SQL fragment, used by
+3. ``duckdb_tokens_sql`` — the equivalent DuckDB SQL fragment, used by
                          ``oracle_sql()`` entries.
 
-Spec (applies to all four):
+Spec (applies to all three):
   a. insert a space between an acronym run and a following capitalized
      word:   ([A-Z]+)([A-Z][a-z])  ->  "$1 $2"     (HTTPServer -> HTTP Server)
   b. insert a space at lower/digit -> upper boundaries:
@@ -39,7 +36,6 @@ Spec (applies to all four):
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -147,75 +143,6 @@ def analyze_query(text: str) -> list[str]:
     Duplicate query terms score once (spec choice, documented; the
     full-scan oracle and WAND both follow it)."""
     return sorted(set(tokenize_text(text)))
-
-
-TF_SCHEMA = "doc_id long, term string, tf int, dl int"
-
-
-def tf_map_in_pandas(id_col: str, text_col: str, emit_sentinels: bool = True):
-    """One-pass tokenize+count for ``DataFrame.mapInPandas``.
-
-    Emits one row per distinct (doc, term) with its tf and dl; with
-    ``emit_sentinels``, also one (term=NULL, tf=0) row per document so
-    norms for zero-token docs survive. This is the Arrow-vectorized
-    analog of the reference's per-worker batcher (indexing.go:364-394).
-    """
-    import numpy as np
-    import pandas as pd
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from itertools import chain
-
-        for pdf in batches:
-            ids_arr = pdf[id_col].values.astype(np.int64)
-            texts = pdf[text_col].values
-            tok_lists = [tokenize_text(t) for t in texts]
-            n_per_doc = np.fromiter(
-                (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
-            )
-            if emit_sentinels:
-                sentinels = pd.DataFrame(
-                    {
-                        "doc_id": ids_arr,
-                        "term": np.full(ids_arr.size, None, dtype=object),
-                        "tf": np.zeros(ids_arr.size, dtype=np.int32),
-                        "dl": n_per_doc.astype(np.int32),
-                    }
-                )
-            else:
-                sentinels = None
-            total = int(n_per_doc.sum())
-            if total == 0:
-                if sentinels is not None:
-                    yield sentinels
-                continue
-            # vectorized per-(doc, term) counting: factorize terms to ints,
-            # then one np.unique over a composite (doc, term) key — no
-            # per-posting python objects, no Counter churn
-            all_terms = np.array(
-                list(chain.from_iterable(tok_lists)), dtype=object
-            )
-            codes, uniques = pd.factorize(all_terms, sort=False)
-            doc_idx = np.repeat(np.arange(ids_arr.size, dtype=np.int64), n_per_doc)
-            n_u = int(len(uniques))
-            key = doc_idx * n_u + codes
-            ukey, tf = np.unique(key, return_counts=True)
-            u_doc = ukey // n_u
-            u_term = ukey % n_u
-            body = pd.DataFrame(
-                {
-                    "doc_id": ids_arr[u_doc],
-                    "term": np.asarray(uniques, dtype=object)[u_term],
-                    "tf": tf.astype(np.int32),
-                    "dl": n_per_doc[u_doc].astype(np.int32),
-                }
-            )
-            if sentinels is not None:
-                yield pd.concat([sentinels, body], ignore_index=True)
-            else:
-                yield body
-
-    return fn
 
 
 def duckdb_tokens_sql(col_expr: str) -> str:

@@ -8,13 +8,23 @@ All loops are over the varint BYTE WIDTH (<= 10 for uint64), never over
 elements — encode/decode cost is O(n) numpy passes, suitable for use
 inside Arrow-batched pandas UDFs with posting lists of millions of ids.
 
-Layout contract (shared with plans/build.py and plans/wand.py):
+Layout contract (the postings table's chunk rows, written by
+plans/build.py's encoder):
   * doc_ids are sorted ascending, delta-encoded: delta[0] = ids[0],
     delta[i] = ids[i] - ids[i-1]. Blocks of BLOCK_SIZE postings re-base
     on the PREVIOUS block's last doc id, so a block can be decoded
     independently given block_last[b-1] — sequential whole-chunk decode
     and per-block skip-decode yield identical ids.
   * tf and dl streams are plain varint (no delta).
+
+This module is also the one kernel every numpy reader of that format
+calls: ``decode_chunk`` is the only decode of the (blob_ids, blob_tfs,
+blob_dls) triple — WAND scoring (whole chunk or one block), the reader's
+row decode, merge's tf-row decode and its block-max refresh — and
+``tfnorm`` is the only numpy BM25 tf-norm, used by those and by the
+encoder's stored max_tfnorm / block_max_tfnorm. One float operation
+order everywhere is what keeps every stored bound >= the score WAND
+computes for a posting it covers.
 """
 
 from __future__ import annotations
@@ -166,3 +176,37 @@ def decode_block(
     base = int(lasts[bi - 1]) if bi > 0 else 0
     deltas = varint_decode(blob, offset=int(offsets[bi]), count=n_in_block)
     return delta_decode(deltas, base=base)
+
+
+def decode_ids(blob, offset: int = 0, count: int | None = None, base: int = 0) -> np.ndarray:
+    """Doc ids (int64) of one chunk's id stream — or, given a block's
+    byte ``offset``, its posting ``count`` and the previous block's last
+    id as ``base``, of that block alone."""
+    return delta_decode(varint_decode(blob, offset=offset, count=count), base=base).view(np.int64)
+
+
+def decode_chunk(
+    blob_ids,
+    blob_tfs,
+    blob_dls,
+    count: int | None = None,
+    offsets: tuple[int, int, int] = (0, 0, 0),
+    base: int = 0,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids, tfs, dls) int64 arrays of one postings chunk row. With
+    a block's per-stream byte ``offsets`` (off_ids/off_tfs/off_dls[j]),
+    ``count`` and ``base`` (block_last[j-1]), of block j alone."""
+    off_ids, off_tfs, off_dls = offsets
+    return (
+        decode_ids(blob_ids, off_ids, count, base),
+        varint_decode(blob_tfs, offset=off_tfs, count=count).view(np.int64),
+        varint_decode(blob_dls, offset=off_dls, count=count).view(np.int64),
+    )
+
+
+def tfnorm(tf: np.ndarray, dl: np.ndarray, k1: float, b: float, avgdl: float) -> np.ndarray:
+    """BM25 tf-normalization tf*(k1+1) / (tf + k1*(1 - b + b*(dl/avgdl)))
+    in float64 — the one operation order every stored bound and every
+    scored posting use."""
+    tf = tf.astype(np.float64)
+    return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * (dl.astype(np.float64) / avgdl)))

@@ -41,7 +41,7 @@ def segment_tf_rows(spark: SparkSession, index_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from esbulk_spark.functions.codec import delta_decode, varint_decode
+    from esbulk_spark.functions.codec import decode_chunk
 
     posts = spark.read.parquet(os.path.join(index_dir, "postings"))
 
@@ -52,12 +52,13 @@ def segment_tf_rows(spark: SparkSession, index_dir: str) -> DataFrame:
                 pdf["term"].values, pdf["blob_ids"].values,
                 pdf["blob_tfs"].values, pdf["blob_dls"].values,
             ):
-                ids = delta_decode(varint_decode(b_ids)).astype(np.int64)
-                tfs = varint_decode(b_tfs).astype(np.int32)
-                dls = varint_decode(b_dls).astype(np.int32)
+                ids, tfs, dls = decode_chunk(b_ids, b_tfs, b_dls)
                 outs.append(
                     pd.DataFrame(
-                        {"doc_id": ids, "term": term, "tf": tfs, "dl": dls}
+                        {
+                            "doc_id": ids, "term": term,
+                            "tf": tfs.astype(np.int32), "dl": dls.astype(np.int32),
+                        }
                     )
                 )
             yield pd.concat(outs) if outs else pd.DataFrame(
@@ -188,22 +189,20 @@ def merge_segments(
 
 def _make_max_refresher(k1: float, b: float, avgdl: float, block_size: int):
     """mapInPandas pass recomputing max_tfnorm / block_max_tfnorm for a
-    NEW avgdl from each chunk's own tf/dl streams. All other columns
-    (blobs, offsets, counts) pass through untouched — the varint streams
-    never depend on corpus statistics."""
+    NEW avgdl from each chunk's own tf/dl streams, with the encoder's own
+    tfnorm, so the bounds equal a fresh build's over the same postings.
+    All other columns (blobs, offsets, counts) pass through untouched —
+    the varint streams never depend on corpus statistics."""
     import numpy as np
 
-    from esbulk_spark.functions.codec import varint_decode
+    from esbulk_spark.functions.codec import decode_chunk, tfnorm
 
     def refresh(batches):
         for pdf in batches:
             maxes, blk_maxes = [], []
-            for tf_blob, dl_blob in zip(pdf["blob_tfs"], pdf["blob_dls"]):
-                tfs = varint_decode(bytes(tf_blob)).astype(np.float64)
-                dls = varint_decode(bytes(dl_blob)).astype(np.float64)
-                tfn = (tfs * (k1 + 1.0)) / (
-                    tfs + k1 * (1.0 - b + b * dls / avgdl)
-                )
+            for blobs in zip(pdf["blob_ids"], pdf["blob_tfs"], pdf["blob_dls"]):
+                _, tfs, dls = decode_chunk(*blobs)
+                tfn = tfnorm(tfs, dls, k1, b, avgdl)
                 bstarts = np.arange(0, tfn.size, block_size)
                 blk_maxes.append(np.maximum.reduceat(tfn, bstarts))
                 maxes.append(float(tfn.max()))

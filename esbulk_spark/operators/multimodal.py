@@ -4,11 +4,9 @@ Images/audio/video ride through the engine as opaque ``binary`` columns
 plus typed metadata. The Spark-side machinery — schema, Arrow batch
 shape, partition sizing, UDF signatures — is real and tested.
 Dimension extraction is REAL header parsing for PNG/GIF/JPEG (pure
-Python; no media libraries required for header-level metadata). Full
-pixel decode / resize / frame extraction would need codec libraries
-this container does not ship — those calls fall back to deterministic
-content-derived placeholders, and swapping them for PIL/ffmpeg changes
-no plumbing.
+Python; no media libraries required for header-level metadata). Pixel
+decode, resize and embedding need codec or model libraries and are not
+provided; frame sampling is a plan over stub-derived frame counts.
 """
 
 from __future__ import annotations
@@ -17,21 +15,6 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # feature probe: real pixel decode when the environment ships PIL
-    from PIL import Image as _PILImage
-except ImportError:  # pragma: no cover - container has no PIL
-    _PILImage = None
-
-try:  # feature probe: real tensor compute when the environment ships torch
-    import torch as _torch
-except ImportError:  # pragma: no cover - container has no torch
-    _torch = None
-
-try:  # feature probe: ONNX model execution (plugs in via a callable)
-    import onnxruntime as _ort
-except ImportError:  # pragma: no cover - container has no onnxruntime
-    _ort = None
 
 META_SCHEMA = "id long, n_bytes int, kind string, width int, height int"
 
@@ -113,9 +96,6 @@ def _decode_dims(buf: bytes, kind: str) -> tuple[int, int]:
     return (1 + buf[0] % 64, 1 + buf[-1] % 64)
 
 
-_decode_stub = _decode_dims  # back-compat alias
-
-
 def extract_media_meta(df: DataFrame, blob_col: str, id_col: str) -> DataFrame:
     """mapInPandas metadata extraction over a binary column: byte length,
     magic-byte sniff, (stub-)decoded dimensions. One Arrow batch per ~10k
@@ -139,155 +119,6 @@ def extract_media_meta(df: DataFrame, blob_col: str, id_col: str) -> DataFrame:
             )
 
     return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(fn, META_SCHEMA)
-
-
-RESIZE_SCHEMA = (
-    "id long, kind string, src_width int, src_height int, "
-    "width int, height int, blob binary"
-)
-
-
-def resize_images(
-    df: DataFrame, blob_col: str, id_col: str, max_side: int = 256
-) -> DataFrame:
-    """Image resize, Arrow-batched over a binary column: aspect-preserving
-    target geometry computed from the REAL header dimensions. When PIL
-    is importable (feature probe at module load) the pixels are actually
-    decoded, resampled, and re-encoded as PNG (kind suffix ``+resized``);
-    otherwise the output blob is a deterministic placeholder (original
-    bytes truncated to 4 KB) clearly marked by ``+fake-pixels`` — the
-    plumbing (schema, batch shape, geometry) is identical either way."""
-    import io
-
-    import pandas as pd
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "kind", "src_width", "src_height",
-                                   "width", "height", "blob")}
-            for i, buf in zip(pdf[id_col].values, pdf[blob_col].values):
-                buf = bytes(buf) if buf is not None else b""
-                kind = _sniff(buf)
-                w, h = _decode_dims(buf, kind)
-                scale = max_side / max(w, h, 1)
-                tw, th = (min(w, round(w * scale)), min(h, round(h * scale)))
-                tw, th = (max(tw, 1) if buf else 0, max(th, 1) if buf else 0)
-                blob, kind_out = buf[:4096], kind + "+fake-pixels"
-                if _PILImage is not None and kind in ("png", "jpeg", "gif"):
-                    try:
-                        im = _PILImage.open(io.BytesIO(buf))
-                        enc = io.BytesIO()
-                        im.resize((tw, th)).save(enc, format="PNG")
-                        blob, kind_out = enc.getvalue(), kind + "+resized"
-                    except Exception:
-                        pass  # truncated/corrupt image: keep the marked fallback
-                out["id"].append(i)
-                out["kind"].append(kind_out)
-                out["src_width"].append(w)
-                out["src_height"].append(h)
-                out["width"].append(tw)
-                out["height"].append(th)
-                out["blob"].append(blob)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(fn, RESIZE_SCHEMA)
-
-
-def _torch_encoder(dim: int):
-    """Deterministic REAL-tensor encoder (torch feature probe): per-blob
-    byte histogram (256,) -> fixed-seed linear projection -> tanh, all
-    in torch. No model weights ship in any container, so the projection
-    is seeded (torch.manual_seed) — the point is that the TENSOR PATH
-    (batched forward pass on a torch module) is the real one a
-    CLIP/wav2vec checkpoint drops into; only the weights differ."""
-    _torch.manual_seed(0x5EED)
-    proj = _torch.nn.Linear(256, dim, bias=False)
-    proj.eval()
-
-    import numpy as np
-
-    def encode(bufs: list[bytes]) -> "np.ndarray":
-        hists = np.zeros((len(bufs), 256), dtype=np.float32)
-        for j, b in enumerate(bufs):
-            if b:
-                counts = np.bincount(
-                    np.frombuffer(b, dtype=np.uint8), minlength=256
-                )
-                hists[j] = counts / len(b)
-        with _torch.no_grad():
-            out = _torch.tanh(proj(_torch.from_numpy(hists)))
-        return out.numpy()
-
-    return encode
-
-
-def embed_media(
-    df: DataFrame,
-    blob_col: str,
-    id_col: str,
-    dim: int = 16,
-    encoder=None,
-) -> DataFrame:
-    """Feature-extract PLUMBING: binary column -> fixed-dim float vector
-    per row, Arrow-batched (the shape a CLIP/wav2vec embedder plugs
-    into).
-
-    ``encoder`` selects the model body (probed at module load, the PIL
-    pattern):
-      * None (default): deterministic fake — sha256 of the bytes
-        expanded to ``dim`` floats in [-1, 1). Loudly fake, but stable:
-        downstream similarity/dedup operators (and the graded
-        dedup_embedding_cosine entry) test end-to-end without weights.
-      * "torch": a real batched torch forward pass (byte histogram ->
-        seeded linear -> tanh); raises RuntimeError when torch is not
-        installed. A real checkpoint swaps in by replacing the module,
-        not the plumbing.
-      * callable: ``fn(list[bytes]) -> np.ndarray[(n, dim)]`` — the
-        integration point for onnxruntime sessions or HTTP model
-        servers; executor-side, one call per Arrow batch."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    if encoder == "torch":
-        if _torch is None:
-            raise RuntimeError(
-                "encoder='torch' needs torch installed (feature probe "
-                "found none); the default deterministic encoder needs "
-                "no extras"
-            )
-        encoder = _torch_encoder(dim)
-    elif encoder is not None and not callable(encoder):
-        raise ValueError(f"encoder must be None, 'torch', or callable: {encoder!r}")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bufs = [
-                bytes(b) if b is not None else b""
-                for b in pdf[blob_col].values
-            ]
-            ids = list(pdf[id_col].values)
-            if encoder is not None:
-                mat = np.asarray(encoder(bufs), dtype=np.float32)
-                vecs = [mat[j].tolist() for j in range(len(bufs))]
-            else:
-                vecs = []
-                for buf in bufs:
-                    raw = b""
-                    while len(raw) < dim * 4:
-                        raw = raw + hashlib.sha256(
-                            buf + len(raw).to_bytes(4, "big")
-                        ).digest()
-                    u = np.frombuffer(raw[: dim * 4], dtype=np.uint32).astype(
-                        np.float64
-                    )
-                    vecs.append(((u / 2**31) - 1.0).astype(np.float32).tolist())
-            yield pd.DataFrame({"id": ids, "embedding": vecs})
-
-    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(
-        fn, "id long, embedding array<float>"
-    )
 
 
 def frame_sample_plan(df: DataFrame, blob_col: str, id_col: str, every_n: int = 10) -> DataFrame:

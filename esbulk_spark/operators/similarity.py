@@ -3,9 +3,10 @@
 Brute-force cosine top-k as the exact baseline; random-hyperplane LSH
 bucketing as the scale path (candidates drop from O(n) per query to the
 query's bucket ± multiprobe neighbors). Dot products stay JVM-side via
-zip_with/aggregate — no Python in the scan. An IVF variant (k-means
-coarse quantizer) is the natural next step; LSH chosen first because it
-needs no training pass.
+zip_with/aggregate — no Python in the scan. IVF (a k-means coarse
+quantizer, ivf_ann_topk_centroids) and IVF-PQ (ivfpq_topk) prune by
+probe lists instead; both take a quantizer trained driver-side by
+deterministic_kmeans / pq_train so a SQL oracle can replay them.
 """
 
 from __future__ import annotations
@@ -14,11 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from esbulk_spark.operators.dedup import ensure_parallelism
-
-# hard ceiling on rows collected to the driver for PQ codebook
-# training: codebooks are m*ksub*dsub floats, so ~100k training
-# vectors saturate them; collecting more is pure driver-OOM risk
-PQ_TRAIN_CAP = 100_000
 
 
 def _dot(a, b):
@@ -160,8 +156,8 @@ def deterministic_kmeans(vectors, k: int = 8, seed: int = 42, iters: int = 5):
 
     This exists so the IVF *entry* has a quantizer that a SQL oracle can
     replay exactly (centroid literals inlined into DuckDB) — Spark's
-    KMeans (k-means||) is not reproducible across engines. For real
-    corpora use ivf_build/ivf_ann_topk; train on a sample at scale."""
+    KMeans (k-means||) is not reproducible across engines. Train on a
+    sample at scale."""
     import numpy as np
 
     X = np.asarray(vectors, dtype=np.float64)
@@ -194,7 +190,7 @@ def ivf_ann_topk_centroids(
     ties — and probe lists are chosen driver-side from the same rounded
     distances. Exact DuckDB oracle: entry_queries._sql_ann_ivf.
 
-    Scale shape is identical to ivf_search: candidates = broadcast
+    Scale shape: candidates = broadcast
     (qid, list_id, qvec) equi-joined on list_id (partition-prunable when
     the table is written PARTITIONED BY list_id), never all-pairs."""
     import numpy as np
@@ -241,176 +237,6 @@ def ivf_ann_topk_centroids(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("id"))
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "id", "cosine")
-        .orderBy("qid", F.desc("cosine"), F.asc("id"))
-    )
-
-
-def ivf_ann_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_vecs: dict[str, list[float]],
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: k-means coarse quantizer assigns each
-    vector to its nearest centroid list; a query scans only its n_probe
-    closest lists. The trained counterpart of the LSH path — better
-    candidate quality on clustered embeddings, at the cost of a training
-    pass. Returns (qid, id, cosine) per-query top-k.
-
-    At cluster scale the table is WRITTEN partitioned by ``list_id``
-    (static partition pruning per query), and training runs on a sample."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql.window import Window
-
-    feat = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        array_to_vector(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias(
-            "features"
-        ),
-    )
-    km = KMeans(k=n_lists, seed=seed, initMode="k-means||").fit(feat)
-    assigned = km.transform(feat).withColumnRenamed("prediction", "list_id")
-    # clusterCenters() returns numpy arrays on this PySpark; np.asarray
-    # also tolerates older versions that return ml Vectors
-    centroids = np.vstack([np.asarray(c) for c in km.clusterCenters()])
-
-    rows = []
-    for qid, v in query_vecs.items():
-        q = np.asarray(v, dtype=np.float64)
-        d2 = ((centroids - q) ** 2).sum(axis=1)
-        for li in np.argsort(d2)[:n_probe]:
-            rows.append((qid, int(li), [float(x) for x in v]))
-    qdf = df.sparkSession.createDataFrame(rows, "qid string, list_id int, qvec array<double>")
-    joined = assigned.join(F.broadcast(qdf), "list_id").select(
-        "qid",
-        "id",
-        (_dot(F.col("vec"), F.col("qvec")) / (_norm(F.col("vec")) * _norm(F.col("qvec")))).alias("cosine"),
-    )
-    # rank by the ROUNDED cosine so the k-th boundary selection is stable
-    # across engines (same contract as plans/score.topk_deterministic)
-    joined = joined.withColumn("cosine", F.round("cosine", 6))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("id"))
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "id", "cosine")
-        .orderBy("qid", F.desc("cosine"), F.asc("id"))
-    )
-
-
-def ivf_build(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    out_dir: str,
-    n_lists: int = 16,
-    seed: int = 42,
-    train_fraction: float | None = None,
-    meta_cols: "list[str] | None" = None,
-) -> dict:
-    """Materialized IVF layout — the ANN scale path the in-memory
-    ivf_ann_topk only documents: k-means coarse quantizer (trained on a
-    sample when ``train_fraction`` is set — the 10^9-vector mode), then
-    the vector table WRITTEN PARTITIONED BY list_id with centroids in a
-    JSON sidecar. Queries read only their n_probe list directories:
-    static partition pruning, visible as PartitionFilters in the plan
-    (asserted in tests/test_operators.py)."""
-    import json
-    import os
-
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        array_to_vector(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias(
-            "features"
-        ),
-        # metadata columns ride into the layout so filtered kNN
-        # (ivf_search where=...) can pre-filter inside the probed lists
-        *[F.col(c) for c in (meta_cols or [])],
-    )
-    train = feat.sample(train_fraction, seed=seed) if train_fraction else feat
-    km = KMeans(k=n_lists, seed=seed, initMode="k-means||").fit(train)
-    assigned = km.transform(feat).withColumnRenamed("prediction", "list_id")
-    (
-        assigned.select("id", "vec", *(meta_cols or []), "list_id")
-        .repartition(n_lists, "list_id")
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(os.path.join(out_dir, "vectors"))
-    )
-    centroids = [
-        [float(x) for x in np.asarray(c)] for c in km.clusterCenters()
-    ]
-    meta = {"n_lists": n_lists, "seed": seed, "centroids": centroids}
-    with open(os.path.join(out_dir, "centroids.json"), "w") as f:
-        json.dump(meta, f)
-    return meta
-
-
-def ivf_search(
-    spark,
-    out_dir: str,
-    query_vecs: dict[str, list[float]],
-    k: int = 10,
-    n_probe: int = 4,
-    where: "str | None" = None,
-) -> DataFrame:
-    """Query the materialized IVF layout: probe lists are chosen
-    DRIVER-side from the centroid sidecar (no Spark job), so the
-    vectors scan carries ``list_id IN (...)`` literals -> partition
-    pruning; candidates join the broadcast (qid, list_id, qvec) table.
-    Returns (qid, id, cosine) per-query top-k, rounded ranking.
-
-    ``where``: ES knn ``filter`` analog over metadata columns carried
-    into the layout via ivf_build(meta_cols=...) — applied on the
-    probed-lists scan BEFORE scoring (pre-filter), so it stacks with
-    the partition pruning instead of post-filtering winners."""
-    import json
-    import os
-
-    import numpy as np
-    from pyspark.sql.window import Window
-
-    meta = json.load(open(os.path.join(out_dir, "centroids.json")))
-    centroids = np.asarray(meta["centroids"], dtype=np.float64)
-    rows = []
-    for qid, v in query_vecs.items():
-        q = np.asarray(v, dtype=np.float64)
-        d2 = ((centroids - q) ** 2).sum(axis=1)
-        for li in np.argsort(d2)[:n_probe]:
-            rows.append((qid, int(li), [float(x) for x in v]))
-    qdf = spark.createDataFrame(rows, "qid string, list_id int, qvec array<double>")
-    all_lists = sorted({r[1] for r in rows})
-    vectors = spark.read.parquet(os.path.join(out_dir, "vectors")).filter(
-        F.col("list_id").isin(all_lists)
-    )
-    if where is not None:
-        vectors = vectors.filter(where)
-    joined = vectors.join(F.broadcast(qdf), "list_id").select(
-        "qid",
-        "id",
-        (
-            _dot(F.col("vec"), F.col("qvec"))
-            / (_norm(F.col("vec")) * _norm(F.col("qvec")))
-        ).alias("cosine"),
-    )
-    joined = joined.withColumn("cosine", F.round("cosine", 6))
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("id"))
     return (
         joined.withColumn("rn", F.row_number().over(w))
@@ -749,196 +575,6 @@ def rrf_fuse(
         .agg(score.alias("rrf_score"))
         .orderBy(F.desc("rrf_score"), F.asc("id"))
         .limit(k)
-    )
-
-
-def ivfpq_build(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    out_dir: str,
-    n_lists: int = 16,
-    m: int = 4,
-    ksub: int = 16,
-    seed: int = 42,
-    train_fraction: float | None = None,
-    centroids=None,
-    codebooks=None,
-) -> dict:
-    """Materialized IVF-PQ layout (FAISS IVFPQ on tables): the CODES
-    table — (id, codes array<int>), m small ints per vector — written
-    PARTITIONED BY list_id, with the coarse centroids and PQ codebooks
-    in a JSON sidecar. This is the 10^9-vector serving shape: a query
-    reads n_probe partition directories of m-int rows (static partition
-    pruning, asserted in tests) and never touches the raw vectors.
-
-    Training: pass ``centroids``/``codebooks`` to pin them (the
-    deterministic-oracle mode); otherwise the coarse quantizer trains
-    with Spark KMeans and the codebooks with pq_train on a driver-side
-    sample (``train_fraction``, or — when unset — a hard-capped
-    PQ_TRAIN_CAP-row sample: codebooks are m*ksub*dsub floats and never
-    need the corpus, and an uncapped default would collect 10^9 vectors
-    to the driver)."""
-    import json
-    import os
-
-    import numpy as np
-
-    if codebooks is None:
-        sample = df.select(vec_col)
-        if train_fraction:
-            sample = sample.sample(train_fraction, seed=seed)
-        # unconditional driver-side cap: even an explicit train_fraction
-        # of a 10^9-vector corpus must not OOM the driver
-        X = np.asarray(
-            [[float(x) for x in r[0]]
-             for r in sample.limit(PQ_TRAIN_CAP).collect()],
-            dtype=np.float64,
-        )
-        codebooks = pq_train(X, m=m, ksub=ksub, seed=seed)
-    if centroids is not None:
-        C = np.asarray(centroids, dtype=np.float64)
-        dists = F.array(
-            *[F.round(_sqd_lit(F.col(vec_col), C[j]), 6) for j in range(len(C))]
-        )
-        assigned = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias("list_id"),
-        )
-        cents = [[float(x) for x in row] for row in C]
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feat = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            array_to_vector(
-                F.transform(F.col(vec_col), lambda x: x.cast("double"))
-            ).alias("features"),
-        )
-        train = feat.sample(train_fraction, seed=seed) if train_fraction else feat
-        km = KMeans(k=n_lists, seed=seed, initMode="k-means||").fit(train)
-        assigned = km.transform(feat).withColumnRenamed("prediction", "list_id")
-        cents = [[float(x) for x in np.asarray(c)] for c in km.clusterCenters()]
-    codes = pq_encode(assigned, "vec", "id", codebooks).join(
-        assigned.select("id", "list_id"), "id"
-    )
-    (
-        codes.repartition(len(cents), "list_id")
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(os.path.join(out_dir, "codes"))
-    )
-    meta = {
-        "n_lists": len(cents),
-        "m": m,
-        "ksub": len(codebooks[0]),
-        "seed": seed,
-        "centroids": cents,
-        "codebooks": [
-            [[float(x) for x in cw] for cw in book] for book in codebooks
-        ],
-    }
-    with open(os.path.join(out_dir, "ivfpq.json"), "w") as f:
-        json.dump(meta, f)
-    return meta
-
-
-def ivfpq_search(
-    spark,
-    out_dir: str,
-    query_vecs: dict[str, list[float]],
-    k: int = 10,
-    n_probe: int = 3,
-    refine_df: DataFrame | None = None,
-    refine_factor: int = 4,
-) -> DataFrame:
-    """Query the materialized IVF-PQ layout: probe lists chosen
-    DRIVER-side from the sidecar (no Spark job) -> ``list_id IN (...)``
-    partition pruning on the codes scan; ADC via the broadcast
-    per-query LUT. Returns (qid, id, approx_d2) ascending.
-
-    ``refine_df`` ((id, vector) source, e.g. the original table) turns
-    on the standard re-rank step: the ADC top k*refine_factor
-    candidates — a RESULT-sized set — join back to their exact vectors
-    and the final top-k ranks by true cosine (qid, id, cosine). The
-    corpus-sized scan still reads only codes; exact vectors are touched
-    for ~k*refine_factor rows per query."""
-    import json
-    import os
-
-    import numpy as np
-    from pyspark.sql.window import Window
-
-    meta = json.load(open(os.path.join(out_dir, "ivfpq.json")))
-    C = np.asarray(meta["centroids"], dtype=np.float64)
-    books = [np.asarray(b, dtype=np.float64) for b in meta["codebooks"]]
-    rows = []
-    for qid, v in sorted(query_vecs.items()):
-        q = np.asarray(v, dtype=np.float64)
-        d2r = np.round(((C - q) ** 2).sum(axis=1), 6)
-        order = np.lexsort((np.arange(len(C)), d2r))
-        lut = _pq_lut(v, books)
-        for li in order[:n_probe]:
-            rows.append((qid, int(li), lut, [float(x) for x in v]))
-    qdf = spark.createDataFrame(
-        rows, "qid string, list_id int, lut array<array<double>>, qvec array<double>"
-    )
-    all_lists = sorted({r[1] for r in rows})
-    codes = spark.read.parquet(os.path.join(out_dir, "codes")).filter(
-        F.col("list_id").isin(all_lists)
-    )
-    scored = codes.join(F.broadcast(qdf), "list_id").select(
-        "qid",
-        "id",
-        "qvec",
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    "codes", "lut", lambda c, row: F.element_at(row, c + 1)
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        ).alias("approx_d2"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("approx_d2"), F.asc("id"))
-    if refine_df is None:
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("qid", "id", "approx_d2")
-            .orderBy("qid", F.asc("approx_d2"), F.asc("id"))
-        )
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * refine_factor)
-        .select("qid", "id", "qvec")
-    )
-    exact = cand.join(
-        refine_df.select(F.col(refine_df.columns[0]).alias("id"),
-                         F.col(refine_df.columns[1]).alias("vec")),
-        "id",
-    ).select(
-        "qid",
-        "id",
-        F.round(
-            _dot(F.col("vec"), F.col("qvec"))
-            / (_norm(F.col("vec")) * _norm(F.col("qvec"))),
-            6,
-        ).alias("cosine"),
-    )
-    w2 = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("id"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("qid", "id", "cosine")
-        .orderBy("qid", F.desc("cosine"), F.asc("id"))
     )
 
 

@@ -578,44 +578,3 @@ def lm_bigram_perplexity(
             F.exp(-F.avg(lp)).alias("ppl"),
         )
     )
-
-
-# HTML entity -> replacement, applied after tag removal (the handful
-# that dominate web text; numeric entities handled by pattern)
-_HTML_ENTITIES = (
-    ("&nbsp;", " "), ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
-    ("&quot;", '"'), ("&#39;", "'"), ("&apos;", "'"),
-)
-
-
-def strip_html(df: DataFrame, html_col: str, out_col: str = "text") -> DataFrame:
-    """Web-corpus text extraction, stage 1: strip markup from raw HTML.
-
-    The trafilatura/jusText-style pipelines start exactly here (public
-    practice for CommonCrawl-scale corpora): drop <script>/<style>
-    payloads entirely (their CONTENT is not text), replace block-level
-    boundaries with newlines so paragraphs survive, remove remaining
-    tags and comments, decode the dominant entities, and collapse
-    whitespace. All regexp_replace chains — whole-stage codegen, one
-    row-local pass, trivially scan-parallel at any corpus size. (A DOM
-    parser is deliberately NOT used: at 100 TB the regex pass is the
-    standard first cut, and malformed real-world HTML breaks strict
-    parsers anyway.)"""
-    c = F.col(html_col)
-    # script/style/comment payloads vanish (non-greedy, dotall via (?s))
-    c = F.regexp_replace(c, r"(?is)<(script|style)\b.*?</\1\s*>", " ")
-    c = F.regexp_replace(c, r"(?s)<!--.*?-->", " ")
-    # block-level closers/openers become newlines (paragraph structure)
-    c = F.regexp_replace(
-        c, r"(?i)</?(p|div|br|li|ul|ol|h[1-6]|tr|table|section|article)\b[^>]*>", "\n"
-    )
-    # any remaining tag
-    c = F.regexp_replace(c, r"(?s)<[^>]+>", " ")
-    for ent, rep in _HTML_ENTITIES:
-        c = F.regexp_replace(c, ent, rep)
-    c = F.regexp_replace(c, r"&#(\d+);", " ")  # other numeric entities
-    # collapse horizontal whitespace; cap blank runs at paragraph breaks
-    c = F.regexp_replace(c, r"[ \t\r\f]+", " ")
-    c = F.regexp_replace(c, r" ?\n ?", "\n")
-    c = F.regexp_replace(c, r"\n{2,}", "\n\n")
-    return df.withColumn(out_col, F.trim(c))

@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 
 from esbulk_spark.config import IndexConfig
 from esbulk_spark.functions.analyzer import tokens_col
+from esbulk_spark.functions.codec import tfnorm
 from esbulk_spark.operators.docids import assign_doc_ids_pinned
 from esbulk_spark.plans.checkpoint import Manifest, StageTimer
 
@@ -188,11 +189,6 @@ def _token_source(spark: SparkSession, docs: DataFrame, cfg: IndexConfig, docs_p
     finally:
         if pinned is not None:
             pinned.unpersist()
-
-
-def _tfnorm(tf: np.ndarray, dl: np.ndarray, k1: float, b: float, avgdl: float) -> np.ndarray:
-    tf = tf.astype(np.float64)
-    return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * (dl.astype(np.float64) / avgdl)))
 
 
 _CHUNK_COLS = [
@@ -433,7 +429,7 @@ def make_chunk_builder(cfg: IndexConfig, avgdl: float, shard_size: int | None = 
                 else:
                     tfs = flat.field("tf").to_numpy(zero_copy_only=False).astype(np.int64)[order]
                     dls = flat.field("dl").to_numpy(zero_copy_only=False).astype(np.int64)[order]
-            tfn = _tfnorm(tfs, dls, k1, b, avgdl)
+            tfn = tfnorm(tfs, dls, k1, b, avgdl)
             yield _encode_batch_groups(
                 group_terms, group_shards, ids, tfs, dls, tfn, starts, ends, cap, bs
             )

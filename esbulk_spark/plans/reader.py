@@ -99,8 +99,16 @@ class IndexReader:
         # pluggable table storage (plans/tableio.py): parquet dirs by
         # default, Iceberg tables when the location/jars select it
         self.io = for_index_dir(index_dir, spark)
-        with open(os.path.join(index_dir, STATS_FILE)) as f:
+        self._reset()
+
+    def _load_stats(self) -> None:
+        """Set ``self.stats`` from the index's stats.json."""
+        with open(os.path.join(self.index_dir, STATS_FILE)) as f:
             self.stats = json.load(f)
+
+    def _reset(self) -> None:
+        """(Re)load the statistics and empty every per-reader cache."""
+        self._load_stats()
         self._tables: dict[str, DataFrame] = {}
         # term -> df cache (None = known-absent): df values are QUERY
         # METADATA (a handful of ints), so they ride into plans as
@@ -128,12 +136,7 @@ class IndexReader:
     def refresh(self) -> None:
         """Invalidate memoized relations + Spark's file-listing caches
         (needed after a stage directory is rebuilt in place)."""
-        self._tables.clear()
-        self._df_cache.clear()
-        self._del_arr = False
-        self._del_bc = None
-        with open(os.path.join(self.index_dir, STATS_FILE)) as f:
-            self.stats = json.load(f)
+        self._reset()
         for name in ("docs", "dictionary", "postings", "positions", "deletes"):
             self.io.refresh(self.spark, name)
 
@@ -1336,7 +1339,7 @@ class IndexReader:
         prunable volume (``total_postings`` across ALL terms the caller
         will decode, minus the seed's own) is under seed_min_prunable."""
         import numpy as np
-        from esbulk_spark.functions.codec import varint_decode, delta_decode
+        from esbulk_spark.functions.codec import decode_ids
 
         if not dfs:
             return None
@@ -1354,10 +1357,7 @@ class IndexReader:
         if total - dfs[rarest] < self.seed_min_prunable:
             return None
         blobs = self.read_postings([rarest], ["blob_ids"])["blob_ids"]
-        parts = [
-            delta_decode(varint_decode(b)).astype(np.int64)
-            for b in blobs.to_pylist()
-        ]
+        parts = [decode_ids(b) for b in blobs.to_pylist()]
         if not parts:
             return None
         return np.unique(np.concatenate(parts))
@@ -1568,7 +1568,7 @@ class IndexReader:
         executor, not per task)."""
         import pandas as pd
         import numpy as np
-        from esbulk_spark.functions.codec import varint_decode, delta_decode
+        from esbulk_spark.functions.codec import decode_chunk, tfnorm
 
         dfs = self._dfs_cached(terms)
         idfs = {t: float(idf_fn(d, self.n_docs)) for t, d in dfs.items()}
@@ -1594,9 +1594,7 @@ class IndexReader:
                     pdf["term"].values, pdf["blob_ids"].values,
                     pdf["blob_tfs"].values, pdf["blob_dls"].values,
                 ):
-                    ids = delta_decode(varint_decode(b_ids)).astype(np.int64)
-                    tfs = varint_decode(b_tfs).astype(np.float64)
-                    dls = varint_decode(b_dls).astype(np.float64)
+                    ids, tfs, dls = decode_chunk(b_ids, b_tfs, b_dls)
                     if flt is not None:
                         if not flt.size:
                             continue
@@ -1611,7 +1609,6 @@ class IndexReader:
                         if not keep.any():
                             continue
                         ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    tfn = (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
                     outs.append(
                         pd.DataFrame(
                             {
@@ -1619,7 +1616,7 @@ class IndexReader:
                                 "doc_id": ids,
                                 "tf": tfs.astype(np.int32),
                                 "dl": dls.astype(np.int32),
-                                "contrib": idfs[term] * tfn,
+                                "contrib": idfs[term] * tfnorm(tfs, dls, k1, b, avgdl),
                             }
                         )
                     )

@@ -113,17 +113,17 @@ class SegmentSetReader(IndexReader):
         self.index_dir = self.segment_dirs[0]
         self.ios = [for_index_dir(d, spark) for d in self.segment_dirs]
         self.io = _MultiIO(self.ios)
+        self._reset()
+
+    # ---- statistics ----
+
+    def _load_stats(self) -> None:
+        """Per-segment stats plus the global stats summed over them."""
         self.seg_stats = []
         for d in self.segment_dirs:
             with open(os.path.join(d, STATS_FILE)) as f:
                 self.seg_stats.append(json.load(f))
         self.stats = self._global_stats(self.seg_stats)
-        self._tables: dict[str, DataFrame] = {}
-        self._df_cache: dict[str, int | None] = {}
-        self._del_arr: object = False
-        self._del_bc = None
-
-    # ---- statistics ----
 
     @staticmethod
     def _global_stats(seg_stats: list[dict]) -> dict:
@@ -230,19 +230,6 @@ class SegmentSetReader(IndexReader):
             g = t.group_by("term").aggregate([(c, "sum") for c in sums])
             t = pa.table({"term": g["term"], **{c: g[f"{c}_sum"] for c in sums}})
         return t
-
-    def refresh(self) -> None:
-        self._tables.clear()
-        self._df_cache.clear()
-        self._del_arr = False
-        self._del_bc = None
-        self.seg_stats = []
-        for d in self.segment_dirs:
-            with open(os.path.join(d, STATS_FILE)) as f:
-                self.seg_stats.append(json.load(f))
-        self.stats = self._global_stats(self.seg_stats)
-        for name in ("docs", "dictionary", "postings", "positions", "deletes"):
-            self.io.refresh(self.spark, name)
 
 
 def _remap_postings(t, shard_off: int, scale: float):

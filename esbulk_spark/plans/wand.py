@@ -31,13 +31,18 @@ vectorized sweep — same bounds, same skips, numpy throughput.
 ``prune=False`` decodes and scores everything — the index-backed
 full-scan oracle; tests assert it matches both the pruned path and the
 raw-corpus DataFrame oracle (plans/score.py).
+
+Chunk decode and the tf-norm come from the kernel in functions/codec.py
+(``decode_chunk``, ``tfnorm``), the same functions the encoder's stored
+bounds and every other numpy reader of the postings use — so the
+"exact <= UB" argument above holds bit for bit, not just up to rounding.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from esbulk_spark.functions.codec import varint_decode, delta_decode
+from esbulk_spark.functions.codec import decode_chunk, tfnorm
 
 RESULT_SCHEMA = "qid string, shard int, doc_id long, score double"
 
@@ -114,14 +119,10 @@ class _TermCursor:
         if hit is not None:
             return hit
         r = self.rows[ri]
-        n = int(r["n"])
-        ids = delta_decode(varint_decode(r["blob_ids"], count=n)).astype(np.int64)
-        tfs = varint_decode(r["blob_tfs"], count=n).astype(np.float64)
-        dls = varint_decode(r["blob_dls"], count=n).astype(np.float64)
-        tfn = (tfs * (self.k1 + 1.0)) / (
-            tfs + self.k1 * (1.0 - self.b + self.b * (dls / self.avgdl))
+        ids, tfs, dls = decode_chunk(
+            r["blob_ids"], r["blob_tfs"], r["blob_dls"], count=int(r["n"])
         )
-        out = (ids, self.idf * tfn)
+        out = (ids, self.idf * tfnorm(tfs, dls, self.k1, self.b, self.avgdl))
         self.chunk_cache[ri] = out
         return out
 
@@ -140,18 +141,13 @@ class _TermCursor:
             out = (ids[s:e], contrib[s:e])
             self.cache[key] = out
             return out
-        n_in = int(self.blk_n[bi])
-        off_ids = r["off_ids"]
-        base = int(r["block_last"][j - 1]) if j > 0 else 0
-        ids = delta_decode(
-            varint_decode(r["blob_ids"], offset=int(off_ids[j]), count=n_in),
-            base=base,
-        ).astype(np.int64)
-        tfs = varint_decode(r["blob_tfs"], offset=int(r["off_tfs"][j]), count=n_in).astype(np.float64)
-        dls = varint_decode(r["blob_dls"], offset=int(r["off_dls"][j]), count=n_in).astype(np.float64)
-        tfn = (tfs * (self.k1 + 1.0)) / (tfs + self.k1 * (1.0 - self.b + self.b * (dls / self.avgdl)))
-        contrib = self.idf * tfn
-        out = (ids, contrib)
+        ids, tfs, dls = decode_chunk(
+            r["blob_ids"], r["blob_tfs"], r["blob_dls"],
+            count=int(self.blk_n[bi]),
+            offsets=(int(r["off_ids"][j]), int(r["off_tfs"][j]), int(r["off_dls"][j])),
+            base=int(r["block_last"][j - 1]) if j > 0 else 0,
+        )
+        out = (ids, self.idf * tfnorm(tfs, dls, self.k1, self.b, self.avgdl))
         self.cache[key] = out
         return out
 

@@ -167,31 +167,3 @@ class StreamingIndexer:
             n_shards=n_shards,
         )
         return merge_segments(self.spark, self.segment_dirs(), cfg)
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Event-time tumbling-window aggregation with late-data watermark —
-    the standard stateful-streaming operator shape (works on both batch
-    and streaming DataFrames; streaming adds state + late-row dropping)."""
-    from pyspark.sql import functions as F
-
-    # watermarks require TIMESTAMP (with zone); NTZ sources are cast —
-    # session timezone is pinned to UTC (session.py) so this is stable
-    events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col, F.window(ts_col, window).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(
-            key_col,
-            F.col("w.start").alias("window_start"),
-            "n",
-            F.round("sum_value", 4).alias("sum_value"),
-        )
-    )

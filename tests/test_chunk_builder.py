@@ -13,7 +13,8 @@ import pandas as pd
 import pyarrow as pa
 
 from esbulk_spark.config import IndexConfig
-from esbulk_spark.plans.build import make_chunk_builder, _tfnorm
+from esbulk_spark.functions.codec import tfnorm
+from esbulk_spark.plans.build import make_chunk_builder
 
 _POST_T = pa.list_(
     pa.struct([("doc_id", pa.int64()), ("tf", pa.int32()), ("dl", pa.int32())])
@@ -58,7 +59,7 @@ def test_group_stats_come_from_own_rows_only():
     aaa = chunks[chunks.term == "aaa"].iloc[0]
     assert int(aaa["chunk_cf"]) == 3  # r1 bug: absorbed bbb's tf=100 rows
     expected_max = float(
-        _tfnorm(np.array([1]), np.array([10]), cfg.k1, cfg.b, avgdl)[0]
+        tfnorm(np.array([1]), np.array([10]), cfg.k1, cfg.b, avgdl)[0]
     )
     assert abs(float(aaa["max_tfnorm"]) - expected_max) < 1e-12
     assert list(aaa["block_max_tfnorm"]) == [float(aaa["max_tfnorm"])]

@@ -103,44 +103,6 @@ def test_lsh_ann_recall_vs_bruteforce(spark, sf_dir):
     assert recall >= 0.5, (recall, exact, got)
 
 
-def test_ivf_ann_recall_vs_bruteforce(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0].embedding]
-    exact = [
-        r.id for r in similarity.cosine_topk(emb, "embedding", "vec_id", q, k=10, exclude_id=0).collect()
-    ]
-    approx = similarity.ivf_ann_topk(
-        emb, "embedding", "vec_id", {"q": q}, k=11, n_lists=8, n_probe=3
-    )
-    got = [r.id for r in approx.collect() if r.id != 0]
-    recall = len(set(exact) & set(got)) / 10
-    assert recall >= 0.5, (recall, exact, got)
-
-
-def test_ivf_materialized_layout_pruned_and_recalls(spark, sf_dir, tmp_path):
-    """ivf_build writes the vectors partitioned by list_id; ivf_search's
-    scan must be PARTITION-PRUNED to the probe lists (the 10^9-vector
-    scale path) and still recall like the in-memory IVF."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = str(tmp_path / "ivf")
-    meta = similarity.ivf_build(emb, "embedding", "vec_id", out, n_lists=8)
-    assert len(meta["centroids"]) == 8
-
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0].embedding]
-    res = similarity.ivf_search(spark, out, {"q": q}, k=11, n_probe=3)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    assert "list_id" in pf
-
-    exact = [
-        r.id for r in similarity.cosine_topk(emb, "embedding", "vec_id", q, k=10, exclude_id=0).collect()
-    ]
-    got = [r.id for r in res.collect() if r.id != 0]
-    recall = len(set(exact) & set(got)) / 10
-    assert recall >= 0.5, (recall, exact, got)
-
-
 def test_cosine_neardup_pairs_exact_within_candidates(spark, sf_dir):
     """Near-dup pairs: every reported pair's cosine is exact (matches
     brute force), pairs are (a < b)-canonical, and the LSH candidate
@@ -214,41 +176,6 @@ def test_media_real_header_dims(spark):
     assert got[2] == ("jpeg", 800, 600)
 
 
-def test_resize_plumbing_geometry(spark):
-    """resize target geometry is aspect-preserving from REAL header
-    dims; blob is the marked placeholder (plumbing contract)."""
-    import struct
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13) + b"IHDR"
-        + struct.pack(">II", 1024, 512) + b"\x08\x02\x00\x00\x00" + b"\x00" * 4
-    )
-    df = spark.createDataFrame([(7, png)], "id long, blob binary")
-    r = multimodal.resize_images(df, "blob", "id", max_side=256).collect()[0]
-    assert (r.src_width, r.src_height) == (1024, 512)
-    assert (r.width, r.height) == (256, 128)  # aspect preserved
-    assert r.kind == "png+fake-pixels"
-    assert bytes(r.blob) == png[:4096]
-
-
-def test_embed_media_deterministic_fixed_dim(spark):
-    df = spark.createDataFrame(
-        [(0, b"abc"), (1, b"abc"), (2, b"xyz")], "id long, blob binary"
-    )
-    rows = {r.id: list(r.embedding) for r in multimodal.embed_media(df, "blob", "id", dim=16).collect()}
-    assert len(rows[0]) == 16
-    assert rows[0] == rows[1]          # same bytes -> same vector
-    assert rows[0] != rows[2]
-    assert all(-1.0 <= x < 1.0 for r in rows.values() for x in r)
-    # plugs into the similarity operators end-to-end
-    emb_df = spark.createDataFrame(
-        [(k, v) for k, v in rows.items()], "vec_id long, embedding array<float>"
-    )
-    top = similarity.cosine_topk(emb_df, "embedding", "vec_id", rows[0], k=2, exclude_id=0).collect()
-    assert top[0].id == 1 and abs(top[0].cosine - 1.0) < 1e-6
-
-
 def test_winnowing_fingerprints_properties(spark):
     """Winnowing invariants: deterministic; a contained substring shares
     fingerprints with its container (the partial-overlap guarantee);
@@ -293,27 +220,6 @@ def test_ivf_deterministic_entry_matches_duckdb_oracle(spark):
     want = [tuple(r) for r in con.execute(_sql_ann_ivf(sf)).fetchall()]
     assert len(got) == 30  # 3 queries x top-10
     assert got == want
-
-
-def test_resize_real_pixels_with_pil(spark):
-    """When PIL is present the resize branch actually decodes and
-    re-encodes pixels (skipped in containers without PIL; the
-    fallback branch is covered by test_resize_plumbing_geometry)."""
-    from esbulk_spark.operators.multimodal import _PILImage
-
-    if _PILImage is None:
-        pytest.skip("PIL not installed; deterministic fallback in use")
-    import io
-
-    im = _PILImage.new("RGB", (100, 60), (10, 20, 30))
-    enc = io.BytesIO()
-    im.save(enc, format="PNG")
-    df = spark.createDataFrame([(1, enc.getvalue())], "id long, blob binary")
-    r = multimodal.resize_images(df, "blob", "id", max_side=50).collect()[0]
-    assert r.kind == "png+resized"
-    assert (r.width, r.height) == (50, 30)
-    back = _PILImage.open(io.BytesIO(bytes(r.blob)))
-    assert back.size == (50, 30)
 
 
 def test_jaccard_hot_shingle_guard_contract(spark):
@@ -435,61 +341,6 @@ def test_lang_id_expanded_latin_languages(spark):
     got = {r.id: r.pred_lang for r in textstats.lang_id(df, "text", "id").collect()}
     want = {0: "en", 1: "de", 2: "fr", 3: "es", 4: "pt", 5: "it", 6: "nl"}
     assert got == want, got
-
-
-def test_embed_media_callable_encoder_plugs_in(spark):
-    """VERDICT r3 item 5: the pluggable encoder path (the onnxruntime /
-    model-server integration point) — a batch callable replaces the
-    deterministic fake; plumbing (schema, ids, dim) is identical."""
-    import numpy as np
-    from esbulk_spark.operators import multimodal
-
-    df = spark.createDataFrame(
-        [(0, bytearray(b"aaaa")), (1, bytearray(b"bbbb")), (2, None)],
-        "id long, blob binary",
-    )
-
-    def mean_byte_encoder(bufs):
-        return np.array(
-            [[(sum(b) / len(b) / 255.0) if b else 0.0] * 4 for b in bufs],
-            dtype=np.float32,
-        )
-
-    got = {
-        r.id: list(r.embedding)
-        for r in multimodal.embed_media(
-            df, "blob", "id", dim=4, encoder=mean_byte_encoder
-        ).collect()
-    }
-    assert set(got) == {0, 1, 2}
-    assert all(len(v) == 4 for v in got.values())
-    assert got[2] == [0.0] * 4
-    assert abs(got[0][0] - ord("a") / 255.0) < 1e-6
-    # fallback output is UNCHANGED by the new parameter (pins the graded
-    # dedup_embedding_cosine entry)
-    base = {
-        r.id: list(r.embedding)
-        for r in multimodal.embed_media(df, "blob", "id", dim=4).collect()
-    }
-    assert base != got and all(len(v) == 4 for v in base.values())
-
-
-def test_embed_media_torch_probe(spark):
-    """Torch branch: real batched tensor forward pass when torch ships
-    (skipped in containers without it — the PIL-probe pattern); a clear
-    error, not a crash, when requested without torch."""
-    import pytest
-    from esbulk_spark.operators import multimodal
-
-    df = spark.createDataFrame([(0, bytearray(b"xyz"))], "id long, blob binary")
-    if multimodal._torch is None:
-        with pytest.raises(RuntimeError, match="torch"):
-            multimodal.embed_media(df, "blob", "id", encoder="torch")
-        pytest.skip("torch not installed: fallback error path verified")
-    out = multimodal.embed_media(df, "blob", "id", dim=8, encoder="torch").collect()
-    assert len(out) == 1 and len(out[0].embedding) == 8
-    out2 = multimodal.embed_media(df, "blob", "id", dim=8, encoder="torch").collect()
-    assert list(out[0].embedding) == list(out2[0].embedding)  # seeded -> deterministic
 
 
 def test_pack_sequences(spark):
@@ -887,38 +738,6 @@ def test_pq_adc_scores_and_recall(spark, sf_dir):
         assert r.approx_d2 == want[r.id], r.id
 
 
-def test_pq_training_collect_is_capped(spark, sf_dir, tmp_path, monkeypatch):
-    """The default codebook-training path must never collect more than
-    PQ_TRAIN_CAP rows to the driver, train_fraction set or not — the
-    library default has to survive a 10^9-vector corpus."""
-    from esbulk_spark.operators import similarity as sim
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assert emb.count() > 50  # the cap below must actually bind
-    seen = {}
-    real = sim.pq_train
-
-    def spy(X, **kw):
-        seen["n"] = len(X)
-        return real(X, **kw)
-
-    monkeypatch.setattr(sim, "pq_train", spy)
-    monkeypatch.setattr(sim, "PQ_TRAIN_CAP", 50)
-    sim.ivfpq_build(
-        emb, "embedding", "vec_id", str(tmp_path / "pq"),
-        n_lists=4, m=4, ksub=8,
-    )
-    assert seen["n"] <= 50
-    # an explicit train_fraction is ALSO capped (fraction of 10^9 rows
-    # is still driver OOM)
-    seen.clear()
-    sim.ivfpq_build(
-        emb, "embedding", "vec_id", str(tmp_path / "pq2"),
-        n_lists=4, m=4, ksub=8, train_fraction=0.9,
-    )
-    assert seen["n"] <= 50
-
-
 def test_pq_adc_recall_on_clustered_vectors(spark, sf_dir):
     """Recall on PLANTED-neighbor data: 50 cluster centers x 10 noisy
     variants. Uniform-random vectors are the PQ worst case (16-bit
@@ -1012,56 +831,6 @@ def test_rrf_fuse_hand_example(spark):
     assert set(order[:2]) == {1, 3}
 
 
-def test_ivfpq_materialized_layout_pruned_and_parity(spark, sf_dir, tmp_path):
-    """The materialized IVF-PQ codes table must be PARTITION-PRUNED to
-    the probe lists, its ADC results must equal the in-memory
-    ivfpq_topk under pinned centroids/codebooks, and the refine step
-    must return exact cosines for its winners."""
-    import numpy as np
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    rows = sorted(emb.collect(), key=lambda r: r.vec_id)
-    X = np.asarray([[float(x) for x in r.embedding] for r in rows])
-    cents = similarity.deterministic_kmeans(X, k=8, seed=42, iters=5)
-    books = similarity.pq_train(X, m=4, ksub=16, seed=42)
-    out = str(tmp_path / "ivfpq")
-    meta = similarity.ivfpq_build(
-        emb, "embedding", "vec_id", out, centroids=cents, codebooks=books
-    )
-    assert meta["n_lists"] == 8 and meta["m"] == 4
-
-    q = [float(x) for x in rows[2].embedding]
-    res = similarity.ivfpq_search(spark, out, {"q": q}, k=10, n_probe=3)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    assert "list_id" in pf
-
-    got = [(r.id, r.approx_d2) for r in res.collect()]
-    want = [
-        (r.id, r.approx_d2)
-        for r in similarity.ivfpq_topk(
-            emb, "embedding", "vec_id", {"q": q}, cents, books, k=10, n_probe=3
-        ).collect()
-    ]
-    assert got == want
-
-    # refine: exact cosine re-rank of the ADC candidate pool
-    ref = similarity.ivfpq_search(
-        spark, out, {"q": q}, k=5, n_probe=3,
-        refine_df=emb.select("vec_id", "embedding"), refine_factor=4,
-    ).collect()
-    assert len(ref) == 5
-    exact = {
-        r.id: r.cosine
-        for r in similarity.cosine_topk(
-            emb, "embedding", "vec_id", q, k=500
-        ).collect()
-    }
-    for r in ref:
-        assert r.cosine == exact[r.id], r.id
-
-
 def test_av_meta_real_headers(spark):
     """WAV/MP4 metadata from REAL header parsing: hand-built minimal
     containers with known parameters."""
@@ -1139,10 +908,9 @@ def test_sq8_codes_and_recall(spark, sf_dir):
     assert len(exact10 & got10) / 10 >= 0.8, (exact10, got10)
 
 
-def test_knn_filtered_prefilter_contract(spark, sf_dir, tmp_path):
+def test_knn_filtered_prefilter_contract(spark, sf_dir):
     """Filtered kNN (ES knn `filter`): winners all pass the predicate,
-    equal the filter-then-rank oracle, and the IVF path pre-filters
-    inside the probed lists (metadata carried via meta_cols)."""
+    and equal the filter-then-rank oracle."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0].embedding]
 
@@ -1156,19 +924,6 @@ def test_knn_filtered_prefilter_contract(spark, sf_dir, tmp_path):
         emb.filter("label = 1"), "embedding", "vec_id", q, k=10, exclude_id=0
     ).collect()
     assert [(r.id, r.cosine) for r in got] == [(r.id, r.cosine) for r in oracle]
-
-    out = str(tmp_path / "ivf_f")
-    similarity.ivf_build(
-        emb, "embedding", "vec_id", out, n_lists=8, meta_cols=["label"]
-    )
-    res = similarity.ivf_search(
-        spark, out, {"q": q}, k=10, n_probe=3, where="label = 1"
-    )
-    rows = res.collect()
-    assert rows and all(labels[r.id] == 1 for r in rows)
-    # the filter composes with (does not replace) the partition pruning
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "label" in plan
 
 
 def test_bpe_train_matches_local_reference(spark, corpus):
@@ -1504,33 +1259,6 @@ def test_geo_bounding_box_inclusive(spark):
     )
     got = geo_bounding_box(df, "lat", "lon", (15.0, 20.0), (10.0, 30.0))
     assert sorted(map(tuple, got.collect())) == [(10.0, 20.0), (15.0, 25.0)]
-
-
-def test_strip_html_extracts_text(spark):
-    from esbulk_spark.operators.textstats import strip_html
-
-    html = (
-        "<html><head><style>body {color: red}</style>"
-        "<script>var x = '<p>not text</p>';</script></head>"
-        "<body><!-- nav --><h1>Title &amp; More</h1>"
-        "<p>First&nbsp;paragraph.</p><p>Second &lt;b&gt;</p>"
-        "<div>List:<ul><li>one</li><li>two</li></ul></div></body></html>"
-    )
-    df = spark.createDataFrame([(1, html), (2, "plain, no markup")],
-                               ["doc_id", "raw"])
-    got = {r["doc_id"]: r["text"]
-           for r in strip_html(df, "raw").collect()}
-    t = got[1]
-    assert "Title & More" in t
-    assert "First paragraph." in t
-    assert "Second <b>" in t
-    assert "one" in t and "two" in t
-    # script/style payloads and comments are gone
-    assert "color" not in t and "not text" not in t and "nav" not in t
-    # paragraph structure survived as line breaks
-    assert t.index("Title") < t.index("First") < t.index("Second")
-    assert "\n" in t
-    assert got[2] == "plain, no markup"
 
 
 def test_phrase_suggest_prebuilt_lm_identical(spark, tmp_path):

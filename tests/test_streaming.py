@@ -1,108 +1,15 @@
 """Structured Streaming: incremental segments + compaction must be
-rank-identical to a single-pass batch build over the same documents;
-windowed aggregation with watermark runs on a real stream."""
+rank-identical to a single-pass batch build over the same documents."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from esbulk_spark.config import IndexConfig
 from esbulk_spark.corpus import CORPUS_SCHEMA, synth_corpus
 from esbulk_spark.plans.build import build_index
 from esbulk_spark.plans.reader import IndexReader
-from esbulk_spark.streaming.incremental import StreamingIndexer, windowed_event_counts
-
-
-def test_stateful_streaming_sessionize_matches_batch(spark, tmp_path, sf_dir):
-    """applyInPandasWithState sessionizer: closed sessions emitted over
-    in-order micro-batches must equal the BATCH sessionization of the
-    same events, minus each user's trailing (still-open) session."""
-    import shutil
-
-    from esbulk_spark.streaming.sessions import sessionize_stream
-
-    base = str(tmp_path)
-    events = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("user_id") < 20)
-        .select("user_id", "event_id", "ts", "value")
-        .orderBy("ts", "event_id")
-        .cache()
-    )
-    rows = events.collect()
-    n = len(rows)
-    src = f"{base}/sess_incoming"
-    os.makedirs(src)
-    # three time-ordered arrival waves -> three micro-batches
-    cut1, cut2 = n // 3, 2 * n // 3
-    for w, part_rows in enumerate([rows[:cut1], rows[cut1:cut2], rows[cut2:]]):
-        spark.createDataFrame(part_rows, events.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/sw{w}")
-        for f in os.listdir(f"{base}/sw{w}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/sw{w}/{f}", f"{src}/w{w}.parquet")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out_dir = f"{base}/sessions_out"
-    q = (
-        sessionize_stream(stream, gap_sec=1800)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{base}/sess_ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events, round(r.sum_value, 4))
-        for r in spark.read.parquet(out_dir).collect()
-    }
-
-    # batch truth: same gap rule; drop each user's LAST session (open)
-    from pyspark.sql.window import Window
-
-    sec = F.col("ts").cast("timestamp").cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = (
-        events.withColumn("sec", sec)
-        .withColumn(
-            "new_sess",
-            F.when(
-                F.lag("sec").over(w).isNull()
-                | ((F.col("sec") - F.lag("sec").over(w)) > 1800),
-                1,
-            ).otherwise(0),
-        )
-        .withColumn(
-            "sid",
-            F.sum("new_sess").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .groupBy("user_id", "sid")
-        .agg(
-            F.min("sec").alias("session_start"),
-            F.max("sec").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-    )
-    last_sid = sess.groupBy("user_id").agg(F.max("sid").alias("last_sid"))
-    closed = sess.join(last_sid, "user_id").filter(F.col("sid") != F.col("last_sid"))
-    want = {
-        (r.user_id, r.session_start, r.session_end, r.n_events, round(r.sum_value, 4))
-        for r in closed.collect()
-    }
-    assert got == want
-    assert got, "expected some closed sessions"
-    events.unpersist()
+from esbulk_spark.streaming.incremental import StreamingIndexer
 
 
 def test_incremental_segments_then_compact(spark, tmp_path):
@@ -186,37 +93,6 @@ def test_streaming_batch_replay_is_idempotent(spark, tmp_path):
     indexer.process_batch(corpus, 0)  # checkpoint-recovery replay
     assert indexer._state() == st0
     assert indexer._state()["next_doc_id"] == 20
-
-
-def test_windowed_counts_streaming_matches_batch(spark, sf_dir, tmp_path):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = {
-        (r.event_type, r.window_start): (r.n, r.sum_value)
-        for r in windowed_event_counts(events).collect()
-    }
-
-    # the file streaming source wants a directory
-    import shutil
-
-    src = tmp_path / "events_src"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
-    stream = spark.readStream.schema(events.schema).parquet(str(src))
-    out = windowed_event_counts(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.event_type, r.window_start): (r.n, r.sum_value)
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    assert got == batch
 
 
 def test_incremental_positions_phrase_on_compacted(spark, tmp_path):

@@ -56,12 +56,43 @@ def test_reader_uses_tableio(spark, index_dir):
     assert r.io.exists("postings") and r.io.exists("dictionary")
 
 
+def test_iceberg_read_terms_filters_and_converts(spark, monkeypatch):
+    """IcebergIO.read_terms over a stub of the catalog read it wraps:
+    bucket and term filters apply, ``bucket`` is dropped unless asked
+    for, and the result is the Arrow table ``toArrow`` returns."""
+    import pyarrow as pa
+
+    table = spark.createDataFrame(
+        [("a", 1, 5), ("b", 1, 6), ("c", 2, 7), ("a", 3, 8)],
+        "term string, bucket int, df long",
+    )
+    seen = []
+
+    def fake_read(self, _spark, name):
+        seen.append(self._ident(name))
+        return table
+
+    monkeypatch.setattr(IcebergIO, "read", fake_read)
+    io = IcebergIO("cat", "db", "idx")
+
+    got = io.read_terms("dictionary", buckets=[1, 2], terms=["a", "c"])
+    assert isinstance(got, pa.Table)
+    assert got.column_names == ["term", "df"]
+    assert sorted(zip(got["term"].to_pylist(), got["df"].to_pylist())) == [
+        ("a", 5), ("c", 7),
+    ]
+    got = io.read_terms("dictionary", terms=["a"], columns=["df", "bucket"])
+    assert got.column_names == ["df", "bucket"]
+    assert sorted(got["df"].to_pylist()) == [5, 8]
+    assert io.read_terms("dictionary").num_rows == 4
+    assert seen == ["cat.db.idx_dictionary"] * 3
+
+
 def test_iceberg_backend_roundtrip(spark, tmp_path):
-    """Runs only where the Iceberg runtime ships (the PIL-probe pattern,
-    operators/multimodal.py:21 — skip is evaluated against the live
-    session's classpath, mirroring the torch/PIL skips): createOrReplace
-    snapshot commit + catalog read-back through the same interface the
-    engine uses."""
+    """Runs only where the Iceberg runtime ships (the skip is evaluated
+    against the live session's classpath): createOrReplace snapshot
+    commit + catalog read-back through the same interface the engine
+    uses."""
     if not iceberg_available(spark):
         # Vendoring iceberg-spark-runtime (public, Maven Central) was
         # attempted and is impossible here: the sandbox has no network

@@ -1,0 +1,75 @@
+"""List esbulk_spark top-level functions and classes that no served entry
+point reaches.
+
+The served entry points are the graded entries (entry_queries.py,
+entry_aggs.py), the CLI, bench.py, __spark_entry__.py and perfbench/.
+A definition is reached when its name appears as an ast Name, Attribute
+or import alias in a served file, in module-level code of any library
+module, or in the body of a definition that is itself reached. Names
+inside docstrings and comments do not count. Tests are not served, so a
+definition that only tests call is listed.
+
+    python tools/served_scan.py [repo_root]
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+import sys
+
+SERVED = [
+    "esbulk_spark/entry_queries.py", "esbulk_spark/entry_aggs.py",
+    "esbulk_spark/cli.py", "bench.py", "__spark_entry__.py",
+]
+
+
+def _names(node) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.split(".")[-1])
+    return out
+
+
+def main() -> None:
+    os.chdir(sys.argv[1] if len(sys.argv) > 1 else ".")
+    served = set(SERVED + glob.glob("perfbench/*.py"))
+    lib = set(glob.glob("esbulk_spark/**/*.py", recursive=True))
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: set[str] = set()
+    for path in sorted(lib | served):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for st in tree.body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(st.name, []).append((path, st))
+                if path in served:
+                    roots |= _names(st)
+            else:
+                roots |= _names(st)  # module-level code runs on import
+    reached: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for _, node in defs.get(name, []):
+                todo.extend(_names(node) - reached)
+    dead = sorted(
+        (path, node.lineno, name, node.end_lineno - node.lineno + 1)
+        for name, found in defs.items() if name not in reached
+        for path, node in found if path in lib and path not in served
+    )
+    for path, line, name, n in dead:
+        print(f"{path}:{line} {name} ({n} lines)")
+    print(f"{len(dead)} unreached definitions, {sum(d[3] for d in dead)} lines")
+
+
+if __name__ == "__main__":
+    main()

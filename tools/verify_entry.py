@@ -62,9 +62,11 @@ def main():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
+    ran = 0
     for name, fn in qs.items():
         if name_filter and name_filter not in name:
             continue
+        ran += 1
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -103,7 +105,11 @@ def main():
                 diff_d = [x for x in md if x not in set(ms)][:3]
                 print(f"    spark-only: {diff_s}")
                 print(f"    duck-only:  {diff_d}")
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} ok; failures: {failures}")
+    scope = (
+        f" (filter {name_filter!r}: {ran} of {len(qs)} entries)"
+        if name_filter else ""
+    )
+    print(f"\n{ran - len(failures)}/{ran} ok{scope}; failures: {failures}")
     spark.stop()
     sys.exit(1 if failures else 0)
 
