@@ -409,10 +409,11 @@ _BATCH_QUERIES = {"q0": FLAGSHIP_QUERY, "q1": QUERY_FULLSCAN, "q2": QUERY_AND}
 
 
 def q_bm25_batch(spark, sf_dir):
-    """B9 batch path: search_many scores ALL queries in ONE Spark job
-    ((qid, term, df) broadcast onto the pruned postings scan, per-
-    (qid, shard) scorer, windowed per-qid top-k). Oracle = UNION ALL of
-    the per-query DuckDB full scans."""
+    """B9 batch path: search_many scores ALL queries in one distributed
+    plan ((qid, term, df) broadcast onto the pruned postings scan, per-
+    (qid, shard) scorer), then merges each qid's per-shard winners on
+    the driver into a local (qid, doc_id, score) relation. Oracle =
+    UNION ALL of the per-query DuckDB full scans."""
     r = _index_for(spark, sf_dir)
     return r.search_many(_BATCH_QUERIES, k=10, round_to=4).orderBy(
         "qid", F.desc("score"), F.asc("doc_id")

@@ -21,7 +21,9 @@ IndexReader's query families are adapters over three shared pieces:
     <= n_shards * k per-shard winners merge on the driver. search,
     search_rows, search_response, the expansion families (prefix,
     fuzzy, wildcard, regexp, stemmed) and more_like_this all pass
-    through it; search_many is the batch plan, one job for all queries.
+    through it. search_many runs every query of a batch through the
+    distributed scorer in one plan and merges each query's winners on
+    the driver with the same merge.
   * the positional slot core for phrase, sloppy phrase, span_near,
     span_first and phrase_prefix: one pruned positions scan
     (``_positions``, the only has-positions guard), slots joined rarest
@@ -30,7 +32,9 @@ IndexReader's query families are adapters over three shared pieces:
 
 Families that need the full match set (bool, AND, aggs, count, explain,
 the other similarities) decode the pruned postings with
-``_decode_to_rows``.
+``_decode_to_rows``. Every DataFrame built from driver-side rows (a
+result, an empty result, the batch's query pairs) is an Arrow-backed
+local relation (``_local_df``), so collecting it runs no Spark job.
 """
 
 from __future__ import annotations
@@ -47,6 +51,17 @@ from esbulk_spark.functions.analyzer import analyze_query, tokenize_text
 from esbulk_spark.plans.build import STATS_FILE
 from esbulk_spark.plans.wand import RESULT_SCHEMA, idf as idf_fn, make_group_scorer
 from esbulk_spark.plans.score import topk_deterministic
+
+# the postings columns score_group reads: the distributed scorer projects
+# to these before its (qid, shard) exchange
+_SCORED_COLS = (
+    "shard", "term", "min_doc", "n", "blob_ids", "blob_tfs", "blob_dls",
+    "block_last", "block_max_tfnorm", "off_ids", "off_tfs", "off_dls",
+)
+
+# Spark DDL type -> Arrow type, for the schemas _local_df builds
+_ARROW_TYPES = {"string": "string", "int": "int32", "long": "int64",
+                "double": "float64"}
 
 
 def fuzziness_edits(term: str, fuzziness: int | str) -> int:
@@ -284,8 +299,12 @@ class IndexReader:
         adds ~2x wall time to sub-second search jobs — it materializes
         each exchange before planning the next stage AND coalesces the
         tiny scorer shuffle down to fewer tasks than there are shards.
-        Measured on a 200k-doc index: p50 1.7s -> 0.94s. Use around
-        latency-sensitive search()/search_many() calls."""
+        Measured on a 200k-doc index (32 cores): p50 1.7s -> 0.94s. At
+        small scale it is the other way round: on a 5k-doc, one-shard
+        index (4-core VM, local[4], 32 shuffle partitions) a 20-query
+        search_many took 275 ms with AQE and 735 ms without it, because
+        AQE coalesces the 32 scorer partitions into a few tasks. Measure
+        before using it around latency-sensitive distributed calls."""
         key = "spark.sql.adaptive.enabled"
         prev = self.spark.conf.get(key)
         self.spark.conf.set(key, "false")
@@ -311,7 +330,7 @@ class IndexReader:
         if not dfs:
             return None
         present = sorted(dfs)
-        posts = self._pruned_postings(present)
+        posts = self._pruned_postings(present).select(*_SCORED_COLS)
         if len(analyzed) == 1:
             # single query: qid and the df map are literals — no joins
             qid = next(iter(analyzed))
@@ -323,8 +342,9 @@ class IndexReader:
             )
         else:
             # (qid, term, df) triples: tiny, ONE broadcast onto the
-            # pruned postings scan
-            pairs = self.spark.createDataFrame(
+            # pruned postings scan; a local relation, so the broadcast
+            # runs no job of its own
+            pairs = self._local_df(
                 [
                     (qid, t, dfs[t])
                     for qid, ts in analyzed.items()
@@ -347,6 +367,19 @@ class IndexReader:
         )
         return tagged.groupBy("qid", "shard").applyInPandas(scorer, RESULT_SCHEMA)
 
+    def _shard_candidates(
+        self, analyzed: dict[str, list[str]], k: int, prune: bool
+    ) -> list[tuple[str, int, int, float]]:
+        """(qid, shard, doc_id, score) per-(qid, shard) top-k of the
+        distributed scorer, collected to the driver: at most
+        len(analyzed) * n_shards * k rows, which _merge_topk merges."""
+        per_shard = self._per_shard_scores(analyzed, k, prune)
+        if per_shard is None:
+            return []
+        return [
+            (r.qid, r.shard, r.doc_id, r.score) for r in per_shard.collect()
+        ]
+
     def search_many(
         self,
         queries: dict[str, str],
@@ -354,30 +387,29 @@ class IndexReader:
         prune: bool = True,
         round_to: int | None = None,
     ) -> DataFrame:
-        """Batch top-k: ONE Spark job for all queries.
+        """Batch top-k -> (qid, doc_id, score): per-qid top-k, ordered by
+        qid, then (score desc, doc_id asc), the score rounded first when
+        round_to is set.
 
-        The per-term df (for idf) comes from the driver-side dictionary
-        read and rides in as a broadcast (qid, term, df) table; the
-        scorer computes idf inline. Returns (qid, doc_id, score)
-        with per-qid top-k, ordered within qid by (score desc, doc_id asc)."""
+        One distributed plan scores every query: the (qid, term, df)
+        pairs broadcast onto the bucket+term-pruned postings scan and
+        the block-max scorer runs per (qid, shard). Its <= n_queries *
+        n_shards * k winners are collected and merged per qid on the
+        driver by the same _merge_topk search_rows uses. The Spark work
+        runs when search_many is called; the result is a local
+        relation, so collecting it runs no further job."""
         analyzed = {qid: analyze_query(q) for qid, q in queries.items()}
-        per_shard = self._per_shard_scores(analyzed, k, prune)
-        if per_shard is None:
-            # NOT RESULT_SCHEMA: that carries the internal `shard` column
-            # the scorer emits — the public contract (and the non-empty
-            # branch below) is (qid, doc_id, score)
-            return self.spark.createDataFrame(
-                [], "qid string, doc_id long, score double"
-            )
-        # global merge: per qid, at most n_shards * k tiny rows
-        if round_to is not None:
-            per_shard = per_shard.withColumn("score", F.round("score", round_to))
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            per_shard.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score")
-            .orderBy("qid", F.desc("score"), F.asc("doc_id"))
+        by_qid: dict[str, list[tuple[int, int, float]]] = {}
+        for qid, *cand in self._shard_candidates(analyzed, k, prune):
+            by_qid.setdefault(qid, []).append(tuple(cand))
+        # str order is code-point order: Spark's binary string order
+        return self._local_df(
+            [
+                (qid, d, sc)
+                for qid in sorted(by_qid)
+                for d, sc in self._merge_topk(by_qid[qid], k, round_to)
+            ],
+            "qid string, doc_id long, score double",
         )
 
     # single-query driver-scoring gate: when the query's total postings
@@ -430,11 +462,7 @@ class IndexReader:
             return []
         if sum(dfs.values()) <= self.driver_score_max:
             return self._driver_candidates(dfs, k, prune)
-        per_shard = self._per_shard_scores({"q": sorted(dfs)}, k, prune)
-        return [
-            (r.shard, r.doc_id, r.score)
-            for r in per_shard.select("shard", "doc_id", "score").collect()
-        ]
+        return [c[1:] for c in self._shard_candidates({"q": sorted(dfs)}, k, prune)]
 
     @staticmethod
     def _merge_topk(
@@ -467,8 +495,25 @@ class IndexReader:
         dfs = self._dfs_cached(analyze_query(query))
         return self._merge_topk(self._topk_candidates(dfs, k, prune), k, round_to)
 
+    def _local_df(self, rows: list[tuple], schema: str) -> DataFrame:
+        """``rows`` under the DDL ``schema`` as an Arrow-backed local
+        relation. The rows live in the plan, so collecting or
+        broadcasting it runs no Spark job; a Python list would be
+        parallelized into an RDD that costs a job at every use. Every
+        DataFrame the reader builds from driver-side rows comes from
+        here."""
+        import pyarrow as pa
+
+        names, types = zip(*(f.split() for f in schema.split(",")))
+        cols = list(zip(*rows)) if rows else [()] * len(names)
+        return self.spark.createDataFrame(pa.table(
+            [pa.array(c, pa.type_for_alias(_ARROW_TYPES[t]))
+             for c, t in zip(cols, types)],
+            names=list(names),
+        ))
+
     def _rows_df(self, rows: list[tuple[int, float]]) -> DataFrame:
-        return self.spark.createDataFrame(rows, "doc_id long, score double")
+        return self._local_df(rows, "doc_id long, score double")
 
     def search(
         self,
@@ -882,7 +927,7 @@ class IndexReader:
                 if cand not in expanded:
                     expanded.append(cand)
         if not expanded:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._rows_df([])
         return self.search(" ".join(expanded), k=k, round_to=round_to)
 
     # ---- positional families: one positions scan, one slot core ----
@@ -913,9 +958,7 @@ class IndexReader:
         return float(sum(idf_fn(dfs[t], self.n_docs) for t in terms))
 
     def _no_match(self, freq_col: str) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], f"doc_id long, {freq_col} int, score double"
-        )
+        return self._local_df([], f"doc_id long, {freq_col} int, score double")
 
     @staticmethod
     def _join_slots(
@@ -1191,20 +1234,16 @@ class IndexReader:
         window keep their ORIGINAL unweighted score (ES backfill
         semantics). Both passes publish rounded scores when ``round_to``
         is set, so the window cut and the final order are cross-engine
-        stable. The first pass runs ONCE: its collected top rows rebuild
-        as a local DataFrame instead of re-executing the scoring plan."""
-        rows = self.search(
-            query, k=max(k, window_size), round_to=round_to
-        ).collect()
+        stable. The first pass runs ONCE: its driver-side top rows
+        become a local DataFrame instead of re-executing the scoring
+        plan."""
+        rows = self.search_rows(query, k=max(k, window_size), round_to=round_to)
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._rows_df([])
         win_rows = rows[:window_size]
-        win = self.spark.createDataFrame(
-            [(int(r["doc_id"]), float(r["score"])) for r in win_rows],
-            "doc_id long, score double",
-        )
+        win = self._rows_df(win_rows)
         ph = self._phrase_scores(
-            rescore_query, doc_ids=[int(r["doc_id"]) for r in win_rows]
+            rescore_query, doc_ids=[d for d, _ in win_rows]
         ).select("doc_id", F.col("score").alias("__ph"))
         if round_to is not None:
             ph = ph.withColumn("__ph", F.round("__ph", round_to))
@@ -1221,12 +1260,7 @@ class IndexReader:
         )
         tail = rows[window_size:]
         if tail:  # beyond-window hits: original scores, unmodified (ES)
-            combined = combined.unionByName(
-                self.spark.createDataFrame(
-                    [(int(r["doc_id"]), float(r["score"])) for r in tail],
-                    "doc_id long, score double",
-                )
-            )
+            combined = combined.unionByName(self._rows_df(tail))
         return topk_deterministic(combined, k, round_to)
 
     def function_score(
@@ -1418,7 +1452,7 @@ class IndexReader:
         terms = analyze_query(query)
         dfs = self._dfs_cached(terms)
         if not terms or len(dfs) < len(terms):
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._rows_df([])
         seed = self._seed_doc_ids(dfs) if len(dfs) >= 2 else None
         scored = self._decode_to_rows(terms, doc_filter=seed)
         agg = scored.groupBy("doc_id").agg(
@@ -1460,7 +1494,7 @@ class IndexReader:
         should_t = sorted({t for q in should for t in analyze_query(q)})
         not_t = sorted({t for q in must_not for t in analyze_query(q)})
         scored_terms = sorted(set(must_t) | set(should_t))
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
+        empty = self._rows_df([])
         if not scored_terms:
             return empty
         dfs = self._dfs_cached(scored_terms)
@@ -1679,7 +1713,7 @@ class IndexReader:
         terms = analyze_query(query)
         dfs = self._dfs_cached(terms)
         if not dfs:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._rows_df([])
         out = (
             self._decode_to_rows(sorted(dfs))
             .groupBy("doc_id")
@@ -1726,7 +1760,7 @@ class IndexReader:
         terms = analyze_query(query)
         stats = self.lookup_term_stats(sorted(set(terms)))
         if not stats:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._rows_df([])
         rows = self._decode_to_rows(sorted(stats))
         n = float(self.n_docs)
         if sim == "classic":
@@ -1873,7 +1907,7 @@ class IndexReader:
         no collect."""
         terms = analyze_query(query)
         dfs = self._dfs_cached(terms)
-        empty = self.spark.createDataFrame([], f"key string, doc_count long")
+        empty = self._local_df([], "key string, doc_count long")
         if not dfs:
             return empty
         matched = (
@@ -1976,11 +2010,9 @@ class IndexReader:
         organic = self.search(query, k=k + len(ids)).filter(
             ~F.col("doc_id").isin(ids)
         )
-        spark = self.spark
         top = float(1 << 30)
-        pinned = spark.createDataFrame(
-            [(int(d), top - i) for i, d in enumerate(ids)],
-            "doc_id long, score double",
+        pinned = self._rows_df(
+            [(int(d), top - i) for i, d in enumerate(ids)]
         ).join(self.docs().select("doc_id"), ["doc_id"], "semi")
         return topk_deterministic(
             pinned.unionByName(organic.select("doc_id", "score")),
@@ -2071,8 +2103,9 @@ class IndexReader:
         k: int = 10,
     ) -> DataFrame:
         """ES _rank_eval over THIS index: run the rated queries through
-        the engine's batch search path (one job for all queries) and
-        score the rankings against `judgments` (qid, doc_id, grade)
+        the engine's batch search path (search_many: one distributed
+        scoring plan, winners merged on the driver) and score the
+        rankings against `judgments` (qid, doc_id, grade)
         with plans/rankeval.py — per-qid precision@k, recall@k, MRR,
         DCG@k, NDCG@k."""
         from esbulk_spark.plans.rankeval import rank_eval as _re
@@ -2237,9 +2270,8 @@ class IndexReader:
 
         terms = analyze_query(query)
         dfs = self._dfs_cached(terms)
-        empty = self.spark.createDataFrame(
-            [],
-            "key string, doc_count long, bg_count long, score double",
+        empty = self._local_df(
+            [], "key string, doc_count long, bg_count long, score double"
         )
         if not dfs:
             return empty
@@ -2303,7 +2335,7 @@ class IndexReader:
         the same pruned-postings plan every multi-term query uses."""
         import math
 
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
+        empty = self._rows_df([])
         doc = self.get_doc(doc_id)
         if not doc.get("found"):
             return empty

@@ -44,13 +44,17 @@ def test_dictionary_lookup_reads_only_needed_columns(reader):
 
 
 def test_query_pairs_join_is_broadcast(reader):
+    from esbulk_spark.functions.analyzer import analyze_query
+
+    # the distributed scorer's plan (search_many returns its merged rows
+    # as a local relation, so the plan lives in _per_shard_scores)
+    qs = {"q": "return score", "q2": "getUserName"}
+    analyzed = {qid: analyze_query(q) for qid, q in qs.items()}
     # multi-query: the (qid, term, df) triples ride in via ONE broadcast
-    res = reader.search_many({"q": "return score", "q2": "getUserName"}, k=5)
-    plan = _plan(res)
+    plan = _plan(reader._per_shard_scores(analyzed, 5, True))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     # single query: df values are inlined literals — NO join at all
-    res1 = reader.search_many({"q": "return score"}, k=5)
-    plan1 = _plan(res1)
+    plan1 = _plan(reader._per_shard_scores({"q": analyzed["q"]}, 5, True))
     assert "Join" not in plan1
 
 

@@ -3,6 +3,7 @@ TableIO.read_terms): dictionary lookups, small-query postings and
 tombstones come straight from the bucket files through pyarrow, with no
 Spark job, and carry exactly the rows the Spark scans carry."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from esbulk_spark.config import IndexConfig
@@ -10,6 +11,7 @@ from esbulk_spark.corpus import synth_corpus
 from esbulk_spark.functions.analyzer import analyze_query
 from esbulk_spark.plans.build import build_index
 from esbulk_spark.plans.reader import IndexReader
+from esbulk_spark.plans.score import bm25_fullscan
 
 QUERIES = ("flushBuffer retry", "getUserName", "return error value")
 
@@ -91,3 +93,130 @@ def test_decode_paths_reuse_the_df_cache(spark, index_dir, monkeypatch):
     r.score_all(q).collect()
     r.explain(q, 0)
     assert reads == []
+
+
+# ---- the batch path: search_many merges its per-shard winners on the
+# driver with search_rows' own merge ----
+
+BATCH = {
+    "a": "flushBuffer retry",
+    "b": "getUserName",
+    "c": "return error value",
+    "d": "parse_token_5 mergeList",
+    "e": "return",
+    "f": "getuserbuffer44 scan_value_87",
+}
+
+
+def _by_qid(rows):
+    out = {}
+    for x in rows:
+        out.setdefault(x.qid, []).append((x.doc_id, x.score))
+    return out
+
+
+def _assert_batch_is_per_query(r, queries, round_to):
+    """search_many == per-query search_rows, bit for bit, and the batch's
+    rows come back ordered by (qid, score desc, doc_id asc)."""
+    rows = r.search_many(queries, k=10, round_to=round_to).collect()
+    want = {q: r.search_rows(text, k=10, round_to=round_to)
+            for q, text in queries.items()}
+    assert _by_qid(rows) == {q: v for q, v in want.items() if v}
+    keys = [(x.qid, -x.score, x.doc_id) for x in rows]
+    assert keys == sorted(keys)
+    return want
+
+
+@pytest.mark.parametrize("round_to", [None, 4])
+@pytest.mark.parametrize("gate", [2_000_000, 0])
+def test_search_many_equals_search_rows_and_oracle(spark, index_dir, gate, round_to):
+    r = IndexReader(spark, index_dir)
+    r.driver_score_max = gate
+    want = _assert_batch_is_per_query(r, BATCH, round_to)
+    for q, text in BATCH.items():
+        oracle = bm25_fullscan(r.docs(), text, k=10, round_to=round_to).collect()
+        assert [(d, round(s, 6)) for d, s in want[q]] == [
+            (x.doc_id, round(x.score, 6)) for x in oracle
+        ], text
+
+
+def test_search_many_with_tombstones(spark, index_dir, tmp_path):
+    from esbulk_spark.plans import admin
+
+    top = _by_qid(IndexReader(spark, index_dir).search_many(BATCH).collect())
+    victims = sorted({rows[0][0] for rows in top.values()})
+    d = str(tmp_path / "tomb")
+    admin.snapshot_index(index_dir, str(tmp_path / "snap"))
+    admin.restore_index(str(tmp_path / "snap"), d)
+    admin.delete_by_ids(spark, d, victims)
+    r = IndexReader(spark, d)
+    for gate in (2_000_000, 0):
+        r.driver_score_max = gate
+        want = _assert_batch_is_per_query(r, BATCH, 4)
+        assert not set(victims) & {x for v in want.values() for x, _ in v}
+
+
+def test_search_many_edge_cases(spark, index_dir):
+    r = IndexReader(spark, index_dir)
+    queries = {
+        "dup1": "flushBuffer retry",
+        "dup2": "flushBuffer retry",   # same text under a second qid
+        "gone": "zzznotaterm qqqnotaterm",
+        "stop": "the of and",
+        "hit": "getUserName",
+    }
+    got = _by_qid(r.search_many(queries, k=5).collect())
+    assert set(got) == {"dup1", "dup2", "hit"}   # no rows for absent terms
+    assert got["dup1"] == got["dup2"] == r.search_rows("flushBuffer retry", k=5)
+    none = r.search_many({"x": "zzznotaterm", "y": "the of"})
+    full = r.search_many({"x": "getUserName"})
+    assert none.schema == full.schema
+    assert none.columns == ["qid", "doc_id", "score"] and none.collect() == []
+    assert r.search_many({}).collect() == []
+
+
+def test_search_many_ties_order_by_doc_id(spark, tmp_path):
+    """Equal scores across shards: the k lowest doc_ids win, ascending."""
+    from esbulk_spark.plans.score import bm25_fullscan as oracle_scan
+
+    rows = [(i, "alpha beta" if i % 3 else "alpha gamma delta") for i in range(24)]
+    docs = spark.createDataFrame(rows, "uid long, content string")
+    d = str(tmp_path / "ties")
+    build_index(spark, docs, IndexConfig(index_dir=d, id_col="uid", n_buckets=4,
+                                         n_shards=3), input_sig="ties24")
+    r = IndexReader(spark, d)
+    for gate in (2_000_000, 0):
+        r.driver_score_max = gate
+        got = _by_qid(r.search_many({"t": "beta", "u": "gamma"}, k=5).collect())
+        assert [x for x, _ in got["t"]] == [1, 2, 4, 5, 7]
+        assert len({s for _, s in got["t"]}) == 1
+        assert got["u"] == r.search_rows("gamma", k=5)
+        assert [x for x, _ in got["u"]] == [0, 3, 6, 9, 12]
+        want = oracle_scan(r.docs(), "beta", k=5).collect()
+        assert [x for x, _ in got["t"]] == [x.doc_id for x in want]
+
+
+def test_batch_and_result_frames_run_no_extra_job(spark, index_dir, count_jobs):
+    """A search_many batch runs its Spark work when called and collecting
+    its result runs none; search() and empty-result families are local
+    relations too."""
+    r = IndexReader(spark, index_dir)
+    r.search_many(BATCH)  # warm the df cache and the Python workers
+    words = sorted(x.term for x in r.dictionary().select("term").collect())
+    batch = {f"q{i:02d}": f"{words[i]} {words[-1 - i]}" for i in range(20)}
+    with count_jobs() as scored:
+        res = r.search_many(batch, k=10)
+    with count_jobs() as collected:
+        rows = res.collect()
+    assert rows and scored["jobs"] == 3 and collected["jobs"] == 0
+    for build in (
+        lambda: r.search("flushBuffer retry"),
+        lambda: r.search_and("zzznotaterm"),
+        lambda: r.score_all("zzznotaterm"),
+        lambda: r.search_aggs_terms("zzznotaterm", "lang"),
+        lambda: r.search_many({"x": "zzznotaterm"}),
+    ):
+        df = build()
+        with count_jobs() as c:
+            df.collect()
+        assert c["jobs"] == 0

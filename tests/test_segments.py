@@ -400,3 +400,28 @@ def test_segment_set_serving_runs_no_spark_job(spark, tmp_path, count_jobs):
     assert {q: rr.search_rows(q) for q in qs} == fresh
     rr.driver_score_max = 0  # distributed WAND sweep
     assert {q: rr.search_rows(q) for q in qs} == fresh
+
+
+def test_search_many_over_segment_set(spark, seg_dirs):
+    """The batch path over a segment set with inflated bounds serves
+    per-query search_rows' rows exactly, on both sides of the gate, and
+    the full-scan oracle's ranking."""
+    r = SegmentSetReader(spark, seg_dirs)
+    assert r.bound_scale > 1.0
+    qs = {"a": "flushBuffer retry", "b": "return error value", "c": "getUserName"}
+    oracle = {
+        q: [(x.doc_id, round(x.score, 6)) for x in
+            bm25_fullscan(r.docs(), t, text_col="content", k=10).collect()]
+        for q, t in qs.items()
+    }
+    for gate in (2_000_000, 0):
+        r.driver_score_max = gate
+        for round_to in (None, 4):
+            got = {}
+            for x in r.search_many(qs, k=10, round_to=round_to).collect():
+                got.setdefault(x.qid, []).append((x.doc_id, x.score))
+            want = {q: r.search_rows(t, k=10, round_to=round_to) for q, t in qs.items()}
+            assert got == want and all(want.values())
+            if round_to is None:
+                assert {q: [(d, round(s, 6)) for d, s in v]
+                        for q, v in got.items()} == oracle
