@@ -144,14 +144,18 @@ def main(argv: list[str] | None = None) -> int:
                                "drops _shards.skipped, 8 drops hit _type")
     _add_common(p_search)
 
-    p_merge = sub.add_parser("merge", help="merge segment indexes")
+    p_merge = sub.add_parser(
+        "merge",
+        help="merge segment indexes: a metadata refresh (blobs verbatim, "
+             "block maxes recomputed) in the segments' own layout, a "
+             "re-encode when --n-buckets/--n-shards ask for another",
+    )
     p_merge.add_argument("--segments", required=True, help="comma-separated index dirs")
     p_merge.add_argument("--index-dir", required=True)
-    p_merge.add_argument("--n-buckets", type=int, default=32)
-    p_merge.add_argument("--n-shards", type=int, default=None)
-    p_merge.add_argument("--fast", action="store_true",
-                         help="metadata-refresh merge: copy blobs verbatim, "
-                              "recompute only avgdl-dependent block maxes")
+    p_merge.add_argument("--n-buckets", type=int, default=None,
+                         help="default: the segments' bucket count")
+    p_merge.add_argument("--n-shards", type=int, default=None,
+                         help="default: keep the segments' shards")
     _add_common(p_merge)
 
     p_alias = sub.add_parser("alias", help="manage index aliases")
@@ -726,17 +730,16 @@ def _cmd_search(spark, args) -> int:
 
 
 def _cmd_merge(spark, args) -> int:
-    from esbulk_spark.config import IndexConfig
-    from esbulk_spark.operators.merge import merge_segments, merge_segments_fast
+    from esbulk_spark.operators.merge import merge_segments
+    from esbulk_spark.plans import admin
 
-    cfg = IndexConfig(
-        index_dir=args.index_dir,
-        id_col="doc_id",
-        n_buckets=args.n_buckets,
-        n_shards=args.n_shards,
+    segments = args.segments.split(",")
+    layout = {k: getattr(args, k) for k in ("n_buckets", "n_shards")}
+    cfg = admin._layout_cfg(
+        admin._stats(segments[0]), args.index_dir,
+        **{k: v for k, v in layout.items() if v is not None},
     )
-    fn = merge_segments_fast if getattr(args, "fast", False) else merge_segments
-    stats = fn(spark, args.segments.split(","), cfg)
+    stats = merge_segments(spark, segments, cfg)
     print(json.dumps(stats))
     return 0
 

@@ -3,20 +3,31 @@
 The reference delegates segment merging to Elasticsearch/Lucene and only
 triggers the commit point (`_flush`, /root/reference/administration.go:32-48,
 invoked run.go:256). Here segments are INDEPENDENT INDEX DIRECTORIES
-built over disjoint doc-id ranges (per ingest wave, or the incremental
-batches of streaming/); merging produces one index byte-identical to a
-single-pass build over the union.
+built over disjoint doc-id ranges (ingest waves, appended deltas, the
+micro-batches of streaming/), and a merge writes one index over their
+union. Global statistics are ADDITIVE across segments (N, total tokens,
+total postings; plans/segments.sum_segment_stats), so no corpus pass
+happens and content is never re-tokenized.
 
-Correctness subtlety: per-block max_tfnorm bakes in the GLOBAL avgdl at
-build time, and avgdl changes when segments merge. The raw tf/dl streams
-are stored per posting, so the merge decodes (term, doc_id, tf, dl) rows
-from every segment and re-runs the postings/dictionary stages with the
-merged statistics — content is never re-tokenized, and block metadata
-comes out right by construction. Global stats are ADDITIVE across
-segments (N, total tokens, total postings), so no corpus pass happens at
-all. (A metadata-only rewrite that keeps blobs and recomputes just the
-max columns is the planned optimization; re-encode is the simple
-provably-identical baseline.)
+``merge_segments`` is the one entry point. It picks its path from the
+layout the output config asks for:
+
+  metadata refresh   the segments' own layout (every _MUST_AGREE key
+                     equal, n_shards unset, no positions the segments
+                     lack): chunk blobs are copied verbatim under
+                     disjoint shard ids, and only the avgdl-dependent
+                     block maxes are recomputed from each chunk's own
+                     tf/dl streams. Index-sized data movement, no
+                     re-sort, no re-encode; rank-identical to a full
+                     rebuild, though chunk boundaries (and file bytes)
+                     follow the segments'. ``merge_segments_fast`` is
+                     this path alone.
+  re-encode          any other layout (a shard or bucket count, chunk
+                     cap, block size or k1/b of the caller's choosing):
+                     postings decode back to (doc_id, term, tf, dl) rows
+                     and the build's postings/dictionary stages re-run
+                     with the merged statistics — byte-identical to a
+                     single-pass build over the union.
 """
 
 from __future__ import annotations
@@ -25,6 +36,7 @@ import json
 import math
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +44,12 @@ from pyspark.sql import functions as F
 from esbulk_spark.config import IndexConfig
 from esbulk_spark.plans.build import STATS_FILE, _atomic_write, build_index
 from esbulk_spark.plans.checkpoint import Manifest
+from esbulk_spark.plans.segments import _MUST_AGREE, sum_segment_stats
+from esbulk_spark.plans.tableio import for_index_dir
+
+
+def _read(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
+    return for_index_dir(index_dir).read(spark, name)
 
 
 def segment_tf_rows(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -43,7 +61,7 @@ def segment_tf_rows(spark: SparkSession, index_dir: str) -> DataFrame:
 
     from esbulk_spark.functions.codec import decode_chunk
 
-    posts = spark.read.parquet(os.path.join(index_dir, "postings"))
+    posts = _read(spark, index_dir, "postings")
 
     def decode(batches):
         for pdf in batches:
@@ -73,43 +91,67 @@ def _expand_attached(segment_dirs: list[str]) -> list[str]:
     (plans/admin.append_docs(merge=False): ``<index>/attached/seg_N``)
     contributes only its main tables to a union — the attached docs
     would silently vanish from the merge. Expand each such dir into
-    [main, seg_0, seg_1, ...], de-duplicated so callers that already
-    pass the attached dirs explicitly (compact_attached) are unchanged."""
+    [main, seg_0, seg_1, ...], de-duplicated so callers may also pass
+    the attached dirs explicitly."""
+    from esbulk_spark.plans.admin import attached_segments
+
     out: list[str] = []
     seen: set[str] = set()
-    for d in segment_dirs:
-        for p in [d] + [
-            os.path.join(d, "attached", s)
-            for s in (
-                sorted(
-                    (
-                        x
-                        for x in os.listdir(os.path.join(d, "attached"))
-                        if x.startswith("seg_")
-                    ),
-                    key=lambda s: int(s.split("_")[1]),
-                )
-                if os.path.isdir(os.path.join(d, "attached"))
-                else []
-            )
-        ]:
-            key = os.path.realpath(p)
-            if key not in seen:
-                seen.add(key)
-                out.append(p)
+    for p in (p for d in segment_dirs for p in [d, *attached_segments(d)]):
+        key = os.path.realpath(p)
+        if key not in seen:
+            seen.add(key)
+            out.append(p)
     return out
 
 
-def _union_bounds(seg_stats: list[dict]) -> dict:
-    """max_dl / min_doc_id of a union of segments, from their stats (the
-    postings stage picks its packing tier from them). A bound that some
-    non-empty segment does not record is left out, not guessed."""
-    out = {}
-    for key, pick in (("max_dl", max), ("min_doc_id", min)):
-        vals = [s.get(key) for s in seg_stats if s.get("n_docs")]
-        if vals and None not in vals:
-            out[key] = pick(vals)
-    return out
+def _layout_mismatch(out_cfg: IndexConfig, stats: dict) -> str | None:
+    """The first layout key ``out_cfg`` asks for that the segments
+    (summed ``stats``) do not have — a ``_MUST_AGREE`` key, or positions
+    they lack — or None when it asks for their own layout."""
+    for key in _MUST_AGREE:
+        if getattr(out_cfg, key) != stats[key]:
+            return key
+    if out_cfg.store_positions and not stats["store_positions"]:
+        return "store_positions"
+    return None
+
+
+def _segments(segment_dirs: list[str]):
+    """The attached-expanded segment dirs, their stats, and the stats of
+    their union (which checks that their layouts agree)."""
+    segment_dirs = _expand_attached(segment_dirs)
+    seg_stats = [
+        json.load(open(os.path.join(sd, STATS_FILE))) for sd in segment_dirs
+    ]
+    return segment_dirs, seg_stats, sum_segment_stats(seg_stats)
+
+
+def _begin(spark, segment_dirs, summed, out_cfg, kind):
+    """The prologue both merge paths share: start the output manifest,
+    write the union of the docs tables (disjoint ids; norms ride in the
+    docs table) and of the positions tables. Returns (input_sig,
+    manifest, stats): ``stats`` is ``summed`` with the positions outcome
+    and the output fingerprint."""
+    input_sig = f"{kind}:" + "|".join(sorted(segment_dirs))
+    out = out_cfg.index_dir
+    fp = out_cfg.fingerprint(input_sig)
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out, exist_ok=True)
+    man = Manifest(out, fp)
+    docs = reduce(
+        DataFrame.unionByName, [_read(spark, sd, "docs") for sd in segment_dirs]
+    )
+    _atomic_write(docs, os.path.join(out, "docs"))
+    man.record("docs", rows=summed["n_docs"])
+    positions = _merge_positions(spark, segment_dirs, out, out_cfg.n_buckets, man)
+    return input_sig, man, dict(summed, store_positions=positions, fingerprint=fp)
+
+
+def _write_stats(stats: dict, out: str, man: Manifest) -> None:
+    with open(os.path.join(out, STATS_FILE), "w") as f:
+        json.dump(stats, f, indent=1)
+    man.record("stats", **{k: v for k, v in stats.items() if k != "fingerprint"})
 
 
 def merge_segments(
@@ -117,73 +159,38 @@ def merge_segments(
     segment_dirs: list[str],
     out_cfg: IndexConfig,
 ) -> dict:
-    """Merge segment indexes into one index at out_cfg.index_dir.
+    """Merge segment indexes into one index at out_cfg.index_dir: by
+    metadata refresh when out_cfg asks for the segments' own layout,
+    else by re-encode (module docstring).
 
     Doc ids must be globally unique across segments (disjoint ranges —
     the incremental-ingest contract, streaming/incremental.py)."""
-    segment_dirs = _expand_attached(segment_dirs)
-    input_sig = "merge:" + "|".join(sorted(segment_dirs))
-    out = out_cfg.index_dir
-    fp = out_cfg.fingerprint(input_sig)
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    man = Manifest(out, fp)
+    segment_dirs, _, summed = _segments(segment_dirs)
+    if out_cfg.n_shards is None and _layout_mismatch(out_cfg, summed) is None:
+        return merge_segments_fast(spark, segment_dirs, out_cfg)
 
-    # docs: plain union (disjoint ids; norms columns ride in the docs table)
-    docs = None
-    seg_stats = []
-    for sd in segment_dirs:
-        d = spark.read.parquet(os.path.join(sd, "docs"))
-        docs = d if docs is None else docs.unionByName(d)
-        seg_stats.append(json.load(open(os.path.join(sd, STATS_FILE))))
-
-    _atomic_write(docs, os.path.join(out, "docs"))
-    n_docs = sum(s["n_docs"] for s in seg_stats)
-    man.record("docs", rows=n_docs)
-
-    # global stats are additive across segments — no corpus pass
+    input_sig, man, stats = _begin(spark, segment_dirs, summed, out_cfg, "merge")
+    n_docs = stats["n_docs"]
     n_shards = out_cfg.n_shards or max(
         1, math.ceil(n_docs / out_cfg.target_shard_docs)
     )
-    shard_size = math.ceil(n_docs / n_shards) if n_docs else 1
-    total_tokens = sum(s["total_tokens"] for s in seg_stats)
-    stats = {
-        "n_docs": int(n_docs),
-        "avgdl": (total_tokens / n_docs) if n_docs else 1.0,
-        "total_tokens": total_tokens,
-        "total_postings": sum(s["total_postings"] for s in seg_stats),
-        "k1": out_cfg.k1,
-        "b": out_cfg.b,
-        "analyzer": out_cfg.analyzer,
-        "n_shards": int(n_shards),
-        "shard_size": int(shard_size),
-        "n_buckets": out_cfg.n_buckets,
-        "chunk_cap": out_cfg.chunk_cap,
-        "block_size": out_cfg.block_size,
-        "text_col": out_cfg.text_col,
-        **_union_bounds(seg_stats),
-        # positions outcome: merged from segments (exact union under the
-        # disjoint-range contract), OR rebuilt from content by the
-        # build_index positions stage when the caller's cfg asks for
-        # positions the segments don't carry. Recorded so
-        # has_positions() answers without probing.
-        "store_positions": _merge_positions(
-            spark, segment_dirs, out, out_cfg.n_buckets, man
-        )
-        or bool(out_cfg.store_positions),
-        "fingerprint": fp,
-    }
-    with open(os.path.join(out, STATS_FILE), "w") as f:
-        json.dump(stats, f, indent=1)
-    man.record("stats", **{k: v for k, v in stats.items() if k != "fingerprint"})
+    stats.update(
+        {key: getattr(out_cfg, key)
+         for key in ("k1", "b", "n_buckets", "chunk_cap", "block_size")},
+        n_shards=int(n_shards),
+        shard_size=int(math.ceil(n_docs / n_shards) if n_docs else 1),
+        # positions the segments lack are rebuilt from content by the
+        # build_index positions stage; recorded so has_positions()
+        # answers without probing
+        store_positions=stats["store_positions"] or bool(out_cfg.store_positions),
+    )
+    _write_stats(stats, out_cfg.index_dir, man)
 
     # postings + dictionary re-run on decoded rows with merged stats
-    tf = None
-    for sd in segment_dirs:
-        rows = segment_tf_rows(spark, sd)
-        tf = rows if tf is None else tf.unionByName(rows)
-
-    dummy_docs = spark.read.parquet(os.path.join(out, "docs"))
+    tf = reduce(
+        DataFrame.unionByName, [segment_tf_rows(spark, sd) for sd in segment_dirs]
+    )
+    dummy_docs = _read(spark, out_cfg.index_dir, "docs")
     return build_index(spark, dummy_docs, out_cfg, input_sig=input_sig, tf_source=tf)
 
 
@@ -219,117 +226,78 @@ def merge_segments_fast(
     segment_dirs: list[str],
     out_cfg: IndexConfig,
 ) -> dict:
-    """Metadata-refresh merge: chunk BLOBS are copied verbatim and only
-    the avgdl-dependent block-max metadata is recomputed (decoded
-    chunk-locally, no shuffle of postings rows beyond the bucket
-    re-partition for file layout). Compared to merge_segments (decode ->
-    re-run the build stages), data movement drops from token-sized to
-    index-sized and no re-sort/re-encode happens — the 10^12-doc merge
-    path.
+    """The metadata-refresh merge alone: chunk BLOBS are copied verbatim
+    and only the avgdl-dependent block-max metadata is recomputed
+    (decoded chunk-locally, no shuffle of postings rows beyond the
+    bucket re-partition for file layout) — the 10^12-doc merge path.
 
-    Constraints: segments share analyzer/k1/b/chunk_cap/block_size/
-    n_buckets and have DISJOINT doc-id ranges (the incremental-ingest
-    contract). Segment shards are remapped to disjoint id ranges — shard
-    is an opaque scoring-group key, so queries are rank-identical to a
-    full rebuild (asserted in tests/test_merge.py), though chunk
-    boundaries (and hence file bytes) legitimately differ from a
-    single-pass build's.
+    It writes the segments' own layout, so ``out_cfg`` must ask for it:
+    a ``_MUST_AGREE`` key that differs, or positions the segments lack,
+    raise a ValueError naming the key (``merge_segments`` re-encodes
+    instead). ``out_cfg.n_shards`` is not a layout key here: segment
+    shards are remapped to disjoint ids and keep their sizes — shard is
+    an opaque scoring-group key, so queries are rank-identical to a full
+    rebuild (asserted in tests/test_merge.py).
 
     Reference analog: Lucene segment merging behind `_flush`
     (/root/reference/administration.go:32-48, run.go:256)."""
-    from pyspark.sql import functions as F
-
-    from esbulk_spark.plans.build import POSTINGS_SCHEMA, bucket_col
-
-    segment_dirs = _expand_attached(segment_dirs)
-    input_sig = "fastmerge:" + "|".join(sorted(segment_dirs))
-    out = out_cfg.index_dir
-    fp = out_cfg.fingerprint(input_sig)
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    man = Manifest(out, fp)
-
-    seg_stats = [
-        json.load(open(os.path.join(sd, STATS_FILE))) for sd in segment_dirs
-    ]
-    for key in ("analyzer", "k1", "b", "chunk_cap", "block_size", "n_buckets"):
-        vals = {s[key] for s in seg_stats}
-        if len(vals) != 1:
-            raise ValueError(f"segments disagree on {key}: {vals}")
-
-    docs = None
-    for sd in segment_dirs:
-        d = spark.read.parquet(os.path.join(sd, "docs"))
-        docs = d if docs is None else docs.unionByName(d)
-    _atomic_write(docs, os.path.join(out, "docs"))
-    n_docs = sum(s["n_docs"] for s in seg_stats)
-    man.record("docs", rows=n_docs)
-
-    total_tokens = sum(s["total_tokens"] for s in seg_stats)
-    avgdl = (total_tokens / n_docs) if n_docs else 1.0
-    n_shards = sum(s["n_shards"] for s in seg_stats)
-    stats = dict(
-        {k: v for k, v in seg_stats[0].items() if k not in ("max_dl", "min_doc_id")},
-        **_union_bounds(seg_stats),
-        n_docs=int(n_docs),
-        avgdl=avgdl,
-        total_tokens=total_tokens,
-        total_postings=sum(s["total_postings"] for s in seg_stats),
-        n_shards=int(n_shards),
-        shard_size=max(s["shard_size"] for s in seg_stats),
-        fingerprint=fp,
+    from esbulk_spark.plans.build import (
+        _TERM_TABLE_WRITE_OPTIONS, POSTINGS_SCHEMA, bucket_col,
     )
-    with open(os.path.join(out, STATS_FILE), "w") as f:
-        json.dump(stats, f, indent=1)
-    man.record("stats", **{k: v for k, v in stats.items() if k != "fingerprint"})
+
+    segment_dirs, seg_stats, summed = _segments(segment_dirs)
+    key = _layout_mismatch(out_cfg, summed)
+    if key is not None:
+        raise ValueError(
+            f"merge_segments_fast keeps the segments' layout: out_cfg asks "
+            f"for {key}={getattr(out_cfg, key)!r}, the segments have "
+            f"{summed[key]!r} (merge_segments re-encodes into a new layout)"
+        )
+    input_sig, man, stats = _begin(
+        spark, segment_dirs, summed, out_cfg, "fastmerge"
+    )
+    out = out_cfg.index_dir
+    _write_stats(stats, out, man)
 
     # chunks: union with disjoint shard-id remap, refresh maxes, rewrite
     cols = [c.strip().split()[0] for c in POSTINGS_SCHEMA.split(",")]
-    merged = None
+    parts = []
     offset = 0
     for sd, s in zip(segment_dirs, seg_stats):
-        c = (
-            spark.read.parquet(os.path.join(sd, "postings"))
+        parts.append(
+            _read(spark, sd, "postings")
             .withColumn("shard", (F.col("shard") + F.lit(offset)).cast("int"))
             .select(*cols)
         )
-        merged = c if merged is None else merged.unionByName(c)
         offset += int(s["n_shards"])
+    n_buckets = stats["n_buckets"]
     refreshed = (
-        merged.mapInPandas(
+        reduce(DataFrame.unionByName, parts)
+        .mapInPandas(
             _make_max_refresher(
-                stats["k1"], stats["b"], avgdl, stats["block_size"]
+                stats["k1"], stats["b"], stats["avgdl"], stats["block_size"]
             ),
             POSTINGS_SCHEMA,
         )
-        .withColumn("bucket", bucket_col(F.col("term"), stats["n_buckets"]))
-        .repartition(stats["n_buckets"], "bucket")
+        .withColumn("bucket", bucket_col(F.col("term"), n_buckets))
+        .repartition(n_buckets, "bucket")
         .sortWithinPartitions("bucket", "term", "shard", "chunk")
     )
-    from esbulk_spark.plans.build import _TERM_TABLE_WRITE_OPTIONS
-
     _atomic_write(refreshed, os.path.join(out, "postings"),
                   partition_by=["bucket"], options=_TERM_TABLE_WRITE_OPTIONS)
     man.record("postings", mode="metadata_refresh")
 
     dictionary = (
-        spark.read.parquet(os.path.join(out, "postings"))
+        _read(spark, out, "postings")
         .groupBy("term")
         .agg(F.sum("n").alias("df"), F.sum("chunk_cf").alias("cf"))
-        .withColumn("bucket", bucket_col(F.col("term"), stats["n_buckets"]))
-        .repartition(stats["n_buckets"], "bucket")
+        .withColumn("bucket", bucket_col(F.col("term"), n_buckets))
+        .repartition(n_buckets, "bucket")
         .sortWithinPartitions("bucket", "term")
     )
     _atomic_write(dictionary, os.path.join(out, "dictionary"),
                   partition_by=["bucket"], options=_TERM_TABLE_WRITE_OPTIONS)
     man.record("dictionary")
-    merged_pos = _merge_positions(spark, segment_dirs, out, stats["n_buckets"], man)
-    if bool(stats.get("store_positions", False)) != merged_pos:
-        # seg_stats[0]'s flag can disagree with the union outcome (e.g.
-        # mixed segments): rewrite the recorded flag to the truth
-        stats["store_positions"] = merged_pos
-        with open(os.path.join(out, STATS_FILE), "w") as f:
-            json.dump(stats, f, indent=1)
     return stats
 
 
@@ -340,16 +308,12 @@ def _merge_positions(spark, segment_dirs, out, n_buckets, man) -> bool:
     EVERY segment carries one)."""
     from esbulk_spark.plans.build import bucket_col
 
-    from pyspark.sql import functions as F
-
-    seg_pos = [os.path.join(sd, "positions") for sd in segment_dirs]
-    if not all(os.path.exists(p) for p in seg_pos):
+    if not all(for_index_dir(sd).exists("positions") for sd in segment_dirs):
         return False
-    pos = None
-    for p in seg_pos:
-        d = spark.read.parquet(p)
-        pos = d if pos is None else pos.unionByName(d)
-    pos = pos.withColumn(
+    pos = reduce(
+        DataFrame.unionByName,
+        [_read(spark, sd, "positions") for sd in segment_dirs],
+    ).withColumn(
         "bucket", bucket_col(F.col("term"), n_buckets)
     ).repartition(n_buckets, "bucket")
     _atomic_write(pos, os.path.join(out, "positions"), partition_by=["bucket"])

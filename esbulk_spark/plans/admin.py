@@ -31,11 +31,18 @@ shapes:
   append     ES continuous bulk indexing into a LIVE index (the
              reference's whole job): the new batch builds as a delta
              segment with doc_ids past the main index's max, then
-             main+delta fast-merge (blobs verbatim, metadata refreshed)
-             and atomically swap — index-sized cost, no token
-             re-shuffle. key_col gives _id semantics: upsert tombstones
+             either attaches (searchable at once through open_reader)
+             or folds with main + attached segments through the same
+             fold-and-swap compact_attached runs (blobs verbatim,
+             metadata refreshed; index-sized cost, no token
+             re-shuffle). key_col gives _id semantics: upsert tombstones
              the old version (Lucene update = delete+add), create drops
              already-present keys
+  lifecycle  every op that rewrites an index in place (rebuild,
+             compaction, merged append) builds into a sibling temp dir
+             and commits with one rename (_swap_in); every op that
+             writes an index from another one takes the source's layout
+             from its stats.json (_layout_cfg)
   update     ES _update_by_query = transform matching docs' stored
              fields and reindex them. Tables are immutable, so the
              engine rebuilds from the transformed docs DataFrame into a
@@ -55,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from esbulk_spark.plans.build import STATS_FILE, build_index
+from esbulk_spark.plans.tableio import for_index_dir
 
 ALIASES_FILE = "aliases.json"
 SNAPSHOT_FILE = "SNAPSHOT.json"
@@ -80,6 +88,28 @@ __all__ = [
     "expunge_deletes",
     "append_docs",
 ]
+
+# the stats.json keys an index keeps through every lifecycle op: what
+# was indexed, and how postings are laid out and scored
+_LAYOUT = (
+    "text_col", "analyzer", "store_content", "store_positions",
+    "n_buckets", "chunk_cap", "block_size", "k1", "b",
+)
+
+
+def _stats(index_dir: str) -> dict:
+    with open(os.path.join(index_dir, STATS_FILE)) as f:
+        return json.load(f)
+
+
+def _layout_cfg(stats: dict, index_dir: str, **overrides):
+    """The IndexConfig that writes ``index_dir`` in the layout ``stats``
+    records, doc ids pinned; ``overrides`` set single fields (a key the
+    stats lack keeps the IndexConfig default)."""
+    from esbulk_spark.config import IndexConfig
+
+    layout = {k: stats[k] for k in _LAYOUT if k in stats}
+    return IndexConfig(index_dir=index_dir, id_col="doc_id", **dict(layout, **overrides))
 
 
 # ------------------------------------------------------------- aliases
@@ -202,8 +232,7 @@ def snapshot_index(index_dir: str, snap_dir: str) -> dict:
         dst_root = os.path.join(snap_dir, ATTACHED_DIR)
         shutil.rmtree(dst_root, ignore_errors=True)
         shutil.copytree(os.path.join(index_dir, ATTACHED_DIR), dst_root)
-    with open(stats_path) as f:
-        fp = json.load(f).get("fingerprint", "")
+    fp = _stats(index_dir).get("fingerprint", "")
     meta = {
         "source": os.path.abspath(index_dir),
         "fingerprint": fp,
@@ -298,30 +327,20 @@ def reshard_index(
     Scores are UNCHANGED (BM25 inputs — tf, dl, df, avgdl — are shard-
     independent); only the physical grouping moves. Tombstones carry
     over; attached segments are folded in by the merge expansion."""
-    from esbulk_spark.config import IndexConfig
     from esbulk_spark.operators.merge import merge_segments
 
-    src_stats = json.load(open(os.path.join(src_index_dir, STATS_FILE)))
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    cfg = IndexConfig(
-        index_dir=dst_index_dir,
-        id_col="doc_id",
-        text_col=src_stats.get("text_col", "content"),
-        n_shards=int(n_shards),
-        n_buckets=int(n_buckets or src_stats["n_buckets"]),
-        chunk_cap=src_stats.get("chunk_cap", 1 << 17),
-        block_size=src_stats.get("block_size", 128),
-        k1=src_stats.get("k1", 1.2),
-        b=src_stats.get("b", 0.75),
-        store_positions=bool(src_stats.get("store_positions")),
+    src = _stats(src_index_dir)
+    cfg = _layout_cfg(
+        src, dst_index_dir, n_shards=int(n_shards),
+        n_buckets=int(n_buckets or src["n_buckets"]),
     )
     out = merge_segments(spark, [src_index_dir], cfg)
     # deletes are doc_id-keyed (shard-independent): copy them over
-    src_del = os.path.join(src_index_dir, "deletes")
-    if os.path.isdir(src_del):
-        ids = spark.read.parquet(src_del)
-        _write_deletes(spark, dst_index_dir, ids)
+    io = for_index_dir(src_index_dir)
+    if io.exists("deletes"):
+        _write_deletes(spark, dst_index_dir, io.read(spark, "deletes"))
     return out
 
 
@@ -332,18 +351,15 @@ def _write_deletes(spark: SparkSession, index_dir: str, ids_df) -> int:
     """Union new tombstone ids into the deletes table, atomically
     (tmp + rename via the same TableIO commit every stage uses).
     Returns the total tombstone count after the write."""
-    from pyspark.sql import functions as F  # noqa: F811
-    from esbulk_spark.plans.build import _atomic_write
-
-    path = os.path.join(index_dir, "deletes")
+    io = for_index_dir(index_dir)
     new = ids_df.select(F.col("doc_id").cast("long")).distinct()
-    if os.path.isdir(path):
-        existing = spark.read.parquet(path).select("doc_id")
+    if io.exists("deletes"):
+        existing = io.read(spark, "deletes").select("doc_id")
         # materialize BEFORE the rename clobbers the dir being read
         rows = new.unionByName(existing).distinct().collect()
         new = spark.createDataFrame(rows, "doc_id long")
-    _atomic_write(new.coalesce(1), path)
-    n = spark.read.parquet(path).count()
+    io.write(new.coalesce(1), "deletes")
+    n = io.read(spark, "deletes").count()
     meta = {"n_deleted": int(n)}
     with open(os.path.join(index_dir, "deletes_meta.json"), "w") as f:
         json.dump(meta, f)
@@ -385,39 +401,54 @@ def delete_by_ids(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> di
     return {"deleted": len(set(map(int, doc_ids))), "total_tombstones": total}
 
 
-def _rebuild_in_place(spark: SparkSession, index_dir: str, docs, sig: str) -> dict:
-    """Rebuild the index from ``docs`` (doc_ids pinned) into a fresh dir
-    and atomically swap it over ``index_dir``. ``docs`` must be a lazy
-    plan over the CURRENT dir — it is only executed while the old tables
-    still exist; the swap happens after the build commits."""
-    from esbulk_spark.config import IndexConfig
-
-    with open(os.path.join(index_dir, STATS_FILE)) as f:
-        st = json.load(f)
-    tmp = index_dir.rstrip("/") + ".rebuild"
+def _swap_in(spark, index_dir, write, carry_deletes=True, new_deletes=None) -> dict:
+    """The one commit of every op that rewrites an index in place:
+    ``write(tmp)`` writes the new table set into a sibling temp dir and
+    returns its stats. With ``carry_deletes`` the tombstones ride across
+    (doc_id-keyed, which a merge preserves); ``new_deletes`` (doc ids,
+    read while the old tables still exist) are tombstoned on top. Then
+    the temp dir renames over ``index_dir`` and the old tree, attached/
+    with it, is dropped. Nothing under ``index_dir`` changes before that
+    rename, and a failure removes the temp dir."""
+    base = index_dir.rstrip("/")
+    tmp, old = base + ".next", base + ".old"
     shutil.rmtree(tmp, ignore_errors=True)
-    cfg = IndexConfig(
-        index_dir=tmp,
-        id_col="doc_id",
-        text_col=st.get("text_col", "content"),
-        n_buckets=st.get("n_buckets", 32),
-        n_shards=st.get("n_shards"),
-        chunk_cap=st.get("chunk_cap", 1 << 17),
-        block_size=st.get("block_size", 128),
-        k1=st.get("k1", 1.2),
-        b=st.get("b", 0.75),
-        store_content=st.get("store_content", True),
-        store_positions=st.get("store_positions", False),
-        overwrite=True,
-    )
-    stats = build_index(spark, docs, cfg, input_sig=sig)
-    old = index_dir.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(index_dir, old)
-    os.rename(tmp, index_dir)
+    try:
+        stats = write(tmp)
+        dsrc = os.path.join(index_dir, "deletes")
+        if carry_deletes and os.path.isdir(dsrc):
+            shutil.copytree(dsrc, os.path.join(tmp, "deletes"))
+            shutil.copy2(
+                os.path.join(index_dir, "deletes_meta.json"),
+                os.path.join(tmp, "deletes_meta.json"),
+            )
+        if new_deletes is not None:
+            _write_deletes(spark, tmp, new_deletes)
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(index_dir, old)
+        os.rename(tmp, index_dir)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old)
     _refresh_paths(spark, index_dir)
     return stats
+
+
+def _rebuild_in_place(spark: SparkSession, index_dir: str, docs, sig: str) -> dict:
+    """Rebuild the index from ``docs`` (doc_ids pinned) in its own
+    layout and swap it over ``index_dir``. ``docs`` must be a lazy plan
+    over the CURRENT dir — it is only executed while the old tables
+    still exist. The rebuild drops the tombstones: ``docs`` holds the
+    live docs only."""
+    st = _stats(index_dir)
+    return _swap_in(
+        spark, index_dir,
+        lambda tmp: build_index(
+            spark, docs, _layout_cfg(st, tmp, n_shards=st.get("n_shards")),
+            input_sig=sig,
+        ),
+        carry_deletes=False,
+    )
 
 
 def expunge_deletes(spark: SparkSession, index_dir: str) -> dict:
@@ -503,56 +534,30 @@ def open_reader(spark: SparkSession, index_dir: str):
     return SegmentSetReader(spark, [index_dir] + segs)
 
 
+def _fold(spark, index_dir: str, extra=(), victims=None) -> dict:
+    """Fold main + attached segments + the ``extra`` segment dirs into
+    one index (the metadata-refresh merge, in the index's own layout)
+    and swap it in; ``victims``: doc ids the folded index tombstones."""
+    from esbulk_spark.operators import merge
+
+    st = _stats(index_dir)
+    return _swap_in(
+        spark, index_dir,
+        lambda tmp: merge.merge_segments_fast(
+            spark, [index_dir, *extra], _layout_cfg(st, tmp)
+        ),
+        new_deletes=victims,
+    )
+
+
 def compact_attached(spark: SparkSession, index_dir: str) -> dict:
     """Fold every attached segment into the main index (one
     metadata-refresh fast merge + atomic swap) — the background merge
     of the Lucene lifecycle, amortizing many delta-sized appends into
     one index-sized pass. Tombstones carry across unchanged."""
-    from esbulk_spark.config import IndexConfig
-    from esbulk_spark.functions.analyzer import ANALYZER_VERSION
-    from esbulk_spark.operators.merge import merge_segments_fast
-
-    segs = attached_segments(index_dir)
-    if not segs:
-        with open(os.path.join(index_dir, STATS_FILE)) as f:
-            return json.load(f)
-    with open(os.path.join(index_dir, STATS_FILE)) as f:
-        st = json.load(f)
-    tmp = index_dir.rstrip("/") + ".merged"
-    old = index_dir.rstrip("/") + ".old"
-    try:
-        stats = merge_segments_fast(
-            spark,
-            [index_dir] + segs,
-            IndexConfig(
-                index_dir=tmp,
-                id_col="doc_id",
-                text_col=st.get("text_col", "content"),
-                n_buckets=st["n_buckets"],
-                chunk_cap=st.get("chunk_cap", 1 << 17),
-                block_size=st.get("block_size", 128),
-                k1=st.get("k1", 1.2),
-                b=st.get("b", 0.75),
-                store_content=st.get("store_content", True),
-                store_positions=st.get("store_positions", False),
-                analyzer=st.get("analyzer", ANALYZER_VERSION),
-            ),
-        )
-        dsrc = os.path.join(index_dir, "deletes")
-        if os.path.isdir(dsrc):
-            shutil.copytree(dsrc, os.path.join(tmp, "deletes"))
-            shutil.copy2(
-                os.path.join(index_dir, "deletes_meta.json"),
-                os.path.join(tmp, "deletes_meta.json"),
-            )
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(index_dir, old)
-        os.rename(tmp, index_dir)
-        shutil.rmtree(old)  # drops the consumed attached/ tree with it
-        _refresh_paths(spark, index_dir)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return stats
+    if not attached_segments(index_dir):
+        return _stats(index_dir)
+    return _fold(spark, index_dir)
 
 
 def append_docs(
@@ -571,13 +576,15 @@ def append_docs(
 
     The Lucene segment lifecycle: ``new_docs`` becomes a DELTA segment
     (its own index dir, doc_ids offset past the main index's max), then
-    main + delta fast-merge (operators/merge.merge_segments_fast: chunk
-    blobs verbatim, only avgdl-dependent block-max metadata refreshed —
-    index-sized data movement, no token re-shuffle/re-encode) and the
-    result atomically swaps over ``index_dir``. Cost is proportional to
-    the INDEX, not the corpus tokens; at 10^12 docs this is the only
-    viable ingest path, and it is rank-identical to a full rebuild of
-    the union (tests/test_merge.py pins fast-merge rank identity).
+    main + attached segments + delta fold through compact_attached's
+    fold-and-swap (operators/merge.merge_segments_fast: chunk blobs
+    verbatim, only avgdl-dependent block-max metadata refreshed —
+    index-sized data movement, no token re-shuffle/re-encode). Cost is
+    proportional to the INDEX, not the corpus tokens; at 10^12 docs this
+    is the only viable ingest path, and it is rank-identical to a full
+    rebuild of the union (tests/test_merge.py pins fast-merge rank
+    identity). The result equals an attach followed by
+    compact_attached, and a fold that fails leaves the index as it was.
 
     ``key_col`` gives ES _id semantics for the batch (op-types,
     indexing.go:279-307):
@@ -611,13 +618,7 @@ def append_docs(
     grows by the delta's shards per append (Lucene segment
     proliferation); expunge_deletes() is the forcemerge that re-packs.
     """
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from esbulk_spark.config import IndexConfig
-    from esbulk_spark.functions.analyzer import ANALYZER_VERSION
     from esbulk_spark.operators.docids import assign_doc_ids_with_count
-    from esbulk_spark.operators.merge import merge_segments_fast
-    from esbulk_spark.plans.reader import IndexReader
 
     if op_type not in ("index", "create"):
         raise ValueError(
@@ -626,12 +627,11 @@ def append_docs(
             "update_by_query or the optype re-index path"
         )
     r = open_reader(spark, index_dir)  # sees attached segments too
-    with open(os.path.join(index_dir, STATS_FILE)) as f:
-        st = json.load(f)  # layout params; identical across the set
-    st["n_docs"] = r.n_docs
+    st = _stats(index_dir)  # layout params; identical across the set
     text_col = st.get("text_col", "content")
     incoming = new_docs
     n_updated = n_skipped = 0
+    victims = None
 
     if key_col is not None:
         if key_col not in incoming.columns:
@@ -656,8 +656,8 @@ def append_docs(
                 "doc_id"
             )
             n_updated = victims.count()
-            if n_updated:
-                _write_deletes(spark, index_dir, victims)
+            if not n_updated:
+                victims = None
 
     if keep_ids:
         # caller-supplied ids (incoming.doc_id): the merge contract only
@@ -702,105 +702,52 @@ def append_docs(
     if n_new == 0:
         return {
             "appended": 0, "updated": n_updated, "skipped": n_skipped,
-            "n_docs": st["n_docs"],
+            "n_docs": r.n_docs,
         }
 
     delta = index_dir.rstrip("/") + ".delta"
     shutil.rmtree(delta, ignore_errors=True)
-    common = dict(
-        id_col="doc_id",
-        text_col=text_col,
-        n_buckets=st["n_buckets"],
-        chunk_cap=st.get("chunk_cap", 1 << 17),
-        block_size=st.get("block_size", 128),
-        k1=st.get("k1", 1.2),
-        b=st.get("b", 0.75),
-        store_content=st.get("store_content", True),
-        store_positions=st.get("store_positions", False),
-        analyzer=st.get("analyzer", ANALYZER_VERSION),
-    )
-    tmp = index_dir.rstrip("/") + ".merged"
-    old = index_dir.rstrip("/") + ".old"
     try:
         build_index(
             spark,
             docs,
-            IndexConfig(
-                index_dir=delta,
-                n_shards=max(1, math.ceil(n_new / st["shard_size"])),
-                overwrite=True,
-                **common,
+            _layout_cfg(
+                st, delta, n_shards=max(1, math.ceil(n_new / st["shard_size"]))
             ),
             input_sig=f"append:{st.get('fingerprint', '')}:{base}:{n_new}",
         )
-        main_cols = set(
-            spark.read.parquet(os.path.join(index_dir, "docs")).columns
-        )
-        delta_cols = set(
-            spark.read.parquet(os.path.join(delta, "docs")).columns
-        )
+        main_cols = set(for_index_dir(index_dir).read(spark, "docs").columns)
+        delta_cols = set(for_index_dir(delta).read(spark, "docs").columns)
         if main_cols != delta_cols:
             raise ValueError(
                 "incoming docs schema does not match the index's docs "
                 f"table: only-main={sorted(main_cols - delta_cols)} "
                 f"only-new={sorted(delta_cols - main_cols)}"
             )
-        if not merge:
-            # ATTACH, don't merge: the delta becomes a searchable
-            # segment under the index (ES refresh semantics); cost so
-            # far was delta-sized only. compact_attached() folds later.
-            root = os.path.join(index_dir, ATTACHED_DIR)
-            os.makedirs(root, exist_ok=True)
-            nseg = (
-                max(
-                    (
-                        int(d.split("_")[1])
-                        for d in os.listdir(root)
-                        if d.startswith("seg_")
-                    ),
-                    default=-1,
-                )
-                + 1
-            )
-            os.rename(delta, os.path.join(root, f"seg_{nseg}"))
-            rr = open_reader(spark, index_dir)
-            return {
-                "appended": int(n_new),
-                "updated": int(n_updated),
-                "skipped": int(n_skipped),
-                "n_docs": int(rr.stats["n_docs"]),
-                "n_shards": int(rr.stats["n_shards"]),
-                "attached_segments": nseg + 1,
-            }
-        stats = merge_segments_fast(
-            spark,
-            # fold any previously-attached segments in with the delta
-            [index_dir, *attached_segments(index_dir), delta],
-            IndexConfig(index_dir=tmp, **common),
-        )
-        # tombstones (by doc_id, which the merge preserves) ride across
-        dsrc = os.path.join(index_dir, "deletes")
-        if os.path.isdir(dsrc):
-            shutil.copytree(dsrc, os.path.join(tmp, "deletes"))
-            shutil.copy2(
-                os.path.join(index_dir, "deletes_meta.json"),
-                os.path.join(tmp, "deletes_meta.json"),
-            )
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(index_dir, old)
-        os.rename(tmp, index_dir)
-        shutil.rmtree(old)
-        _refresh_paths(spark, index_dir)
+        out = {
+            "appended": int(n_new),
+            "updated": int(n_updated),
+            "skipped": int(n_skipped),
+        }
+        if merge:
+            stats = _fold(spark, index_dir, extra=[delta], victims=victims)
+            return dict(out, n_docs=int(stats["n_docs"]),
+                        n_shards=int(stats["n_shards"]))
+        # ATTACH, don't merge: the delta becomes a searchable segment
+        # under the index (ES refresh semantics); cost so far was
+        # delta-sized only. compact_attached() folds later.
+        if victims is not None:
+            _write_deletes(spark, index_dir, victims)
+        segs = attached_segments(index_dir)
+        nseg = int(segs[-1].rsplit("_", 1)[1]) + 1 if segs else 0
+        root = os.path.join(index_dir, ATTACHED_DIR)
+        os.makedirs(root, exist_ok=True)
+        os.rename(delta, os.path.join(root, f"seg_{nseg}"))
+        stats = open_reader(spark, index_dir).stats
+        return dict(out, n_docs=int(stats["n_docs"]),
+                    n_shards=int(stats["n_shards"]), attached_segments=nseg + 1)
     finally:
         shutil.rmtree(delta, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return {
-        "appended": int(n_new),
-        "updated": int(n_updated),
-        "skipped": int(n_skipped),
-        "n_docs": int(stats["n_docs"]),
-        "n_shards": int(stats["n_shards"]),
-    }
 
 
 # ---------------------------------------------------------------- _cat
@@ -823,12 +770,10 @@ def cat_indices(index_dirs: list[str]) -> list[dict]:
     every table dir listed by the build is committed."""
     out = []
     for d in sorted(index_dirs):
-        stats_path = os.path.join(d, STATS_FILE)
-        if not os.path.exists(stats_path):
+        if not os.path.exists(os.path.join(d, STATS_FILE)):
             out.append({"index": d, "health": "red"})
             continue
-        with open(stats_path) as f:
-            st = json.load(f)
+        st = _stats(d)
         row = {
             "index": d,
             "health": "green",
@@ -844,10 +789,9 @@ def cat_indices(index_dirs: list[str]) -> list[dict]:
         segs = attached_segments(d)
         if segs:
             row["attached_segments"] = len(segs)
-            row["docs_count"] = sum(
-                json.load(open(os.path.join(s, STATS_FILE)))["n_docs"]
-                for s in segs
-            ) + (row["docs_count"] or 0)
+            row["docs_count"] = sum(_stats(s)["n_docs"] for s in segs) + (
+                row["docs_count"] or 0
+            )
         out.append(row)
     return out
 
@@ -860,12 +804,10 @@ def cat_segments(index_dir: str) -> list[dict]:
     for name, d in [("_base", index_dir)] + [
         (os.path.basename(s), s) for s in attached_segments(index_dir)
     ]:
-        stats_path = os.path.join(d, STATS_FILE)
-        if not os.path.exists(stats_path):
+        if not os.path.exists(os.path.join(d, STATS_FILE)):
             rows.append({"segment": name, "committed": False})
             continue
-        with open(stats_path) as f:
-            st = json.load(f)
+        st = _stats(d)
         rows.append(
             {
                 "segment": name,

@@ -65,9 +65,43 @@ from pyspark.sql import functions as F
 from esbulk_spark.plans.build import STATS_FILE
 from esbulk_spark.plans.reader import IndexReader
 
-__all__ = ["SegmentSetReader"]
+__all__ = ["SegmentSetReader", "sum_segment_stats"]
 
 _MUST_AGREE = ("analyzer", "k1", "b", "chunk_cap", "block_size", "n_buckets")
+
+
+def sum_segment_stats(seg_stats: list[dict]) -> dict:
+    """The stats of a union of segments: the first segment's layout
+    (every ``_MUST_AGREE`` key must agree across the set), the additive
+    counts summed, shards counted end to end, and ``max_dl`` /
+    ``min_doc_id`` taken over the non-empty segments (left out when one
+    of them does not record it). The segment-set reader and both merges
+    (operators/merge.py) read their statistics from here."""
+    for key in _MUST_AGREE:
+        vals = {s[key] for s in seg_stats}
+        if len(vals) != 1:
+            raise ValueError(f"segments disagree on {key}: {vals}")
+    n_docs = sum(s["n_docs"] for s in seg_stats)
+    total_tokens = sum(s["total_tokens"] for s in seg_stats)
+    out = {k: v for k, v in seg_stats[0].items() if k not in ("max_dl", "min_doc_id")}
+    for key, pick in (("max_dl", max), ("min_doc_id", min)):
+        vals = [s.get(key) for s in seg_stats if s.get("n_docs")]
+        if vals and None not in vals:
+            out[key] = pick(vals)
+    return dict(
+        out,
+        n_docs=int(n_docs),
+        total_tokens=int(total_tokens),
+        avgdl=(total_tokens / n_docs) if n_docs else 1.0,
+        total_postings=sum(s["total_postings"] for s in seg_stats),
+        n_shards=int(sum(s["n_shards"] for s in seg_stats)),
+        shard_size=max(s["shard_size"] for s in seg_stats),
+        store_positions=all(
+            bool(s.get("store_positions", False)) for s in seg_stats
+        ),
+        fingerprint="segset:"
+        + "|".join(s.get("fingerprint", "") for s in seg_stats),
+    )
 
 
 class _MultiIO:
@@ -123,30 +157,7 @@ class SegmentSetReader(IndexReader):
         for d in self.segment_dirs:
             with open(os.path.join(d, STATS_FILE)) as f:
                 self.seg_stats.append(json.load(f))
-        self.stats = self._global_stats(self.seg_stats)
-
-    @staticmethod
-    def _global_stats(seg_stats: list[dict]) -> dict:
-        for key in _MUST_AGREE:
-            vals = {s[key] for s in seg_stats}
-            if len(vals) != 1:
-                raise ValueError(f"segments disagree on {key}: {vals}")
-        n_docs = sum(s["n_docs"] for s in seg_stats)
-        total_tokens = sum(s["total_tokens"] for s in seg_stats)
-        return dict(
-            seg_stats[0],
-            n_docs=int(n_docs),
-            total_tokens=int(total_tokens),
-            avgdl=(total_tokens / n_docs) if n_docs else 1.0,
-            total_postings=sum(s["total_postings"] for s in seg_stats),
-            n_shards=int(sum(s["n_shards"] for s in seg_stats)),
-            shard_size=max(s["shard_size"] for s in seg_stats),
-            store_positions=all(
-                bool(s.get("store_positions", False)) for s in seg_stats
-            ),
-            fingerprint="segset:"
-            + "|".join(s.get("fingerprint", "") for s in seg_stats),
-        )
+        self.stats = sum_segment_stats(self.seg_stats)
 
     @property
     def bound_scale(self) -> float:

@@ -33,6 +33,7 @@ table storage.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
@@ -164,7 +165,40 @@ class ParquetDirIO(TableIO):
         self._forget(name)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self._path(name))
+        """The table as a Spark relation. Spark is handed the schema, so
+        opening a table runs no schema-inference job."""
+        schema = self._schema(name)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self._path(name))
+
+    def _schema(self, name: str):
+        """The table's Spark schema from one part file's footer: the row
+        schema Spark's writer stores there, plus an int column for the
+        file's ``key=value`` partition directory (the type Spark's
+        partition inference gives the ``bucket`` key). None — let Spark
+        infer — when the file carries no Spark schema or the partition
+        value is not an int."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import IntegerType, StructType
+
+        path = self._path(name)
+        files = glob.glob(os.path.join(glob.escape(path), "*.parquet")) or glob.glob(
+            os.path.join(glob.escape(path), "*", "*.parquet")
+        )
+        if not files:
+            return None
+        meta = pq.read_metadata(files[0]).metadata or {}
+        row = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        if row is None:
+            return None
+        schema = StructType.fromJson(json.loads(row))
+        part = os.path.relpath(os.path.dirname(files[0]), path)
+        if part != ".":
+            key, _, value = part.partition("=")
+            if not value.lstrip("-").isdigit():
+                return None
+            schema = schema.add(key, IntegerType())
+        return schema
 
     def read_terms(self, name, buckets=None, terms=None, columns=None):
         """``pyarrow.parquet`` over the listed files of the wanted bucket

@@ -594,3 +594,48 @@ def test_cli_suggest_and_stats(spark, tmp_path, capsys):
     assert rc == 0
     segs = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
     assert segs[0]["segment"] == "_base" and segs[0]["docs_count"] == 8
+
+
+def test_cli_merge_keeps_layout_unless_asked(spark, corpus, tmp_path, capsys):
+    """`merge` keeps the segments' layout by default (metadata refresh)
+    and re-encodes for --n-shards or another --n-buckets; every result
+    is rank-identical to the full scan. --fast is gone."""
+    from esbulk_spark.config import IndexConfig
+    from esbulk_spark.operators.docids import assign_doc_ids_with_count
+    from esbulk_spark.plans.build import build_index
+    from esbulk_spark.plans.score import bm25_fullscan
+
+    base = str(tmp_path)
+    docs, n = assign_doc_ids_with_count(corpus, ("repo", "path", "commit"), out_col="doc_id")
+    segs = []
+    for name, pred in [("s1", F.col("doc_id") < n // 2), ("s2", F.col("doc_id") >= n // 2)]:
+        cfg = IndexConfig(index_dir=f"{base}/{name}", id_col="doc_id", n_buckets=8,
+                          n_shards=2, chunk_cap=256)
+        build_index(spark, docs.filter(pred), cfg, input_sig=name)
+        segs.append(cfg.index_dir)
+
+    for name, n_buckets, n_shards, mode in (
+        ("same", None, None, "metadata_refresh"),
+        ("shards", None, 2, None),
+        ("buckets", 4, None, None),
+    ):
+        out = f"{base}/{name}"
+        rc = cli_mod._cmd_merge(spark, argparse.Namespace(
+            segments=",".join(segs), index_dir=out,
+            n_buckets=n_buckets, n_shards=n_shards,
+        ))
+        assert rc == 0
+        stats = json.loads(capsys.readouterr().out)
+        assert stats["n_buckets"] == (n_buckets or 8) and stats["chunk_cap"] == 256
+        with open(os.path.join(out, "manifest.jsonl")) as f:
+            post = [e for e in map(json.loads, f) if e["stage"] == "postings"][-1]
+        assert post.get("mode") == mode, name
+        r = IndexReader(spark, out)
+        for q in ("getUserName", "flushBuffer retry score"):
+            oracle = [(x.doc_id, round(x.score, 6)) for x in
+                      bm25_fullscan(r.docs(), q, text_col="content", k=10).collect()]
+            assert [(x.doc_id, round(x.score, 6))
+                    for x in r.search(q, k=10).collect()] == oracle, (name, q)
+
+    with pytest.raises(SystemExit):
+        cli_mod.main(["merge", "--segments", segs[0], "--index-dir", f"{base}/x", "--fast"])

@@ -208,3 +208,62 @@ def test_segmented_with_positions_phrase(spark, corpus, tmp_path):
         b = [(x.doc_id, x.phrase_freq, round(x.score, 6))
              for x in rs.search_phrase(q).collect()]
         assert a == b, q
+
+
+def _postings_mode(d):
+    with open(os.path.join(d, "manifest.jsonl")) as f:
+        entries = [json.loads(line) for line in f]
+    return [e for e in entries if e["stage"] == "postings"][-1].get("mode")
+
+
+def _assert_rank_identical(spark, d):
+    from esbulk_spark.plans.reader import IndexReader
+    from esbulk_spark.plans.score import bm25_fullscan
+
+    r = IndexReader(spark, d)
+    for q in ("getUserName", "flushBuffer retry score"):
+        oracle = [
+            (x.doc_id, round(x.score, 6))
+            for x in bm25_fullscan(r.docs(), q, text_col="content", k=10).collect()
+        ]
+        assert [(x.doc_id, round(x.score, 6)) for x in r.search(q, k=10).collect()] == oracle, q
+
+
+def test_merge_picks_path_from_layout(spark, corpus, tmp_path):
+    """merge_segments refreshes metadata when asked for the segments'
+    own layout and re-encodes otherwise, rank-identical either way;
+    merge_segments_fast refuses a layout that differs."""
+    import pytest
+
+    from esbulk_spark.operators.docids import assign_doc_ids_with_count
+    from esbulk_spark.operators.merge import merge_segments_fast
+
+    base = str(tmp_path)
+    docs, n = assign_doc_ids_with_count(corpus, ("repo", "path", "commit"), out_col="doc_id")
+    segs = []
+    for name, pred in [("s1", F.col("doc_id") < n // 2), ("s2", F.col("doc_id") >= n // 2)]:
+        cfg = IndexConfig(index_dir=f"{base}/{name}", id_col="doc_id", n_buckets=8,
+                          n_shards=2, chunk_cap=256)
+        build_index(spark, docs.filter(pred), cfg, input_sig=name)
+        segs.append(cfg.index_dir)
+
+    cases = {
+        "same": ({}, "metadata_refresh"),
+        "shards": ({"n_shards": 2}, None),
+        "buckets": ({"n_buckets": 4}, None),
+    }
+    for name, (over, mode) in cases.items():
+        cfg = IndexConfig(**dict(dict(index_dir=f"{base}/{name}", id_col="doc_id",
+                                      n_buckets=8, chunk_cap=256), **over))
+        stats = merge_segments(spark, segs, cfg)
+        assert _postings_mode(cfg.index_dir) == mode, name
+        assert stats["n_buckets"] == cfg.n_buckets
+        if cfg.n_shards:
+            assert stats["n_shards"] == cfg.n_shards
+        _assert_rank_identical(spark, cfg.index_dir)
+
+    with pytest.raises(ValueError, match="n_buckets"):
+        merge_segments_fast(spark, segs, IndexConfig(
+            index_dir=f"{base}/bad", id_col="doc_id", n_buckets=4, chunk_cap=256,
+        ))
+    assert not os.path.exists(f"{base}/bad")

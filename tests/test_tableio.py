@@ -56,6 +56,31 @@ def test_reader_uses_tableio(spark, index_dir):
     assert r.io.exists("postings") and r.io.exists("dictionary")
 
 
+def test_table_open_runs_no_spark_job(spark, index_dir, count_jobs):
+    """A table opens with the schema from a part file's footer: no
+    schema-inference job, the same schema Spark infers (the ``bucket``
+    partition column included), so a fresh reader's first batch runs as
+    many jobs as its second."""
+    from esbulk_spark.plans.reader import IndexReader
+
+    r = IndexReader(spark, index_dir)
+    with count_jobs() as opened:
+        r.postings()
+        r.docs()
+    assert opened["jobs"] == 0
+    batch = {"a": "flushBuffer retry", "b": "getUserName"}
+    with count_jobs() as first:
+        r.search_many(batch).collect()
+    with count_jobs() as second:
+        r.search_many(batch).collect()
+    assert first["jobs"] == second["jobs"]
+    io = ParquetDirIO(index_dir)
+    for name in ("docs", "dictionary", "postings"):
+        inferred = spark.read.parquet(os.path.join(index_dir, name)).schema
+        assert io._schema(name) is not None
+        assert io.read(spark, name).schema == inferred
+
+
 def test_iceberg_read_terms_filters_and_converts(spark, monkeypatch):
     """IcebergIO.read_terms over a stub of the catalog read it wraps:
     bucket and term filters apply, ``bucket`` is dropped unless asked
