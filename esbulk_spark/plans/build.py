@@ -104,10 +104,10 @@ def _rle_entries(toks_col: str, with_positions: bool = False):
     order, and its ``positions`` are the run's pos values — the same
     sorted list a posexplode + per-(term, doc) collect would build."""
     toks = F.col(toks_col)
+    # sort_array compares natively; array_sort's default comparator is an
+    # interpreted lambda (noop-sink RLE pass at 20k docs: 4.3 s vs 5.6 s
+    # with positions, 1.8 s vs 3.0 s without)
     if with_positions:
-        # sort_array compares the (term, pos) structs natively; array_sort's
-        # default comparator is an interpreted lambda (noop-sink RLE pass
-        # at 20k docs: 4.3 s vs 5.6 s)
         items = F.sort_array(
             F.transform(toks, lambda t, i: F.struct(t.alias("term"), i.alias("pos")))
         )
@@ -117,7 +117,7 @@ def _rle_entries(toks_col: str, with_positions: bool = False):
 
         empty = "array<struct<term:string,tf:int,positions:array<int>>>"
     else:
-        items, term_at = F.array_sort(toks), F.get
+        items, term_at = F.sort_array(toks), F.get
         empty = "array<struct<term:string,tf:int>>"
 
     # "let"-bind each intermediate as a HOF lambda variable (transform
@@ -179,7 +179,7 @@ def _token_source(spark: SparkSession, docs: DataFrame, cfg: IndexConfig, docs_p
     re-derivation pins is unpersisted on exit."""
     pinned = None
     if cfg.store_content:
-        src = spark.read.parquet(docs_path)
+        src = _read_table(spark, docs_path)
     elif cfg.id_col:
         src = docs.withColumn("doc_id", F.col(cfg.id_col).cast("long"))
     else:
@@ -454,6 +454,14 @@ def _atomic_write(
     )
 
 
+def _read_table(spark: SparkSession, path: str) -> DataFrame:
+    """A table ``_atomic_write`` committed, opened with the schema from
+    its footer, so the open runs no schema-inference job."""
+    from esbulk_spark.plans.tableio import ParquetDirIO
+
+    return ParquetDirIO(os.path.dirname(path)).read(spark, os.path.basename(path))
+
+
 # row-group size for term-keyed tables (postings, dictionary): these are
 # written SORTED by term within each bucket file, so parquet row-group
 # min/max statistics on `term` prune a query's scan to the row groups
@@ -559,7 +567,7 @@ def build_index(
             if pinned is not None:
                 pinned.unpersist()
             if n_written is None:
-                n_written = spark.read.parquet(docs_path).count()
+                n_written = _read_table(spark, docs_path).count()
         man.record("docs", rows=n_written, secs=t.secs)
     n_docs = next(
         e["rows"] for e in reversed(man.entries)
@@ -576,7 +584,7 @@ def build_index(
     # for its block maxes BEFORE any posting flows.
     stats_path = os.path.join(d, STATS_FILE)
     if not man.is_done("stats", stats_path):
-        agg = spark.read.parquet(docs_path).agg(
+        agg = _read_table(spark, docs_path).agg(
             F.sum("dl").alias("total_tokens"),
             F.sum("n_terms").alias("total_postings"),
             F.max("dl").alias("max_dl"),
@@ -758,7 +766,7 @@ def build_index(
             src = (
                 chunks_cache
                 if chunks_cache is not None
-                else spark.read.parquet(post_path)
+                else _read_table(spark, post_path)
             )
             dictionary = (
                 src.groupBy("term")

@@ -8,10 +8,10 @@ IndexReader's query families are adapters over three shared pieces:
 
   * the read seam, ``read_terms``: dictionary, postings and tombstone
     rows of the query's terms, read on the driver. The terms hash to
-    bucket directories and only those files are read, through pyarrow
-    with a ``term in terms`` filter that prunes the term-sorted row
-    groups — no Spark job. SegmentSetReader overrides only this and
-    ``_table``.
+    bucket directories and only those files are read, through pyarrow:
+    of each term-sorted file only the row groups whose cached footer
+    statistics bracket a wanted term — no Spark job. SegmentSetReader
+    overrides only this and ``_table``.
   * the single-query top-k gate, ``_topk_candidates``: when the terms'
     postings fit under ``driver_score_max`` their chunk rows come
     through the seam and the block-max WAND kernel (plans/wand.py)
@@ -52,8 +52,9 @@ from esbulk_spark.plans.build import STATS_FILE
 from esbulk_spark.plans.wand import RESULT_SCHEMA, idf as idf_fn, make_group_scorer
 from esbulk_spark.plans.score import topk_deterministic
 
-# the postings columns score_group reads: the distributed scorer projects
-# to these before its (qid, shard) exchange
+# the postings columns score_group reads: the driver path reads only
+# these, and the distributed scorer projects to them before its
+# (qid, shard) exchange
 _SCORED_COLS = (
     "shard", "term", "min_doc", "n", "blob_ids", "blob_tfs", "blob_dls",
     "block_last", "block_max_tfnorm", "off_ids", "off_tfs", "off_dls",
@@ -365,7 +366,7 @@ class IndexReader:
             dense_max=self.dense_max,
             exclude_bc=self._deleted_bc(),
         )
-        return tagged.groupBy("qid", "shard").applyInPandas(scorer, RESULT_SCHEMA)
+        return tagged.groupBy("qid", "shard").applyInArrow(scorer, RESULT_SCHEMA)
 
     def _shard_candidates(
         self, analyzed: dict[str, list[str]], k: int, prune: bool
@@ -431,22 +432,31 @@ class IndexReader:
         """(shard, doc_id, score) per-shard top-k, scored driver-side.
         Identical math to the distributed scorer: same score_group
         kernel, same per-shard top-k contract."""
-        from esbulk_spark.plans.wand import score_group
+        import numpy as np
 
-        pdf = self.read_postings(sorted(dfs)).to_pandas()
-        if not len(pdf):
+        # looked up per call, so a wrapped score_group is the one called
+        from esbulk_spark.plans.wand import ChunkRows, score_group
+
+        t = self.read_postings(sorted(dfs), list(_SCORED_COLS))
+        if not t.num_rows:
             return []
-        pdf["df"] = pdf["term"].map(dfs)
+        chunks = ChunkRows.from_arrow(t)
+        chunks.cols["df"] = np.array(
+            [dfs[x] for x in chunks.cols["term"]], dtype=np.int64)
+        shard_col = chunks["shard"]
+        order = np.argsort(shard_col, kind="stable")
+        firsts = np.flatnonzero(np.diff(shard_col[order], prepend=-1))
         s = self.stats
         out: list[tuple[int, int, float]] = []
-        for shard, grp in pdf.groupby("shard", sort=False):
+        for idx in np.split(order, firsts[1:]):
             ids, scores = score_group(
-                grp, self.n_docs, k, s["k1"], s["b"], s["avgdl"],
+                chunks.take(idx), self.n_docs, k, s["k1"], s["b"], s["avgdl"],
                 s["block_size"], prune, dense_max=self.dense_max,
                 exclude=self._deleted_arr(),
             )
+            shard = int(shard_col[idx[0]])
             out.extend(
-                (int(shard), int(d), float(sc)) for d, sc in zip(ids, scores)
+                (shard, int(d), float(sc)) for d, sc in zip(ids, scores)
             )
         return out
 

@@ -46,23 +46,23 @@ def bm25_fullscan(
     if not terms:
         return empty
 
-    # ONE tokenize pass: project (doc_id, dl, query-term tokens only)
-    # and persist that reduced table — tiny (docs matching the query's
-    # terms dominate its size). The plan's three actions (stats collect,
-    # df collect, final top-k job) would otherwise each re-run the
-    # analyzer over the whole corpus (guide §5: reuse > recompute).
+    # Nothing is cached: the returned plan would read a persisted
+    # projection after this call, so it could never be released. One job
+    # gets the corpus stats and the query terms' df in one tokenize pass;
+    # the returned top-k plan tokenizes again when it runs.
     red = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.size(tokens_col(text_col)).alias("dl"),
         F.filter(tokens_col(text_col), lambda t: t.isin(*terms)).alias("qt"),
-    ).persist()
-
+    )
     stats = red.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total")
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total"),
+        *[F.sum(F.array_contains("qt", t).cast("long")).alias(f"df{i}")
+          for i, t in enumerate(terms)],
     ).collect()[0]
     n_docs = int(stats["n"] or 0)
-    if n_docs == 0:
-        red.unpersist()
+    dfs = {t: int(d) for i, t in enumerate(terms) if (d := stats[f"df{i}"])}
+    if not dfs:
         return empty
     avgdl = float(stats["total"] or 0) / n_docs
 
@@ -71,11 +71,6 @@ def bm25_fullscan(
         .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfs = {r["term"]: r["df"] for r in
-           tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).collect()}
-    if not dfs:
-        red.unpersist()
-        return empty
     idf_map = F.create_map(
         *[x for t, d in sorted(dfs.items())
           for x in (F.lit(t), F.lit(float(idf_fn(d, n_docs))))]

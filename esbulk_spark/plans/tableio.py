@@ -19,6 +19,8 @@ Besides the Spark ``read``, a backend serves one driver-side read,
 ``read_terms``: the rows of a term-keyed table for a few terms, as an
 Arrow table and without a Spark job. It is how the reader fetches
 dictionary rows, small-query postings and tombstones (plans/reader.py).
+``ParquetDirIO`` keeps every part file's parsed footer, so a read opens
+only the row groups that can hold a wanted term.
 
 The engine talks ONLY to the interface; backends are chosen per index
 (``for_index_dir`` picks Iceberg when the location is a table-ident
@@ -81,10 +83,10 @@ class TableIO:
     ):
         """Driver-side read of table ``name`` as a ``pyarrow.Table``: the
         rows whose ``term`` is in ``terms`` from the ``bucket``
-        partitions in ``buckets``. ``None`` lifts that restriction (the
-        unpartitioned, term-less ``deletes`` table is read whole).
-        ``columns`` defaults to every column but the ``bucket`` partition
-        key."""
+        partitions in ``buckets``, in file and row order. ``None`` lifts
+        that restriction (the unpartitioned, term-less ``deletes`` table
+        is read whole). ``columns`` defaults to every column but the
+        ``bucket`` partition key."""
         raise NotImplementedError
 
     def exists(self, name: str) -> bool:
@@ -104,6 +106,9 @@ class ParquetDirIO(TableIO):
         # (name, bucket) -> the table's parquet files in that partition
         # directory; bucket None = every file of the table
         self._files: dict[tuple[str, int | None], list[str]] = {}
+        # part file -> (parsed footer, per-row-group ``term`` (min, max),
+        # None where a group has no such statistics)
+        self._footers: dict[str, tuple] = {}
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -126,6 +131,29 @@ class ParquetDirIO(TableIO):
     def _forget(self, name: str) -> None:
         for key in [k for k in self._files if k[0] == name]:
             del self._files[key]
+        prefix = self._path(name) + os.sep
+        for f in [f for f in self._footers if f.startswith(prefix)]:
+            del self._footers[f]
+
+    def _footer(self, f: str) -> tuple:
+        """``f``'s parsed ``FileMetaData`` and its row groups' ``term``
+        ranges, parsed once per part file and kept until ``_forget``."""
+        hit = self._footers.get(f)
+        if hit is None:
+            import pyarrow.parquet as pq
+
+            meta = pq.read_metadata(f)
+            schema = meta.schema
+            col = next(
+                (i for i in range(meta.num_columns) if schema.column(i).path == "term"),
+                None,
+            )
+            ranges = []
+            for g in range(meta.num_row_groups):
+                st = None if col is None else meta.row_group(g).column(col).statistics
+                ranges.append((st.min, st.max) if st is not None and st.has_min_max else None)
+            hit = self._footers[f] = (meta, ranges)
+        return hit
 
     def write(
         self,
@@ -201,9 +229,16 @@ class ParquetDirIO(TableIO):
         return schema
 
     def read_terms(self, name, buckets=None, terms=None, columns=None):
-        """``pyarrow.parquet`` over the listed files of the wanted bucket
-        directories; the ``term in terms`` filter prunes the term-sorted
-        row groups by their min/max statistics."""
+        """The listed files of the wanted bucket directories, each opened
+        on its cached footer. Only the row groups whose ``term`` min/max
+        brackets a wanted term are read (in a term-sorted bucket file,
+        few of them); a group without statistics is always read, and
+        ``terms=None`` reads every group. ``pc.is_in`` then keeps the
+        wanted rows, in file and row order."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         files = (
@@ -218,15 +253,32 @@ class ParquetDirIO(TableIO):
             files = self._list(name, None)
         if not files:
             raise FileNotFoundError(f"no parquet files under {self._path(name)}")
-        t = pq.read_table(
-            files,
-            columns=columns,
-            filters=None if terms is None else [("term", "in", list(terms))],
-            partitioning=None,
-        )
-        if columns is None and "bucket" in t.column_names:
-            t = t.drop_columns(["bucket"])
-        return t
+        wanted = None if terms is None else sorted(set(terms))
+
+        def brackets(rng):
+            if wanted is None or rng is None:
+                return True
+            i = bisect.bisect_left(wanted, rng[0])
+            return i < len(wanted) and wanted[i] <= rng[1]
+
+        schema = self._footer(files[0])[0].schema.to_arrow_schema()
+        cols = list(columns) if columns is not None else [
+            c for c in schema.names if c != "bucket"
+        ]
+        read = cols if wanted is None or "term" in cols else cols + ["term"]
+        parts = []
+        for f in files:
+            meta, ranges = self._footer(f)
+            groups = [g for g, rng in enumerate(ranges) if brackets(rng)]
+            if groups:
+                parts.append(pq.ParquetFile(f, metadata=meta).read_row_groups(
+                    groups, columns=read))
+        if not parts:
+            return pa.schema([schema.field(c) for c in cols]).empty_table()
+        t = pa.concat_tables(parts)
+        if wanted is not None:
+            t = t.filter(pc.is_in(t["term"], value_set=pa.array(wanted, t["term"].type)))
+        return t.select(cols)
 
     def exists(self, name: str) -> bool:
         return os.path.exists(self._path(name))

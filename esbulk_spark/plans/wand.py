@@ -6,9 +6,12 @@ Lucene's BM25 + block-max WAND (Ding & Suel 2011). Here the same pruning
 idea is re-expressed in a *vectorized, shard-parallel* form that fits
 Spark's execution model:
 
-  * The index is doc-range sharded; one applyInPandas group = one
-    (query, shard). Shards run as independent tasks across the cluster;
-    a global top-k merge of the tiny per-shard winners finishes the job.
+  * The index is doc-range sharded; one group = one (query, shard): an
+    ``applyInArrow`` group on the distributed path, a slice of the
+    driver's Arrow read on the driver path. Both hand ``score_group``
+    the same ``ChunkRows`` columns. Shards run as independent tasks
+    across the cluster; a global top-k merge of the tiny per-shard
+    winners finishes the job.
   * Within a group, candidate doc space is partitioned into ELEMENTARY
     RANGES — the refinement of all posting-block boundaries of the
     query's terms. Each range has an exact upper bound
@@ -67,6 +70,69 @@ def not_in_sorted(ids: np.ndarray, excl: np.ndarray) -> np.ndarray:
     return ~hit
 
 
+class ChunkRows:
+    """Postings chunk rows as numpy columns: the one input form of
+    ``score_group``, built from Arrow by the driver path and by the
+    distributed scorer alike. Flat columns are numpy arrays; list and
+    binary columns are ``(values, offsets)`` pairs over the Arrow
+    buffers, so building one copies no blob. A holder is a view that
+    selects rows by index: ``len(chunks)`` is its chunk-row count and
+    ``chunks[name]`` a flat column's numpy array over those rows."""
+
+    __slots__ = ("cols", "rows")
+
+    def __init__(self, cols: dict, rows: np.ndarray):
+        self.cols = cols
+        self.rows = rows
+
+    @classmethod
+    def from_arrow(cls, t) -> "ChunkRows":
+        """Every column of the Arrow table or record batch ``t``."""
+        import pyarrow as pa
+
+        cols: dict = {}
+        for name in t.column_names:
+            a = t.column(name)
+            if isinstance(a, pa.ChunkedArray):
+                a = a.combine_chunks()
+            ty = a.type
+            if pa.types.is_list(ty) or pa.types.is_large_list(ty):
+                cols[name] = (a.values.to_numpy(), a.offsets.to_numpy())
+            elif pa.types.is_binary(ty) or pa.types.is_large_binary(ty):
+                _valid, offs, data = a.buffers()
+                off_t = np.int64 if pa.types.is_large_binary(ty) else np.int32
+                cols[name] = (
+                    np.frombuffer(data, np.uint8) if data is not None
+                    else np.zeros(0, np.uint8),
+                    np.frombuffer(offs, off_t)[a.offset: a.offset + len(a) + 1],
+                )
+            else:
+                cols[name] = a.to_numpy(zero_copy_only=False)
+        return cls(cols, np.arange(t.num_rows))
+
+    def __len__(self) -> int:
+        return self.rows.size
+
+    def __getitem__(self, name: str) -> np.ndarray:
+        return self.cols[name][self.rows]
+
+    def take(self, idx: np.ndarray) -> "ChunkRows":
+        """The view over this view's rows at positions ``idx``."""
+        return ChunkRows(self.cols, self.rows[idx])
+
+    def cell(self, name: str, row: int) -> np.ndarray:
+        """List or binary column ``name`` at absolute row ``row``."""
+        values, offs = self.cols[name]
+        return values[offs[row]: offs[row + 1]]
+
+    def gather(self, name: str, rows: np.ndarray) -> np.ndarray:
+        """List column ``name``'s cells at absolute ``rows``, concatenated."""
+        values, offs = self.cols[name]
+        lo, nb = offs[rows], offs[rows + 1] - offs[rows]
+        first = np.cumsum(nb) - nb
+        return values[np.arange(nb.sum()) - np.repeat(first - lo, nb)]
+
+
 class _TermCursor:
     """Decoded-on-demand view over one term's chunk rows within a shard."""
 
@@ -77,51 +143,44 @@ class _TermCursor:
     FULL_DECODE_MAX = 1 << 15
 
     __slots__ = ("idf", "blk_start", "blk_end", "blk_ub", "blk_row", "blk_j",
-                 "blk_n", "rows", "cache", "chunk_cache", "k1", "b", "avgdl",
-                 "bs")
+                 "blk_n", "chunks", "rows", "ns", "cache", "chunk_cache", "k1",
+                 "b", "avgdl", "bs")
 
-    def __init__(self, term_idf: float, rows: list, block_size: int,
-                 k1: float, b: float, avgdl: float):
-        # rows: list of pdf row tuples sorted by min_doc
+    def __init__(self, term_idf: float, chunks: ChunkRows, rows: np.ndarray,
+                 block_size: int, k1: float, b: float, avgdl: float):
+        # rows: the term's absolute chunk rows in ``chunks``, by min_doc
         self.idf = term_idf
+        self.chunks = chunks
         self.rows = rows
+        self.ns = chunks.cols["n"][rows].astype(np.int64)
         self.cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
         self.chunk_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self.k1, self.b, self.avgdl = k1, b, avgdl
         self.bs = block_size
-        starts, ends, ubs, rix, jix, ns = [], [], [], [], [], []
-        for ri, r in enumerate(rows):
-            block_last = np.asarray(r["block_last"], dtype=np.int64)
-            bmax = np.asarray(r["block_max_tfnorm"], dtype=np.float64)
-            nb = block_last.size
-            s = np.empty(nb, dtype=np.int64)
-            s[0] = r["min_doc"]
-            s[1:] = block_last[:-1] + 1
-            starts.append(s)
-            ends.append(block_last)
-            ubs.append(term_idf * bmax)
-            rix.append(np.full(nb, ri, dtype=np.int64))
-            jix.append(np.arange(nb, dtype=np.int64))
-            n = int(r["n"])
-            cnt = np.full(nb, block_size, dtype=np.int64)
-            cnt[-1] = n - (nb - 1) * block_size
-            ns.append(cnt)
-        self.blk_start = np.concatenate(starts)
-        self.blk_end = np.concatenate(ends)
-        self.blk_ub = np.concatenate(ubs)
-        self.blk_row = np.concatenate(rix)
-        self.blk_j = np.concatenate(jix)
-        self.blk_n = np.concatenate(ns)
+        _, offs = chunks.cols["block_last"]
+        nb = (offs[rows + 1] - offs[rows]).astype(np.int64)
+        first = np.cumsum(nb) - nb
+        self.blk_end = chunks.gather("block_last", rows).astype(np.int64)
+        self.blk_start = np.empty_like(self.blk_end)
+        self.blk_start[1:] = self.blk_end[:-1] + 1
+        self.blk_start[first] = chunks.cols["min_doc"][rows]
+        self.blk_ub = term_idf * chunks.gather("block_max_tfnorm", rows).astype(np.float64)
+        self.blk_row = np.repeat(np.arange(rows.size, dtype=np.int64), nb)
+        self.blk_j = np.arange(self.blk_end.size, dtype=np.int64) - np.repeat(first, nb)
+        self.blk_n = np.full(self.blk_end.size, block_size, dtype=np.int64)
+        self.blk_n[first + nb - 1] = self.ns - (nb - 1) * block_size
+
+    def _blobs(self, ri: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        row = self.rows[ri]
+        return tuple(self.chunks.cell(c, row)
+                     for c in ("blob_ids", "blob_tfs", "blob_dls"))
 
     def _decode_chunk(self, ri: int) -> tuple[np.ndarray, np.ndarray]:
         """(doc_ids, contribs) of ALL postings in chunk row ri; cached."""
         hit = self.chunk_cache.get(ri)
         if hit is not None:
             return hit
-        r = self.rows[ri]
-        ids, tfs, dls = decode_chunk(
-            r["blob_ids"], r["blob_tfs"], r["blob_dls"], count=int(r["n"])
-        )
+        ids, tfs, dls = decode_chunk(*self._blobs(ri), count=int(self.ns[ri]))
         out = (ids, self.idf * tfnorm(tfs, dls, self.k1, self.b, self.avgdl))
         self.chunk_cache[ri] = out
         return out
@@ -132,20 +191,21 @@ class _TermCursor:
         hit = self.cache.get(key)
         if hit is not None:
             return hit
-        r = self.rows[key[0]]
-        j = key[1]
-        if int(r["n"]) <= self.FULL_DECODE_MAX:
-            ids, contrib = self._decode_chunk(key[0])
+        ri, j = key
+        if int(self.ns[ri]) <= self.FULL_DECODE_MAX:
+            ids, contrib = self._decode_chunk(ri)
             s = j * self.bs
             e = s + int(self.blk_n[bi])
             out = (ids[s:e], contrib[s:e])
             self.cache[key] = out
             return out
+        row = self.rows[ri]
         ids, tfs, dls = decode_chunk(
-            r["blob_ids"], r["blob_tfs"], r["blob_dls"],
+            *self._blobs(ri),
             count=int(self.blk_n[bi]),
-            offsets=(int(r["off_ids"][j]), int(r["off_tfs"][j]), int(r["off_dls"][j])),
-            base=int(r["block_last"][j - 1]) if j > 0 else 0,
+            offsets=tuple(int(self.chunks.cell(c, row)[j])
+                          for c in ("off_ids", "off_tfs", "off_dls")),
+            base=int(self.blk_end[bi - 1]) if j > 0 else 0,
         )
         out = (ids, self.idf * tfnorm(tfs, dls, self.k1, self.b, self.avgdl))
         self.cache[key] = out
@@ -153,7 +213,7 @@ class _TermCursor:
 
 
 def score_group(
-    pdf,
+    chunks: ChunkRows,
     n_docs: int,
     k: int,
     k1: float,
@@ -167,8 +227,9 @@ def score_group(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Score one (query, shard) group of postings-chunk rows.
 
-    Per-term df rides in as a column (broadcast-joined from the
-    dictionary); idf is computed here. Returns (top_doc_ids, top_scores),
+    Per-term df rides in as a column (a literal map or a broadcast join
+    on the distributed path, the df cache on the driver); idf is
+    computed here. Returns (top_doc_ids, top_scores),
     sorted by (score desc, doc_id asc), at most k entries.
 
     ``exclude`` (sorted int64 doc_ids) is the soft-delete tombstone set:
@@ -178,13 +239,18 @@ def score_group(
     less tight) for the live docs, so pruning remains exact."""
     if exclude is not None and not exclude.size:
         exclude = None
-    cursors: list[_TermCursor] = []
-    for term, grp in pdf.groupby("term", sort=True):
-        t_idf = float(idf(int(grp["df"].iloc[0]), n_docs))
-        rows = [grp.iloc[i] for i in np.argsort(grp["min_doc"].values, kind="stable")]
-        cursors.append(_TermCursor(t_idf, rows, block_size, k1, b, avgdl))
-    if not cursors:
+    if not len(chunks):
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
+    # terms in code-point order, each term's rows by min_doc
+    _terms, codes = np.unique(chunks["term"], return_inverse=True)
+    order = np.lexsort((chunks["min_doc"], codes))
+    codes, rows, dfs = codes[order], chunks.rows[order], chunks["df"][order]
+    firsts = np.flatnonzero(np.diff(codes, prepend=-1))
+    cursors = [
+        _TermCursor(float(idf(int(dfs[f]), n_docs)), chunks, term_rows,
+                    block_size, k1, b, avgdl)
+        for f, term_rows in zip(firsts, np.split(rows, firsts[1:]))
+    ]
 
     # dense path for small groups: below ~half a million postings,
     # decoding everything (3 vectorized varint calls per chunk) and one
@@ -192,11 +258,11 @@ def score_group(
     # small-op overhead per block) — WAND's pruning only pays once the
     # group is large enough that skipped decode outweighs loop overhead.
     # Exact either way; rank-identity asserted in tests/test_rank_fuzz.
-    total_n = sum(int(r["n"]) for c in cursors for r in c.rows)
+    total_n = int(chunks["n"].sum())
     if total_n <= (DENSE_GROUP_MAX if dense_max is None else dense_max):
         ids_parts, contrib_parts = [], []
         for c in cursors:
-            for ri in range(len(c.rows)):
+            for ri in range(c.rows.size):
                 i_arr, c_arr = c._decode_chunk(ri)
                 ids_parts.append(i_arr)
                 contrib_parts.append(c_arr)
@@ -304,20 +370,24 @@ def make_group_scorer(
     dense_max: int | None = None,
     exclude_bc=None,
 ):
-    """applyInPandas((qid, shard) group) -> top-k rows for that shard.
-    ``exclude_bc``: optional Spark broadcast of the sorted tombstone
-    doc_id array (one copy per executor, not per task)."""
-    import pandas as pd
+    """applyInArrow((qid, shard) group) -> that shard's top-k rows as a
+    ``pyarrow.Table`` of RESULT_SCHEMA. ``exclude_bc``: optional Spark
+    broadcast of the sorted tombstone doc_id array (one copy per
+    executor, not per task)."""
+    import pyarrow as pa
 
-    def fn(key, pdf):
-        qid, shard = key[0], int(key[1])
+    def fn(key, table):
+        qid, shard = key[0].as_py(), int(key[1].as_py())
         ids, scores = score_group(
-            pdf, n_docs, k, k1, b, avgdl, block_size, prune,
-            dense_max=dense_max,
+            ChunkRows.from_arrow(table), n_docs, k, k1, b, avgdl, block_size,
+            prune, dense_max=dense_max,
             exclude=exclude_bc.value if exclude_bc is not None else None,
         )
-        return pd.DataFrame(
-            {"qid": qid, "shard": shard, "doc_id": ids, "score": scores}
-        )
+        return pa.table({
+            "qid": pa.array([qid] * ids.size, pa.string()),
+            "shard": pa.array(np.full(ids.size, shard, np.int32)),
+            "doc_id": pa.array(ids, pa.int64()),
+            "score": pa.array(scores, pa.float64()),
+        })
 
     return fn

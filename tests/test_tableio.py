@@ -137,3 +137,33 @@ def test_iceberg_backend_roundtrip(spark, tmp_path):
     io.write(spark.createDataFrame([(3, 0)], "id long, bucket int"), "postings")
     io.refresh(spark, "postings")
     assert [r.id for r in io.read(spark, "postings").collect()] == [3]
+
+
+def test_build_opens_its_tables_without_a_job(spark, tmp_path, count_jobs, monkeypatch):
+    """build_index opens the tables it wrote through ParquetDirIO.read:
+    the same build with Spark's schema-inferring open runs one job more
+    per open."""
+    from esbulk_spark.config import IndexConfig
+    from esbulk_spark.corpus import synth_corpus
+    from esbulk_spark.plans import build
+
+    docs = synth_corpus(spark, 60, seed=3).cache()
+    docs.count()
+    plain = build._read_table
+
+    def jobs(name, open_table):
+        opens = []
+        monkeypatch.setattr(
+            build, "_read_table",
+            lambda spark, path: opens.append(path) or open_table(spark, path),
+        )
+        cfg = IndexConfig(index_dir=str(tmp_path / name), n_buckets=4, n_shards=2)
+        with count_jobs() as c:
+            build.build_index(spark, docs, cfg, input_sig=f"opens-{name}")
+        return c["jobs"], opens
+
+    footer, opens = jobs("footer", plain)
+    inferred, _ = jobs("inferred", lambda spark, path: spark.read.parquet(path))
+    docs.unpersist()
+    assert len(opens) >= 2 and any(p.endswith("docs") for p in opens)
+    assert inferred - footer == len(opens)
