@@ -6,7 +6,7 @@ bulk-feeds via /root/reference/indexing.go:261-356); we own it.
 
 All loops are over the varint BYTE WIDTH (<= 10 for uint64), never over
 elements — encode/decode cost is O(n) numpy passes, suitable for use
-inside Arrow-batched pandas UDFs with posting lists of millions of ids.
+inside Arrow-batched UDFs with posting lists of millions of ids.
 
 Layout contract (the postings table's chunk rows, written by
 plans/build.py's encoder):
@@ -18,13 +18,17 @@ plans/build.py's encoder):
   * tf and dl streams are plain varint (no delta).
 
 This module is also the one kernel every numpy reader of that format
-calls: ``decode_chunk`` is the only decode of the (blob_ids, blob_tfs,
-blob_dls) triple — WAND scoring (whole chunk or one block), the reader's
-row decode, merge's tf-row decode and its block-max refresh — and
-``tfnorm`` is the only numpy BM25 tf-norm, used by those and by the
-encoder's stored max_tfnorm / block_max_tfnorm. One float operation
-order everywhere is what keeps every stored bound >= the score WAND
-computes for a posting it covers.
+calls. ``ChunkRows`` holds chunk rows as numpy columns over their Arrow
+buffers; ``decode_rows`` is the batch inverse of the build's encoder
+(``plans/build._encode_batch_groups``): one varint decode per stream
+over every selected row's blob bytes, one cumsum for the ids. WAND's
+dense path and whole-chunk decode, the reader's row decode and its
+seed, merge's tf-row decode and its block-max refresh all call it.
+``decode_chunk`` remains for WAND's per-block skip-decode. ``tfnorm``
+is the only numpy BM25 tf-norm, used by those and by the encoder's
+stored max_tfnorm / block_max_tfnorm. One float operation order
+everywhere is what keeps every stored bound >= the score WAND computes
+for a posting it covers.
 """
 
 from __future__ import annotations
@@ -132,59 +136,6 @@ def delta_decode(deltas: np.ndarray, base: int = 0) -> np.ndarray:
     return out
 
 
-def varint_encode_blocks(values: np.ndarray, block_size: int = BLOCK_SIZE) -> tuple[bytes, np.ndarray]:
-    """Plain-varint encode + byte offsets of each block start (skip decode)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b"", np.zeros(0, dtype=np.int64)
-    blob, widths = varint_encode_with_widths(v)
-    byte_pos = np.concatenate(([0], np.cumsum(widths)[:-1]))
-    starts = np.arange(0, v.size, block_size, dtype=np.int64)
-    return blob, byte_pos[starts]
-
-
-def encode_postings(ids: np.ndarray, block_size: int = BLOCK_SIZE) -> tuple[bytes, np.ndarray, np.ndarray]:
-    """Encode sorted doc ids -> (blob, block_byte_offsets, block_last_ids).
-
-    Blocks of ``block_size``; block b's first delta is relative to block
-    b-1's last id (block 0 relative to 0), enabling independent decode.
-    """
-    ids = np.asarray(ids, dtype=np.uint64)
-    deltas = delta_encode(ids)
-    n = ids.size
-    if n == 0:
-        return b"", np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.uint64)
-    # The sequential delta stream is already blockwise-rebased: the delta at
-    # a block's first position is ids[lo] - ids[lo-1] = ids[lo] - block_last[b-1].
-    # So one encode pass suffices; block byte offsets fall out of the widths.
-    blob, widths = varint_encode_with_widths(deltas)
-    byte_pos = np.concatenate(([0], np.cumsum(widths)[:-1]))
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    block_ends = np.minimum(starts + block_size, n) - 1
-    return blob, byte_pos[starts], ids[block_ends]
-
-
-def decode_block(
-    blob: bytes,
-    offsets: np.ndarray,
-    lasts: np.ndarray,
-    bi: int,
-    n_in_block: int,
-    block_size: int = BLOCK_SIZE,
-) -> np.ndarray:
-    """Decode one block of doc ids independently."""
-    base = int(lasts[bi - 1]) if bi > 0 else 0
-    deltas = varint_decode(blob, offset=int(offsets[bi]), count=n_in_block)
-    return delta_decode(deltas, base=base)
-
-
-def decode_ids(blob, offset: int = 0, count: int | None = None, base: int = 0) -> np.ndarray:
-    """Doc ids (int64) of one chunk's id stream — or, given a block's
-    byte ``offset``, its posting ``count`` and the previous block's last
-    id as ``base``, of that block alone."""
-    return delta_decode(varint_decode(blob, offset=offset, count=count), base=base).view(np.int64)
-
-
 def decode_chunk(
     blob_ids,
     blob_tfs,
@@ -198,9 +149,103 @@ def decode_chunk(
     ``count`` and ``base`` (block_last[j-1]), of block j alone."""
     off_ids, off_tfs, off_dls = offsets
     return (
-        decode_ids(blob_ids, off_ids, count, base),
+        delta_decode(varint_decode(blob_ids, offset=off_ids, count=count),
+                     base=base).view(np.int64),
         varint_decode(blob_tfs, offset=off_tfs, count=count).view(np.int64),
         varint_decode(blob_dls, offset=off_dls, count=count).view(np.int64),
+    )
+
+
+class ChunkRows:
+    """Postings chunk rows as numpy columns: the input form of every
+    numpy reader of the postings (WAND's ``score_group``, the reader's
+    row decode, both merge passes), built from Arrow. Flat columns are
+    numpy arrays; list and binary columns are ``(values, offsets)``
+    pairs over the Arrow buffers, so building one copies no blob. A
+    holder is a view that selects rows by index: ``len(chunks)`` is its
+    chunk-row count and ``chunks[name]`` a flat column's numpy array
+    over those rows."""
+
+    __slots__ = ("cols", "rows")
+
+    def __init__(self, cols: dict, rows: np.ndarray):
+        self.cols = cols
+        self.rows = rows
+
+    @classmethod
+    def from_arrow(cls, t) -> "ChunkRows":
+        """Every column of the Arrow table or record batch ``t``."""
+        import pyarrow as pa
+
+        cols: dict = {}
+        for name in t.column_names:
+            a = t.column(name)
+            if isinstance(a, pa.ChunkedArray):
+                a = a.combine_chunks()
+            ty = a.type
+            if pa.types.is_list(ty) or pa.types.is_large_list(ty):
+                cols[name] = (a.values.to_numpy(), a.offsets.to_numpy())
+            elif pa.types.is_binary(ty) or pa.types.is_large_binary(ty):
+                _valid, offs, data = a.buffers()
+                off_t = np.int64 if pa.types.is_large_binary(ty) else np.int32
+                cols[name] = (
+                    np.frombuffer(data, np.uint8) if data is not None
+                    else np.zeros(0, np.uint8),
+                    np.frombuffer(offs, off_t)[a.offset: a.offset + len(a) + 1],
+                )
+            else:
+                cols[name] = a.to_numpy(zero_copy_only=False)
+        return cls(cols, np.arange(t.num_rows))
+
+    def __len__(self) -> int:
+        return self.rows.size
+
+    def __getitem__(self, name: str) -> np.ndarray:
+        return self.cols[name][self.rows]
+
+    def take(self, idx: np.ndarray) -> "ChunkRows":
+        """The view over this view's rows at positions ``idx``."""
+        return ChunkRows(self.cols, self.rows[idx])
+
+    def cell(self, name: str, row: int) -> np.ndarray:
+        """List or binary column ``name`` at absolute row ``row``."""
+        values, offs = self.cols[name]
+        return values[offs[row]: offs[row + 1]]
+
+    def gather(self, name: str, rows: np.ndarray) -> np.ndarray:
+        """List or binary column ``name``'s cells at absolute ``rows``,
+        concatenated."""
+        values, offs = self.cols[name]
+        lo, nb = offs[rows], offs[rows + 1] - offs[rows]
+        first = np.cumsum(nb) - nb
+        return values[np.arange(nb.sum()) - np.repeat(first - lo, nb)]
+
+
+def decode_rows(chunks: ChunkRows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids, tfs, dls) int64 arrays of every posting of ``chunks``'
+    rows, in row order, then doc order within a row: the batch inverse
+    of the build's encoder. One varint decode per stream over the rows'
+    blob bytes (a slice of the Arrow buffer when the rows are
+    contiguous), one cumsum for the ids, reset at every row start: a
+    chunk's first delta is its absolute id."""
+    rows = chunks.rows
+    ns = chunks["n"].astype(np.int64)
+    contiguous = rows.size > 0 and bool(np.all(np.diff(rows) == 1))
+
+    def stream(name: str) -> np.ndarray:
+        if not contiguous:
+            return chunks.gather(name, rows)
+        values, offs = chunks.cols[name]
+        return values[offs[rows[0]]: offs[rows[-1] + 1]]
+
+    deltas = varint_decode(stream("blob_ids"))
+    sums = np.cumsum(deltas)
+    first = np.cumsum(ns) - ns
+    ids = sums - np.repeat(sums[first] - deltas[first], ns)
+    return (
+        ids.view(np.int64),
+        varint_decode(stream("blob_tfs")).view(np.int64),
+        varint_decode(stream("blob_dls")).view(np.int64),
     )
 
 

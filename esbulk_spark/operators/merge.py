@@ -52,38 +52,42 @@ def _read(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
     return for_index_dir(index_dir).read(spark, name)
 
 
-def segment_tf_rows(spark: SparkSession, index_dir: str) -> DataFrame:
+def segment_tf_rows(spark: SparkSession, index_dir: str, exclude=None) -> DataFrame:
     """Decode one segment's postings back to (doc_id, term, tf, dl) rows
     — the exact shape of the postings-stage input, so the standard build
-    stages re-run on the union without re-tokenizing content."""
+    stages re-run on the union without re-tokenizing content.
+    ``exclude``: sorted int64 doc ids whose postings are dropped."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from esbulk_spark.functions.codec import decode_chunk
+    from esbulk_spark.functions.codec import ChunkRows, decode_rows
+    from esbulk_spark.plans.wand import not_in_sorted
 
-    posts = _read(spark, index_dir, "postings")
+    bexcl = None if exclude is None else spark.sparkContext.broadcast(exclude)
 
     def decode(batches):
-        for pdf in batches:
-            outs = []
-            for term, b_ids, b_tfs, b_dls in zip(
-                pdf["term"].values, pdf["blob_ids"].values,
-                pdf["blob_tfs"].values, pdf["blob_dls"].values,
-            ):
-                ids, tfs, dls = decode_chunk(b_ids, b_tfs, b_dls)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": ids, "term": term,
-                            "tf": tfs.astype(np.int32), "dl": dls.astype(np.int32),
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"doc_id": [], "term": [], "tf": [], "dl": []}
+        for rb in batches:
+            chunks = ChunkRows.from_arrow(rb)
+            ids, tfs, dls = decode_rows(chunks)
+            row = np.repeat(np.arange(rb.num_rows), chunks["n"].astype(np.int64))
+            if bexcl is not None:
+                keep = not_in_sorted(ids, bexcl.value)
+                ids, tfs, dls, row = ids[keep], tfs[keep], dls[keep], row[keep]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids),
+                    rb.column("term").take(pa.array(row)),
+                    pa.array(tfs.astype(np.int32)),
+                    pa.array(dls.astype(np.int32)),
+                ],
+                ["doc_id", "term", "tf", "dl"],
             )
 
-    return posts.mapInPandas(decode, "doc_id long, term string, tf int, dl int")
+    return (
+        _read(spark, index_dir, "postings")
+        .select("term", "n", "blob_ids", "blob_tfs", "blob_dls")
+        .mapInArrow(decode, "doc_id long, term string, tf int, dl int")
+    )
 
 
 def _expand_attached(segment_dirs: list[str]) -> list[str]:
@@ -195,28 +199,39 @@ def merge_segments(
 
 
 def _make_max_refresher(k1: float, b: float, avgdl: float, block_size: int):
-    """mapInPandas pass recomputing max_tfnorm / block_max_tfnorm for a
+    """mapInArrow pass recomputing max_tfnorm / block_max_tfnorm for a
     NEW avgdl from each chunk's own tf/dl streams, with the encoder's own
-    tfnorm, so the bounds equal a fresh build's over the same postings.
-    All other columns (blobs, offsets, counts) pass through untouched —
-    the varint streams never depend on corpus statistics."""
+    tfnorm and the encoder's batch-wide reduceat, so the bounds equal a
+    fresh build's over the same postings. All other columns (blobs,
+    offsets, counts) pass through untouched — the varint streams never
+    depend on corpus statistics."""
     import numpy as np
+    import pyarrow as pa
 
-    from esbulk_spark.functions.codec import decode_chunk, tfnorm
+    from esbulk_spark.functions.codec import ChunkRows, decode_rows, tfnorm
 
     def refresh(batches):
-        for pdf in batches:
-            maxes, blk_maxes = [], []
-            for blobs in zip(pdf["blob_ids"], pdf["blob_tfs"], pdf["blob_dls"]):
-                _, tfs, dls = decode_chunk(*blobs)
-                tfn = tfnorm(tfs, dls, k1, b, avgdl)
-                bstarts = np.arange(0, tfn.size, block_size)
-                blk_maxes.append(np.maximum.reduceat(tfn, bstarts))
-                maxes.append(float(tfn.max()))
-            pdf = pdf.copy()
-            pdf["max_tfnorm"] = maxes
-            pdf["block_max_tfnorm"] = blk_maxes
-            yield pdf
+        for rb in batches:
+            chunks = ChunkRows.from_arrow(
+                rb.select(["n", "blob_ids", "blob_tfs", "blob_dls"]))
+            _, tfs, dls = decode_rows(chunks)
+            tfn = tfnorm(tfs, dls, k1, b, avgdl)
+            ns = chunks["n"].astype(np.int64)
+            first = np.cumsum(ns) - ns
+            # block j of a chunk starts block_size * j postings into it
+            nb = (ns + block_size - 1) // block_size
+            blocks = np.append(0, np.cumsum(nb))
+            b_start = np.repeat(first, nb) + block_size * (
+                np.arange(blocks[-1]) - np.repeat(blocks[:-1], nb))
+            for name, col in (
+                ("max_tfnorm", pa.array(np.maximum.reduceat(tfn, first))),
+                ("block_max_tfnorm", pa.ListArray.from_arrays(
+                    pa.array(blocks.astype(np.int32)),
+                    pa.array(np.maximum.reduceat(tfn, b_start)),
+                )),
+            ):
+                rb = rb.set_column(rb.schema.get_field_index(name), name, col)
+            yield rb
 
     return refresh
 
@@ -273,7 +288,7 @@ def merge_segments_fast(
     n_buckets = stats["n_buckets"]
     refreshed = (
         reduce(DataFrame.unionByName, parts)
-        .mapInPandas(
+        .mapInArrow(
             _make_max_refresher(
                 stats["k1"], stats["b"], stats["avgdl"], stats["block_size"]
             ),
@@ -301,11 +316,12 @@ def merge_segments_fast(
     return stats
 
 
-def _merge_positions(spark, segment_dirs, out, n_buckets, man) -> bool:
+def _merge_positions(spark, segment_dirs, out, n_buckets, man, deletes=None) -> bool:
     """Carry the opt-in positions table through a merge: disjoint doc
-    ids make it a plain union, re-bucketed for the merged layout.
-    Returns whether a merged positions table was written (only when
-    EVERY segment carries one)."""
+    ids make it a plain union, re-bucketed for the merged layout, minus
+    the doc ids of ``deletes`` (a DataFrame) when given. Returns whether
+    a merged positions table was written (only when EVERY segment
+    carries one)."""
     from esbulk_spark.plans.build import bucket_col
 
     if not all(for_index_dir(sd).exists("positions") for sd in segment_dirs):
@@ -313,7 +329,10 @@ def _merge_positions(spark, segment_dirs, out, n_buckets, man) -> bool:
     pos = reduce(
         DataFrame.unionByName,
         [_read(spark, sd, "positions") for sd in segment_dirs],
-    ).withColumn(
+    )
+    if deletes is not None:
+        pos = pos.join(deletes.select("doc_id"), "doc_id", "left_anti").select(*pos.columns)
+    pos = pos.withColumn(
         "bucket", bucket_col(F.col("term"), n_buckets)
     ).repartition(n_buckets, "bucket")
     _atomic_write(pos, os.path.join(out, "positions"), partition_by=["bucket"])

@@ -434,37 +434,49 @@ def _swap_in(spark, index_dir, write, carry_deletes=True, new_deletes=None) -> d
     return stats
 
 
-def _rebuild_in_place(spark: SparkSession, index_dir: str, docs, sig: str) -> dict:
-    """Rebuild the index from ``docs`` (doc_ids pinned) in its own
-    layout and swap it over ``index_dir``. ``docs`` must be a lazy plan
-    over the CURRENT dir — it is only executed while the old tables
-    still exist. The rebuild drops the tombstones: ``docs`` holds the
-    live docs only."""
-    st = _stats(index_dir)
-    return _swap_in(
-        spark, index_dir,
-        lambda tmp: build_index(
-            spark, docs, _layout_cfg(st, tmp, n_shards=st.get("n_shards")),
-            input_sig=sig,
-        ),
-        carry_deletes=False,
-    )
-
-
 def expunge_deletes(spark: SparkSession, index_dir: str) -> dict:
-    """ES POST /<index>/_forcemerge?only_expunge_deletes analog: rebuild
-    the index from its LIVE docs (reader.docs() already masks
-    tombstones), dropping the deletes table and recomputing every
-    statistic. After this, scores reflect the post-delete corpus."""
+    """ES POST /<index>/_forcemerge?only_expunge_deletes analog: rewrite
+    main + attached segments as one index of their LIVE docs in its own
+    layout, dropping the tombstones and recomputing every statistic.
+    Nothing is tokenized (so sha-only indexes expunge too): the live
+    docs rows are written as they are, the stats stage sums their norms,
+    postings re-encode from segment_tf_rows' decode minus the
+    tombstones, and positions drop the same ids."""
+    from functools import reduce
+
+    from esbulk_spark.operators import merge
+    from esbulk_spark.plans.build import _atomic_write, _read_table
+    from esbulk_spark.plans.checkpoint import Manifest
+
     r = open_reader(spark, index_dir)
-    if r._deleted_arr() is None and not attached_segments(index_dir):
+    dead = r._deleted_arr()
+    segs = [index_dir, *attached_segments(index_dir)]
+    if dead is None and len(segs) == 1:
         return r.stats  # nothing to expunge, nothing to fold in
-    fp = r.stats.get("fingerprint", "")
-    arr = r._deleted_arr()
-    n_del = 0 if arr is None else len(arr)
-    return _rebuild_in_place(
-        spark, index_dir, r.docs(), sig=f"expunge:{fp}:{n_del}"
-    )
+    st = _stats(index_dir)
+    n_del = 0 if dead is None else len(dead)
+    sig = f"expunge:{r.stats.get('fingerprint', '')}:{n_del}"
+
+    def write(tmp):
+        cfg = _layout_cfg(st, tmp, n_shards=st.get("n_shards"))
+        os.makedirs(tmp)
+        man = Manifest(tmp, cfg.fingerprint(sig))
+        docs_path = os.path.join(tmp, "docs")
+        _atomic_write(r.docs(), docs_path)
+        docs = _read_table(spark, docs_path)
+        man.record("docs", rows=docs.count())
+        if cfg.store_positions:
+            merge._merge_positions(
+                spark, segs, tmp, cfg.n_buckets, man,
+                deletes=None if dead is None else r._table("deletes"),
+            )
+        tf = reduce(
+            DataFrame.unionByName,
+            [merge.segment_tf_rows(spark, d, dead) for d in segs],
+        )
+        return build_index(spark, docs, cfg, input_sig=sig, tf_source=tf)
+
+    return _swap_in(spark, index_dir, write, carry_deletes=False)
 
 
 def update_by_query(
@@ -479,10 +491,12 @@ def update_by_query(
     like an absent query body), then reindex. Immutable tables make
     this a transformed rebuild + atomic swap; doc_ids are pinned so
     ranks stay comparable. Updating the text column reindexes its
-    postings — exactly what ES's doc-version bump does internally."""
-    from pyspark.sql import functions as F  # noqa: F811
-
+    postings — exactly what ES's doc-version bump does internally. It
+    needs the stored text: a store_content=False index raises."""
     r = open_reader(spark, index_dir)
+    if not r.stats.get("store_content", True):
+        raise ValueError("update_by_query re-tokenizes stored text; this "
+                         "index was built with store_content=False")
     docs = r.docs()
     if query is not None:
         match = r.score_all(query).select("doc_id").withColumn(
@@ -500,7 +514,15 @@ def update_by_query(
         docs = docs.drop("__upd")
     fp = r.stats.get("fingerprint", "")
     sig = f"ubq:{fp}|q={query}|{sorted(set_exprs.items())}"
-    return _rebuild_in_place(spark, index_dir, docs, sig=sig)
+    st = _stats(index_dir)
+    return _swap_in(
+        spark, index_dir,
+        lambda tmp: build_index(
+            spark, docs, _layout_cfg(st, tmp, n_shards=st.get("n_shards")),
+            input_sig=sig,
+        ),
+        carry_deletes=False,
+    )
 
 
 ATTACHED_DIR = "attached"

@@ -32,8 +32,10 @@ IndexReader's query families are adapters over three shared pieces:
 
 Families that need the full match set (bool, AND, aggs, count, explain,
 the other similarities) decode the pruned postings with
-``_decode_to_rows``. Every DataFrame built from driver-side rows (a
-result, an empty result, the batch's query pairs) is an Arrow-backed
+``_decode_to_rows``, a ``mapInArrow`` that decodes each Arrow batch
+with ``codec.decode_rows``, the batch decoder WAND and the merges share.
+Every DataFrame built from driver-side rows (a result, an empty result,
+the batch's query pairs) is an Arrow-backed
 local relation (``_local_df``), so collecting it runs no Spark job.
 """
 
@@ -138,6 +140,12 @@ class IndexReader:
     @property
     def n_docs(self) -> int:
         return self.stats["n_docs"]
+
+    @property
+    def bound_scale(self) -> float:
+        """Factor the scorer applies to stored block maxes (1.0: one
+        index's bounds hold under its own statistics)."""
+        return 1.0
 
     def _table(self, name: str) -> DataFrame:
         # memoized: re-creating the relation re-lists every partition
@@ -365,6 +373,7 @@ class IndexReader:
             prune=prune,
             dense_max=self.dense_max,
             exclude_bc=self._deleted_bc(),
+            bound_scale=self.bound_scale,
         )
         return tagged.groupBy("qid", "shard").applyInArrow(scorer, RESULT_SCHEMA)
 
@@ -434,8 +443,9 @@ class IndexReader:
         kernel, same per-shard top-k contract."""
         import numpy as np
 
+        from esbulk_spark.functions.codec import ChunkRows
         # looked up per call, so a wrapped score_group is the one called
-        from esbulk_spark.plans.wand import ChunkRows, score_group
+        from esbulk_spark.plans.wand import score_group
 
         t = self.read_postings(sorted(dfs), list(_SCORED_COLS))
         if not t.num_rows:
@@ -452,7 +462,7 @@ class IndexReader:
             ids, scores = score_group(
                 chunks.take(idx), self.n_docs, k, s["k1"], s["b"], s["avgdl"],
                 s["block_size"], prune, dense_max=self.dense_max,
-                exclude=self._deleted_arr(),
+                exclude=self._deleted_arr(), bound_scale=self.bound_scale,
             )
             shard = int(shard_col[idx[0]])
             out.extend(
@@ -1383,7 +1393,7 @@ class IndexReader:
         prunable volume (``total_postings`` across ALL terms the caller
         will decode, minus the seed's own) is under seed_min_prunable."""
         import numpy as np
-        from esbulk_spark.functions.codec import decode_ids
+        from esbulk_spark.functions.codec import ChunkRows, decode_rows
 
         if not dfs:
             return None
@@ -1400,11 +1410,8 @@ class IndexReader:
         total = sum(dfs.values()) if total_postings is None else total_postings
         if total - dfs[rarest] < self.seed_min_prunable:
             return None
-        blobs = self.read_postings([rarest], ["blob_ids"])["blob_ids"]
-        parts = [decode_ids(b) for b in blobs.to_pylist()]
-        if not parts:
-            return None
-        return np.unique(np.concatenate(parts))
+        t = self.read_postings([rarest], ["n", "blob_ids", "blob_tfs", "blob_dls"])
+        return np.unique(decode_rows(ChunkRows.from_arrow(t))[0])
 
     def search_phrase_prefix(
         self,
@@ -1600,19 +1607,19 @@ class IndexReader:
         return topk_deterministic(out, k, round_to)
 
     def _decode_to_rows(self, terms: list[str], doc_filter=None) -> DataFrame:
-        """Decode pruned postings chunks -> (term, doc_id, contrib) rows.
-        The index-backed full-scan path used by intersection and tests.
+        """Decode pruned postings chunks -> (term, doc_id, tf, dl,
+        contrib) rows: the index-backed full-scan path, a ``mapInArrow``
+        that decodes each batch with ``codec.decode_rows``.
 
         ``doc_filter`` (sorted np.int64 array, from _seed_doc_ids): when
-        set, each chunk keeps only postings whose doc_id is in the array
-        (vectorized searchsorted membership) BEFORE any row is built —
-        candidate pruning happens executor-side at decode time, so hot
-        terms never ship their full posting set through Arrow or into
-        the aggregation. The array rides a Spark broadcast (one copy per
-        executor, not per task)."""
-        import pandas as pd
+        set, a batch keeps only postings whose doc_id is in the array
+        BEFORE any row is built, so hot terms never ship their full
+        posting set through Arrow or into the aggregation. It and the
+        tombstones ride Spark broadcasts (one copy per executor)."""
         import numpy as np
-        from esbulk_spark.functions.codec import decode_chunk, tfnorm
+        import pyarrow as pa
+        from esbulk_spark.functions.codec import ChunkRows, decode_rows, tfnorm
+        from esbulk_spark.plans.wand import not_in_sorted
 
         dfs = self._dfs_cached(terms)
         idfs = {t: float(idf_fn(d, self.n_docs)) for t, d in dfs.items()}
@@ -1625,51 +1632,35 @@ class IndexReader:
         bexcl = self._deleted_bc()  # soft-delete tombstones (or None)
 
         def decode(batches):
-            from esbulk_spark.plans.wand import not_in_sorted
-
-            flt = bflt.value if bflt is not None else None
-            excl = bexcl.value if bexcl is not None else None
-            for pdf in batches:
-                outs = []
-                # column access, not iterrows: each row is a <=128k-posting
-                # chunk, so the per-chunk python overhead is amortized but
-                # row-object materialization is still pure waste
-                for term, b_ids, b_tfs, b_dls in zip(
-                    pdf["term"].values, pdf["blob_ids"].values,
-                    pdf["blob_tfs"].values, pdf["blob_dls"].values,
-                ):
-                    ids, tfs, dls = decode_chunk(b_ids, b_tfs, b_dls)
-                    if flt is not None:
-                        if not flt.size:
-                            continue
-                        pos = np.searchsorted(flt, ids)
-                        np.minimum(pos, len(flt) - 1, out=pos)
-                        mask = flt[pos] == ids
-                        if not mask.any():
-                            continue
-                        ids, tfs, dls = ids[mask], tfs[mask], dls[mask]
-                    if excl is not None:
-                        keep = not_in_sorted(ids, excl)
-                        if not keep.any():
-                            continue
-                        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "term": term,
-                                "doc_id": ids,
-                                "tf": tfs.astype(np.int32),
-                                "dl": dls.astype(np.int32),
-                                "contrib": idfs[term] * tfnorm(tfs, dls, k1, b, avgdl),
-                            }
-                        )
-                    )
-                yield pd.concat(outs) if outs else pd.DataFrame(
-                    {"term": [], "doc_id": [], "tf": [], "dl": [], "contrib": []}
+            for rb in batches:
+                chunks = ChunkRows.from_arrow(rb)
+                ids, tfs, dls = decode_rows(chunks)
+                row = np.repeat(np.arange(rb.num_rows), chunks["n"].astype(np.int64))
+                keep = np.ones(ids.size, dtype=bool)
+                if bflt is not None:
+                    keep &= ~not_in_sorted(ids, bflt.value)
+                if bexcl is not None:
+                    keep &= not_in_sorted(ids, bexcl.value)
+                ids, tfs, dls, row = ids[keep], tfs[keep], dls[keep], row[keep]
+                term = rb.column("term")
+                row_idf = np.array([idfs[t] for t in term.to_pylist()], dtype=np.float64)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        term.take(pa.array(row)),
+                        pa.array(ids),
+                        pa.array(tfs.astype(np.int32)),
+                        pa.array(dls.astype(np.int32)),
+                        pa.array(row_idf[row] * tfnorm(tfs, dls, k1, b, avgdl)),
+                    ],
+                    ["term", "doc_id", "tf", "dl", "contrib"],
                 )
 
-        return self._pruned_postings(list(idfs)).mapInPandas(
-            decode, "term string, doc_id long, tf int, dl int, contrib double"
+        return (
+            self._pruned_postings(list(idfs))
+            .select("term", "n", "blob_ids", "blob_tfs", "blob_dls")
+            .mapInArrow(
+                decode, "term string, doc_id long, tf int, dl int, contrib double"
+            )
         )
 
     def explain(self, query: str, doc_id: int) -> dict:

@@ -27,9 +27,9 @@ consumes is aggregated across segments BEFORE scoring:
                                   with the SEGMENT's avgdl; under the
                                   global avgdl they may be slack but stay
                                   valid bounds ONLY when global avgdl <=
-                                  segment avgdl. WAND pruning therefore
-                                  recomputes exactness-preserving bounds:
-                                  see _bound_scale below.
+                                  segment avgdl. The scorer therefore
+                                  scales them by ``bound_scale`` (below);
+                                  the rows themselves are read as stored.
 
 Cost model at 10^12 docs: append = build only the delta (token-sized in
 the BATCH, not the corpus); search adds one union branch per segment,
@@ -42,14 +42,17 @@ Block-max caveat, precisely: a chunk's stored max_tfnorm was computed
 as tf/(tf + k1*(1-b) + k1*b*dl/avgdl_seg), which INCREASES with avgdl.
 When the global avgdl exceeds a segment's (avgdl_glob > avgdl_seg) the
 true global-stats tfnorm can exceed the stored bound, so pruning with
-stale bounds could wrongly skip a winner. The reader therefore scales
-every stored bound by the worst-case ratio
+stale bounds could wrongly skip a winner. The reader's ``bound_scale``
+is the worst-case ratio
   sup_{tf,dl} tfnorm(avgdl_glob)/tfnorm(avgdl_seg)
     = sup_dl (1-b+b*dl/avgdl_seg)/(1-b+b*dl/avgdl_glob)   (at tf -> 0)
     = avgdl_glob/avgdl_seg                                 (dl -> inf)
-i.e. by max(1, avgdl_glob / min_seg avgdl) — a cheap, conservative,
+i.e. max(1, avgdl_glob / min_seg avgdl) — a cheap, conservative,
 EXACTNESS-PRESERVING inflation (tests pin rank identity vs the merged
-index). Merged/compacted indexes recompute exact bounds
+index). The scorer applies it (plans/wand.py: ``_TermCursor`` computes
+idf * (block max * bound_scale)) on both the driver and the distributed
+path; neither ``_table`` nor ``read_terms`` rewrites a stored bound.
+Merged/compacted indexes recompute exact bounds
 (merge._make_max_refresher) and carry none of this slack.
 """
 
@@ -188,18 +191,6 @@ class SegmentSetReader(IndexReader):
                 t = t.withColumn(
                     "shard", (F.col("shard") + F.lit(shard_off)).cast("int")
                 )
-                if self.bound_scale != 1.0:
-                    # exactness-preserving bound inflation under the
-                    # global avgdl (module docstring)
-                    sc = float(self.bound_scale)
-                    t = t.withColumn(
-                        "max_tfnorm", F.col("max_tfnorm") * F.lit(sc)
-                    ).withColumn(
-                        "block_max_tfnorm",
-                        F.transform(
-                            "block_max_tfnorm", lambda x: x * F.lit(sc)
-                        ),
-                    )
             parts.append(t)
             shard_off += int(st["n_shards"])
         if not parts:
@@ -217,9 +208,10 @@ class SegmentSetReader(IndexReader):
     def read_terms(self, name: str, terms: list[str] | None = None,
                    columns: list[str] | None = None):
         """The driver-side twin of ``_table``: per-segment Arrow reads,
-        concatenated, with the same shard remap and bound inflation on
-        postings and per-term df/cf sums on the dictionary."""
+        concatenated, with the same shard remap on postings and per-term
+        df/cf sums on the dictionary."""
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         if terms is not None:
             terms = sorted(set(terms))
@@ -229,8 +221,11 @@ class SegmentSetReader(IndexReader):
         for io, st in zip(self.ios, self.seg_stats):
             if not (name in _MultiIO._ANY and not io.exists(name)):
                 t = io.read_terms(name, buckets, terms, columns)
-                if name == "postings":
-                    t = _remap_postings(t, shard_off, self.bound_scale)
+                if name == "postings" and "shard" in t.column_names:
+                    t = t.set_column(
+                        t.schema.get_field_index("shard"), "shard",
+                        pc.add(t["shard"], pa.scalar(shard_off, pa.int32())),
+                    )
                 parts.append(t)
             shard_off += int(st["n_shards"])
         if not parts:
@@ -242,36 +237,3 @@ class SegmentSetReader(IndexReader):
             t = pa.table({"term": g["term"], **{c: g[f"{c}_sum"] for c in sums}})
         return t
 
-
-def _remap_postings(t, shard_off: int, scale: float):
-    """``_table("postings")``'s per-segment remap on an Arrow table: shard
-    ids shifted by the segment's offset, stored bounds multiplied by
-    ``scale`` (the same IEEE double multiply as the Spark ``transform``,
-    so both paths carry bit-identical bounds)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def put(t, name, col):
-        return t.set_column(t.schema.get_field_index(name), name, col)
-
-    names = t.column_names
-    if "shard" in names:
-        t = put(t, "shard", pc.add(t["shard"], pa.scalar(shard_off, pa.int32())))
-    if scale == 1.0:
-        return t
-    if "max_tfnorm" in names:
-        t = put(t, "max_tfnorm", pc.multiply(t["max_tfnorm"], scale))
-    if "block_max_tfnorm" in names:
-        # every chunk row carries its block list (never null), so the
-        # offsets carry over as they are
-        ty = t.schema.field("block_max_tfnorm").type
-        t = put(t, "block_max_tfnorm", pa.chunked_array(
-            [
-                pa.ListArray.from_arrays(
-                    c.offsets, pc.multiply(c.values, scale), type=ty
-                )
-                for c in t["block_max_tfnorm"].chunks
-            ],
-            ty,
-        ))
-    return t

@@ -9,7 +9,8 @@ Spark's execution model:
   * The index is doc-range sharded; one group = one (query, shard): an
     ``applyInArrow`` group on the distributed path, a slice of the
     driver's Arrow read on the driver path. Both hand ``score_group``
-    the same ``ChunkRows`` columns. Shards run as independent tasks
+    the same ``ChunkRows`` columns (functions/codec.py, next to the
+    chunk format they view). Shards run as independent tasks
     across the cluster; a global top-k merge of the tiny per-shard
     winners finishes the job.
   * Within a group, candidate doc space is partitioned into ELEMENTARY
@@ -35,17 +36,21 @@ vectorized sweep — same bounds, same skips, numpy throughput.
 full-scan oracle; tests assert it matches both the pruned path and the
 raw-corpus DataFrame oracle (plans/score.py).
 
-Chunk decode and the tf-norm come from the kernel in functions/codec.py
-(``decode_chunk``, ``tfnorm``), the same functions the encoder's stored
-bounds and every other numpy reader of the postings use — so the
-"exact <= UB" argument above holds bit for bit, not just up to rounding.
+Chunk decode and the tf-norm come from the kernel in functions/codec.py:
+``decode_rows`` decodes the dense path's rows and a cursor's whole
+chunks in one batch, ``decode_chunk`` one block for the skip-decode,
+and ``tfnorm`` is the one the encoder's stored bounds and every other
+numpy reader of the postings use — so the "exact <= UB" argument above
+holds bit for bit, not just up to rounding. A segment set's stored
+bounds were computed under each segment's avgdl; the reader's
+``bound_scale`` inflates them here, before idf multiplies them.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from esbulk_spark.functions.codec import decode_chunk, tfnorm
+from esbulk_spark.functions.codec import ChunkRows, decode_chunk, decode_rows, tfnorm
 
 RESULT_SCHEMA = "qid string, shard int, doc_id long, score double"
 
@@ -70,69 +75,6 @@ def not_in_sorted(ids: np.ndarray, excl: np.ndarray) -> np.ndarray:
     return ~hit
 
 
-class ChunkRows:
-    """Postings chunk rows as numpy columns: the one input form of
-    ``score_group``, built from Arrow by the driver path and by the
-    distributed scorer alike. Flat columns are numpy arrays; list and
-    binary columns are ``(values, offsets)`` pairs over the Arrow
-    buffers, so building one copies no blob. A holder is a view that
-    selects rows by index: ``len(chunks)`` is its chunk-row count and
-    ``chunks[name]`` a flat column's numpy array over those rows."""
-
-    __slots__ = ("cols", "rows")
-
-    def __init__(self, cols: dict, rows: np.ndarray):
-        self.cols = cols
-        self.rows = rows
-
-    @classmethod
-    def from_arrow(cls, t) -> "ChunkRows":
-        """Every column of the Arrow table or record batch ``t``."""
-        import pyarrow as pa
-
-        cols: dict = {}
-        for name in t.column_names:
-            a = t.column(name)
-            if isinstance(a, pa.ChunkedArray):
-                a = a.combine_chunks()
-            ty = a.type
-            if pa.types.is_list(ty) or pa.types.is_large_list(ty):
-                cols[name] = (a.values.to_numpy(), a.offsets.to_numpy())
-            elif pa.types.is_binary(ty) or pa.types.is_large_binary(ty):
-                _valid, offs, data = a.buffers()
-                off_t = np.int64 if pa.types.is_large_binary(ty) else np.int32
-                cols[name] = (
-                    np.frombuffer(data, np.uint8) if data is not None
-                    else np.zeros(0, np.uint8),
-                    np.frombuffer(offs, off_t)[a.offset: a.offset + len(a) + 1],
-                )
-            else:
-                cols[name] = a.to_numpy(zero_copy_only=False)
-        return cls(cols, np.arange(t.num_rows))
-
-    def __len__(self) -> int:
-        return self.rows.size
-
-    def __getitem__(self, name: str) -> np.ndarray:
-        return self.cols[name][self.rows]
-
-    def take(self, idx: np.ndarray) -> "ChunkRows":
-        """The view over this view's rows at positions ``idx``."""
-        return ChunkRows(self.cols, self.rows[idx])
-
-    def cell(self, name: str, row: int) -> np.ndarray:
-        """List or binary column ``name`` at absolute row ``row``."""
-        values, offs = self.cols[name]
-        return values[offs[row]: offs[row + 1]]
-
-    def gather(self, name: str, rows: np.ndarray) -> np.ndarray:
-        """List column ``name``'s cells at absolute ``rows``, concatenated."""
-        values, offs = self.cols[name]
-        lo, nb = offs[rows], offs[rows + 1] - offs[rows]
-        first = np.cumsum(nb) - nb
-        return values[np.arange(nb.sum()) - np.repeat(first - lo, nb)]
-
-
 class _TermCursor:
     """Decoded-on-demand view over one term's chunk rows within a shard."""
 
@@ -147,8 +89,11 @@ class _TermCursor:
                  "b", "avgdl", "bs")
 
     def __init__(self, term_idf: float, chunks: ChunkRows, rows: np.ndarray,
-                 block_size: int, k1: float, b: float, avgdl: float):
-        # rows: the term's absolute chunk rows in ``chunks``, by min_doc
+                 block_size: int, k1: float, b: float, avgdl: float,
+                 bound_scale: float = 1.0):
+        # rows: the term's absolute chunk rows in ``chunks``, by min_doc;
+        # bound_scale: the reader's factor that keeps stored block maxes
+        # valid under its statistics (1.0 on a single index)
         self.idf = term_idf
         self.chunks = chunks
         self.rows = rows
@@ -164,23 +109,20 @@ class _TermCursor:
         self.blk_start = np.empty_like(self.blk_end)
         self.blk_start[1:] = self.blk_end[:-1] + 1
         self.blk_start[first] = chunks.cols["min_doc"][rows]
-        self.blk_ub = term_idf * chunks.gather("block_max_tfnorm", rows).astype(np.float64)
+        self.blk_ub = term_idf * (
+            chunks.gather("block_max_tfnorm", rows).astype(np.float64) * bound_scale
+        )
         self.blk_row = np.repeat(np.arange(rows.size, dtype=np.int64), nb)
         self.blk_j = np.arange(self.blk_end.size, dtype=np.int64) - np.repeat(first, nb)
         self.blk_n = np.full(self.blk_end.size, block_size, dtype=np.int64)
         self.blk_n[first + nb - 1] = self.ns - (nb - 1) * block_size
-
-    def _blobs(self, ri: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        row = self.rows[ri]
-        return tuple(self.chunks.cell(c, row)
-                     for c in ("blob_ids", "blob_tfs", "blob_dls"))
 
     def _decode_chunk(self, ri: int) -> tuple[np.ndarray, np.ndarray]:
         """(doc_ids, contribs) of ALL postings in chunk row ri; cached."""
         hit = self.chunk_cache.get(ri)
         if hit is not None:
             return hit
-        ids, tfs, dls = decode_chunk(*self._blobs(ri), count=int(self.ns[ri]))
+        ids, tfs, dls = decode_rows(ChunkRows(self.chunks.cols, self.rows[ri:ri + 1]))
         out = (ids, self.idf * tfnorm(tfs, dls, self.k1, self.b, self.avgdl))
         self.chunk_cache[ri] = out
         return out
@@ -201,7 +143,7 @@ class _TermCursor:
             return out
         row = self.rows[ri]
         ids, tfs, dls = decode_chunk(
-            *self._blobs(ri),
+            *(self.chunks.cell(c, row) for c in ("blob_ids", "blob_tfs", "blob_dls")),
             count=int(self.blk_n[bi]),
             offsets=tuple(int(self.chunks.cell(c, row)[j])
                           for c in ("off_ids", "off_tfs", "off_dls")),
@@ -224,6 +166,7 @@ def score_group(
     batch_ranges: int = 64,
     dense_max: int | None = None,
     exclude: np.ndarray | None = None,
+    bound_scale: float = 1.0,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Score one (query, shard) group of postings-chunk rows.
 
@@ -236,7 +179,11 @@ def score_group(
     excluded docs are masked out BEFORE top-k selection, so a deleted
     doc never occupies a winner slot (Lucene liveDocs semantics). Block
     upper bounds may still include deleted docs — they stay valid (just
-    less tight) for the live docs, so pruning remains exact."""
+    less tight) for the live docs, so pruning remains exact.
+
+    ``bound_scale`` multiplies every stored block max before idf does
+    (the reader's ``bound_scale``: > 1 on a segment set whose global
+    avgdl exceeds a segment's, plans/segments.py)."""
     if exclude is not None and not exclude.size:
         exclude = None
     if not len(chunks):
@@ -246,28 +193,23 @@ def score_group(
     order = np.lexsort((chunks["min_doc"], codes))
     codes, rows, dfs = codes[order], chunks.rows[order], chunks["df"][order]
     firsts = np.flatnonzero(np.diff(codes, prepend=-1))
-    cursors = [
-        _TermCursor(float(idf(int(dfs[f]), n_docs)), chunks, term_rows,
-                    block_size, k1, b, avgdl)
-        for f, term_rows in zip(firsts, np.split(rows, firsts[1:]))
-    ]
+    idfs = [float(idf(int(dfs[f]), n_docs)) for f in firsts]
 
     # dense path for small groups: below ~half a million postings,
-    # decoding everything (3 vectorized varint calls per chunk) and one
-    # bincount beats the per-candidate-block WAND loop (~30 us of numpy
-    # small-op overhead per block) — WAND's pruning only pays once the
-    # group is large enough that skipped decode outweighs loop overhead.
-    # Exact either way; rank-identity asserted in tests/test_rank_fuzz.
+    # decoding everything (3 vectorized varint calls for the group) and
+    # one bincount beats the per-candidate-block WAND loop (~30 us of
+    # numpy small-op overhead per block) — WAND's pruning only pays once
+    # the group is large enough that skipped decode outweighs loop
+    # overhead. Rows keep the cursors' (term, min_doc) order, so each
+    # doc's contributions sum in the same order either way. Exact either
+    # way; rank-identity asserted in tests/test_rank_fuzz.
     total_n = int(chunks["n"].sum())
     if total_n <= (DENSE_GROUP_MAX if dense_max is None else dense_max):
-        ids_parts, contrib_parts = [], []
-        for c in cursors:
-            for ri in range(c.rows.size):
-                i_arr, c_arr = c._decode_chunk(ri)
-                ids_parts.append(i_arr)
-                contrib_parts.append(c_arr)
-        all_ids = np.concatenate(ids_parts)
-        all_contrib = np.concatenate(contrib_parts)
+        dense = ChunkRows(chunks.cols, rows)
+        all_ids, tfs, dls = decode_rows(dense)
+        row_idf = np.repeat(idfs, np.diff(np.append(firsts, rows.size)))
+        all_contrib = np.repeat(row_idf, dense["n"].astype(np.int64)) * tfnorm(
+            tfs, dls, k1, b, avgdl)
         if exclude is not None:
             keep = not_in_sorted(all_ids, exclude)
             all_ids, all_contrib = all_ids[keep], all_contrib[keep]
@@ -275,6 +217,11 @@ def score_group(
         scores = np.bincount(inv, weights=all_contrib)
         sel = np.lexsort((u, -scores))[:k]
         return u[sel], scores[sel]
+
+    cursors = [
+        _TermCursor(t_idf, chunks, term_rows, block_size, k1, b, avgdl, bound_scale)
+        for t_idf, term_rows in zip(idfs, np.split(rows, firsts[1:]))
+    ]
 
     # ---- elementary ranges via boundary events ----
     pos_list, delta_list = [], []
@@ -369,6 +316,7 @@ def make_group_scorer(
     prune: bool = True,
     dense_max: int | None = None,
     exclude_bc=None,
+    bound_scale: float = 1.0,
 ):
     """applyInArrow((qid, shard) group) -> that shard's top-k rows as a
     ``pyarrow.Table`` of RESULT_SCHEMA. ``exclude_bc``: optional Spark
@@ -382,6 +330,7 @@ def make_group_scorer(
             ChunkRows.from_arrow(table), n_docs, k, k1, b, avgdl, block_size,
             prune, dense_max=dense_max,
             exclude=exclude_bc.value if exclude_bc is not None else None,
+            bound_scale=bound_scale,
         )
         return pa.table({
             "qid": pa.array([qid] * ids.size, pa.string()),

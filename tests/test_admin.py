@@ -164,6 +164,50 @@ def test_expunge_deletes_recomputes_stats(spark, mutable_index):
     assert st["n_docs"] == r.n_docs
 
 
+@pytest.mark.parametrize("positions", [False, True])
+def test_expunge_deletes_sha_only(spark, tmp_path, positions):
+    """A store_content=False index expunges without its text: the docs,
+    stats, postings and positions come from the index itself, and the
+    result ranks like the full-scan oracle over the live source docs.
+    update_by_query, which needs the text, says so."""
+    from esbulk_spark.corpus import synth_corpus
+    from esbulk_spark.operators.docids import assign_doc_ids_with_count
+    from esbulk_spark.plans.score import bm25_fullscan
+
+    src, _ = assign_doc_ids_with_count(
+        synth_corpus(spark, 60, seed=13), ("repo", "path", "commit"),
+        out_col="doc_id",
+    )
+    src = src.cache()
+    d = str(tmp_path / "sha")
+    build_index(spark, src, IndexConfig(
+        index_dir=d, id_col="doc_id", n_buckets=4, n_shards=2, chunk_cap=64,
+        store_content=False, store_positions=positions,
+    ), input_sig="sha60")
+    dead = list(range(0, 60, 4))
+    admin.delete_by_ids(spark, d, dead)
+    admin.expunge_deletes(spark, d)
+
+    r = IndexReader(spark, d)
+    live = src.filter(~src.doc_id.isin(dead))
+    assert r._deleted_arr() is None
+    assert r.doc_count() == r.n_docs == live.count()
+    assert "content" not in r.docs().columns
+    for q in ("flushBuffer retry", "return error value", "getUserName"):
+        o = [(x.doc_id, round(x.score, 6)) for x in
+             bm25_fullscan(live, q, text_col="content", k=10).collect()]
+        w = [(x.doc_id, round(x.score, 6)) for x in r.search(q).collect()]
+        assert o == w, q
+    if positions:
+        pos = {x.doc_id for x in spark.read.parquet(f"{d}/positions").collect()}
+        assert pos == {x.doc_id for x in live.select("doc_id").collect()}
+        q = "return error"
+        assert not {x.doc_id for x in r.search_phrase(q, k=100).collect()} & set(dead)
+    with pytest.raises(ValueError, match="store_content"):
+        admin.update_by_query(spark, d, {"lang": "'x'"})
+    src.unpersist()
+
+
 def test_update_by_query(spark, mutable_index):
     from esbulk_spark.plans.score import bm25_fullscan
 

@@ -335,8 +335,8 @@ def test_overwrite_build_drops_stale_overlays(spark, tmp_path):
 
 def test_segment_set_read_terms_matches_spark(spark, seg_dirs, chunk_rows):
     """The driver-side read over the set carries the Spark union's rows
-    exactly: shard offsets, inflated bounds (bound_scale > 1 here) and
-    per-term df/cf sums."""
+    exactly: shard offsets, the stored bounds as written (the scorer
+    applies bound_scale, > 1 here) and per-term df/cf sums."""
     r = SegmentSetReader(spark, seg_dirs)
     assert r.bound_scale != 1.0
     terms = sorted(
