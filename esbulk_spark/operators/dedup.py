@@ -590,10 +590,11 @@ def minhash_lsh_pairs_incremental(
 ) -> DataFrame:
     """Candidate near-dup pairs touching the NEW batch only: new-vs-new
     plus new-vs-history via the stored band keys — history text is
-    never re-read, never re-hashed. Appending each batch's keys keeps
-    the invariant: the union of per-batch incremental pairs equals the
-    from-scratch LSH pairs over the concatenated corpus (band keys are
-    text-pure functions; pytest pins the equality).
+    never re-read, never re-hashed. Storing each batch's keys in its
+    own ``state_dir/batch-<uuid>`` directory keeps the invariant: the
+    union of per-batch incremental pairs equals the from-scratch LSH
+    pairs over the concatenated corpus (band keys are text-pure
+    functions; pytest pins the equality).
 
     Scale shape: one equi-join of the batch's keys against the state on
     band_key (both sides hash-partitioned on the key), plus the batch
@@ -601,27 +602,22 @@ def minhash_lsh_pairs_incremental(
     do in the batch variant — the guard knobs there apply here."""
     import glob
     import os
+    import uuid
 
     new_keys = minhash_band_keys(
         new_df, text_col, id_col, n_perm, band_size, n, seed
     )
-    # snapshot the state's file list BEFORE the append below: the
-    # returned (lazy) plan reads exactly these files, so recomputation
-    # can never see this batch's own keys on the history side
-    old_files = sorted(glob.glob(os.path.join(state_dir, "*.parquet")))
+    # history = the batch directories committed BEFORE this batch's
+    # write: the returned (lazy) plan reads exactly these, so neither
+    # this batch's keys nor a batch committed concurrently can land on
+    # the history side
+    old_dirs = sorted(glob.glob(os.path.join(state_dir, "batch-*")))
     if update_state:
-        new_keys.write.mode("append").parquet(state_dir)
-        # the append wrote EXACTLY this batch's keys: re-read only the
-        # files it created (the pre-append file list is snapshotted
-        # above). The previous plan re-scanned the WHOLE state table and
-        # joined back to the batch ids — per-batch cost grew with
-        # history size for rows already in hand (guide §2.4).
-        new_files = sorted(
-            set(glob.glob(os.path.join(state_dir, "*.parquet")))
-            - set(old_files)
-        )
-        if new_files:
-            new_keys = spark.read.parquet(*new_files)
+        # each batch writes its own directory and reads back exactly
+        # that directory — never the whole state, never a listing diff
+        batch_dir = os.path.join(state_dir, f"batch-{uuid.uuid4().hex}")
+        new_keys.write.parquet(batch_dir)
+        new_keys = spark.read.parquet(batch_dir)
     a = new_keys.select(F.col("id").alias("id_a"), "band_key")
     b = new_keys.select(F.col("id").alias("id_b"), "band_key")
     pairs = (
@@ -629,8 +625,8 @@ def minhash_lsh_pairs_incremental(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    if old_files:
-        old = spark.read.parquet(*old_files).select(
+    if old_dirs:
+        old = spark.read.parquet(*old_dirs).select(
             F.col("id").alias("id_a"), "band_key"
         )
         cross = (

@@ -335,7 +335,6 @@ def _filter_pred(reader, node):
 def _leaf_scores(reader, node) -> DataFrame | None:
     """Full (doc_id, score) frame for one positive leaf; None when the
     leaf matches nothing (absent term / empty expansion)."""
-    empty = None
     if isinstance(node, (FieldTerm, Range, Exists)):
         # ES constant_score / filter-context semantics: every matching
         # doc contributes exactly 1.0
@@ -347,15 +346,9 @@ def _leaf_scores(reader, node) -> DataFrame | None:
     if isinstance(node, Term):
         from esbulk_spark.functions.analyzer import tokenize_text
 
-        toks = tokenize_text(node.text)
-        if not toks:
-            return empty
-        if len(toks) > 1:
-            # a single word analyzing to several tokens (camelCase split)
-            # scores as their disjunction, the ES analyzed-term behavior
-            pass
-        df = reader.score_all(" ".join(toks))
-        return df if reader._dfs_cached(toks) else empty
+        # a single word analyzing to several tokens (camelCase split)
+        # scores as their disjunction, the ES analyzed-term behavior
+        return reader._match(should=tokenize_text(node.text))
     if isinstance(node, Phrase):
         if node.slop > 0:
             return reader._sloppy_scores(node.text, node.slop).select(
@@ -367,13 +360,7 @@ def _leaf_scores(reader, node) -> DataFrame | None:
             dfs = reader.expand_prefix(node.text[:-1])
         else:
             dfs = reader.expand_wildcard(node.text)
-        if not dfs:
-            return empty
-        return (
-            reader._decode_to_rows(sorted(dfs))
-            .groupBy("doc_id")
-            .agg(F.sum("contrib").alias("score"))
-        )
+        return reader._match(should=sorted(dfs))
     raise QueryStringError(f"cannot score node {node!r}")
 
 

@@ -4,7 +4,7 @@ The reference's query path is its integration tests' `_search` call
 (esbulk's run_test.go:300-320): analyze -> look up -> score -> top-k.
 Here that becomes a Python-side planner (SURVEY.md §4.1: a library
 function achieves the same plan a custom Catalyst rule would).
-IndexReader's query families are adapters over three shared pieces:
+IndexReader's query families are adapters over four shared pieces:
 
   * the read seam, ``read_terms``: dictionary, postings and tombstone
     rows of the query's terms, read on the driver. The terms hash to
@@ -30,10 +30,21 @@ IndexReader's query families are adapters over three shared pieces:
     term first, one BM25 tail (``_score_phrase_cand``) and the shared
     ``topk_deterministic`` cut.
 
-Families that need the full match set (bool, AND, aggs, count, explain,
-the other similarities) decode the pruned postings with
-``_decode_to_rows``, a ``mapInArrow`` that decodes each Arrow batch
-with ``codec.decode_rows``, the batch decoder WAND and the merges share.
+  * the match core, ``_match``: every live doc with all ``must`` terms,
+    ``minimum_should_match`` distinct ``should`` terms and no
+    ``must_not`` term, BM25-scored, with no top-k cut. One
+    ``_decode_to_rows`` (a ``mapInArrow`` that decodes each Arrow batch
+    with ``codec.decode_rows``, the batch decoder WAND and the merges
+    share), one aggregate, and an anti-join against the must_not
+    terms' own match set. When a must term's postings fit under
+    ``driver_score_max`` and it keeps at most half the corpus, its doc
+    ids are read on the driver and seed the decode (rarest-first
+    intersection). score_all, search_and, search_bool, count, the
+    terms and significant_terms aggregations, boosting_query and the
+    query_string term and pattern leaves are adapters over it.
+
+``explain`` and ``search_similarity`` decode rows with their own per-term
+arithmetic.
 Every DataFrame built from driver-side rows (a result, an empty result,
 the batch's query pairs) is an Arrow-backed
 local relation (``_local_df``), so collecting it runs no Spark job.
@@ -216,10 +227,7 @@ class IndexReader:
         return self._table("postings")
 
     def norms(self) -> DataFrame:
-        # document norms table (doc_id, dl), derived from the build's
-        # single tokenize pass; older indexes carried dl in the docs table
-        if self.io.exists("norms"):
-            return self._table("norms")
+        # document norms (doc_id, dl): the docs table carries dl
         return self._table("docs").select("doc_id", "dl")
 
     def doc_count(self) -> int:
@@ -341,7 +349,8 @@ class IndexReader:
         present = sorted(dfs)
         posts = self._pruned_postings(present).select(*_SCORED_COLS)
         if len(analyzed) == 1:
-            # single query: qid and the df map are literals — no joins
+            # single query: qid and the df map are literals — no joins;
+            # the broadcast below costs one Spark job of its own
             qid = next(iter(analyzed))
             dfmap = F.create_map(
                 *[F.lit(x) for t in present for x in (t, dfs[t])]
@@ -351,8 +360,9 @@ class IndexReader:
             )
         else:
             # (qid, term, df) triples: tiny, ONE broadcast onto the
-            # pruned postings scan; a local relation, so the broadcast
-            # runs no job of its own
+            # pruned postings scan. Broadcasting even a local relation
+            # runs one Spark job (the exchange collects its child
+            # through a job), which the single-query branch avoids
             pairs = self._local_df(
                 [
                     (qid, t, dfs[t])
@@ -517,8 +527,8 @@ class IndexReader:
 
     def _local_df(self, rows: list[tuple], schema: str) -> DataFrame:
         """``rows`` under the DDL ``schema`` as an Arrow-backed local
-        relation. The rows live in the plan, so collecting or
-        broadcasting it runs no Spark job; a Python list would be
+        relation. The rows live in the plan, so collecting it runs no
+        Spark job (broadcasting it runs one); a Python list would be
         parallelized into an RDD that costs a job at every use. Every
         DataFrame the reader builds from driver-side rows comes from
         here."""
@@ -580,7 +590,7 @@ class IndexReader:
         WAND/bucket pruning is user-visible.
 
         ``track_total_hits``: like ES's flag — the true total (docs
-        matching >= 1 term) costs an extra distinct-count job, so it is
+        matching >= 1 term, ``count``) costs extra Spark jobs, so it is
         opt-in; otherwise total reports the returned hit count.
 
         ``highlight``: name of a ``_source`` field to highlight (ES's
@@ -664,13 +674,7 @@ class IndexReader:
                     hi = min(len(text), m.end() + highlight_window)
                     frag = pat.sub(lambda g: f"<em>{g.group(0)}</em>", text[lo:hi])
                     h["highlight"] = {highlight: [frag]}
-        total = len(hits)
-        if track_total_hits:
-            terms = analyze_query(query)
-            if terms:
-                total = (
-                    self._decode_to_rows(terms).select("doc_id").distinct().count()
-                )
+        total = self.count(query) if track_total_hits else len(hits)
         if es_version >= 7:
             total_field = {
                 "value": int(total),
@@ -1368,47 +1372,20 @@ class IndexReader:
         out = scored.select("doc_id", (F.col("score") * u).alias("score"))
         return topk_deterministic(out, k, round_to)
 
-    # conjunctive-seed gate: when the rarest required term's df is under
-    # this bound, its doc-id set is decoded driver-side (read_postings of
-    # THAT term only) and pushed into the other terms' decoders as a
-    # sorted-array membership filter — a `must=[hot-term]` query then
-    # ships only the rarest term's candidate rows through Arrow and the
-    # agg instead of the hot term's entire posting set. Above the bound
-    # the plan falls back to the unseeded decode (still bucket+term
-    # pruned and shard-parallel), so this is a fast path, not a ceiling.
-    seed_decode_max: int = 2_000_000
-    # ...and only when the PRUNABLE volume (other terms' postings) is
-    # large enough to repay the seed's own cost: its driver-side decode
-    # plus a broadcast into every decoder. The bound dates from when the
-    # seed was an extra Spark scan job (~0.3-0.4 s): at 200k and 500k
-    # docs (~0.4-1M prunable postings) seeded and unseeded were then a
-    # wash. The seed is now a driver-side read, so the bound is
-    # conservative; it was not re-measured.
-    seed_min_prunable: int = 5_000_000
-
-    def _seed_doc_ids(self, dfs: dict[str, int], total_postings: int | None = None):
-        """Sorted np.int64 doc ids of the rarest term in ``dfs``, or None
-        when seeding cannot pay off: the rarest term is too hot to
-        collect (> seed_decode_max), keeps most of the corpus, or the
-        prunable volume (``total_postings`` across ALL terms the caller
-        will decode, minus the seed's own) is under seed_min_prunable."""
+    def _seed_doc_ids(self, dfs: dict[str, int]):
+        """Sorted np.int64 doc ids of the rarest term in ``dfs`` (the
+        match core's must terms), read and decoded on the driver, or None
+        when the seed cannot pay off: the rarest term's postings exceed
+        driver_score_max, the reader's one bound on what the driver reads
+        for a query, or it keeps more than half the corpus and so prunes
+        almost nothing downstream (BENCH.md 'Conjunctive/bool seed-prune')."""
         import numpy as np
         from esbulk_spark.functions.codec import ChunkRows, decode_rows
 
         if not dfs:
             return None
         rarest = min(sorted(dfs), key=lambda t: dfs[t])
-        if dfs[rarest] > self.seed_decode_max:
-            return None
-        # selectivity guard: a seed that keeps most of the corpus prunes
-        # almost nothing downstream but still pays its own driver-side
-        # decode — skip unless the rarest term excludes >= half the docs
-        if 2 * dfs[rarest] > self.n_docs:
-            return None
-        # volume guard: seeding must have enough postings to prune to
-        # repay its own decode (see seed_min_prunable above)
-        total = sum(dfs.values()) if total_postings is None else total_postings
-        if total - dfs[rarest] < self.seed_min_prunable:
+        if dfs[rarest] > self.driver_score_max or 2 * dfs[rarest] > self.n_docs:
             return None
         t = self.read_postings([rarest], ["n", "blob_ids", "blob_tfs", "blob_dls"])
         return np.unique(decode_rows(ChunkRows.from_arrow(t))[0])
@@ -1459,24 +1436,53 @@ class IndexReader:
         sum_idf = self._idf_sum(body, dfs) + float(idf_fn(df_last, self.n_docs))
         return topk_deterministic(self._score_phrase_cand(cand, sum_idf), k, round_to)
 
+    def _match(
+        self, must=(), should=(), must_not=(), minimum_should_match: int = 0
+    ) -> DataFrame | None:
+        """The match core: (doc_id, score) for EVERY live doc holding all
+        ``must`` terms, at least ``minimum_should_match`` distinct
+        ``should`` terms and no ``must_not`` term (analyzed term lists),
+        score = the BM25 sum over its must and should terms; no top-k
+        cut. None when nothing can match: no scored term is in the
+        corpus, a must term is absent, or more should matches are
+        required than should terms exist.
+
+        One pruned decode of the scored terms, seeded by the rarest must
+        term's doc ids when at least two terms decode (docs lacking it
+        can never match, so hot terms drop their other postings before
+        any row reaches the aggregate); one hash aggregate, with a
+        per-doc term count only for must or minimum_should_match; and
+        a left-anti join against the must_not terms' own match set."""
+        must, should = sorted(set(must)), sorted(set(should))
+        msm = int(minimum_should_match)
+        dfs = self._dfs_cached(sorted(set(must) | set(should)))
+        if not dfs or any(t not in dfs for t in must) or msm > len(should):
+            return None
+        seed = (
+            self._seed_doc_ids({t: dfs[t] for t in must}) if len(dfs) >= 2 else None
+        )
+        # (terms, how many of them a doc needs): only must and msm count
+        counts = [(ts, n) for ts, n in ((must, len(must)), (should, msm)) if n > 0]
+        rows = self._decode_to_rows(sorted(dfs), doc_filter=seed)
+        out = rows.groupBy("doc_id").agg(
+            F.sum("contrib").alias("score"),
+            *[F.count(F.when(F.col("term").isin(ts), 1)).alias(f"n{i}")
+              for i, (ts, _) in enumerate(counts)],
+        )
+        for i, (_, need) in enumerate(counts):
+            out = out.filter(F.col(f"n{i}") >= need)
+        out = out.select("doc_id", "score")
+        excluded = self._match(should=must_not) if must_not else None
+        if excluded is not None:
+            out = out.join(excluded, "doc_id", "left_anti")
+        return out
+
     def search_and(self, query: str, k: int = 10) -> DataFrame:
         """Conjunctive (AND) search (SURVEY.md B10): only docs containing
-        ALL query terms, BM25-ranked. Posting-list intersection expressed
-        as a count-matching filter over the per-term hits, seeded by the
-        rarest term's doc set (two-phase rarest-first intersection): hot
-        terms decode-and-drop everything outside the rarest term's
-        postings before any row crosses to the aggregation."""
-        terms = analyze_query(query)
-        dfs = self._dfs_cached(terms)
-        if not terms or len(dfs) < len(terms):
-            return self._rows_df([])
-        seed = self._seed_doc_ids(dfs) if len(dfs) >= 2 else None
-        scored = self._decode_to_rows(terms, doc_filter=seed)
-        agg = scored.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("nt"), F.sum("contrib").alias("score")
-        )
-        out = agg.filter(F.col("nt") == len(dfs)).select("doc_id", "score")
-        return topk_deterministic(out, k, None)
+        ALL query terms, BM25-ranked — the match core with every term a
+        must term, so the rarest term's doc set seeds the decode."""
+        out = self._match(must=analyze_query(query))
+        return self._rows_df([]) if out is None else topk_deterministic(out, k, None)
 
     def search_bool(
         self,
@@ -1499,54 +1505,16 @@ class IndexReader:
         contributes to the score, exactly ES filter-clause semantics.
         ``minimum_should_match`` > 0 additionally requires that
         many DISTINCT should terms per doc (ES semantics: the count
-        gates matching, scores still sum over every matched term) — the
-        count rides the same aggregation as the must-term conjunction,
-        zero extra plan nodes. Built on the same pruned-postings decode
-        the intersection search uses, seeded by the rarest MUST term's
-        doc set when one exists (docs lacking it can never satisfy the
-        conjunction, so hot must/should terms skip decoding their
-        non-candidates); the must_not exclusion is a left-anti join
-        against the excluded terms' doc set (never a corpus scan)."""
-        must_t = sorted({t for q in must for t in analyze_query(q)})
-        should_t = sorted({t for q in should for t in analyze_query(q)})
-        not_t = sorted({t for q in must_not for t in analyze_query(q)})
-        scored_terms = sorted(set(must_t) | set(should_t))
-        empty = self._rows_df([])
-        if not scored_terms:
-            return empty
-        dfs = self._dfs_cached(scored_terms)
-        if any(t not in dfs for t in must_t):
-            return empty  # an absent must term matches nothing
-        # seed only from must terms — should terms don't constrain; skip
-        # when the must term is the only scored term (it would only
-        # filter its own decode by its own ids)
-        seed = None
-        if must_t and len(scored_terms) >= 2:
-            seed = self._seed_doc_ids(
-                {t: dfs[t] for t in must_t},
-                total_postings=sum(dfs.values()),
-            )
-        rows = self._decode_to_rows(
-            [t for t in scored_terms if t in dfs], doc_filter=seed
+        gates matching, scores still sum over every matched term).
+        The match set is the match core's (``_match``)."""
+        out = self._match(
+            [t for q in must for t in analyze_query(q)],
+            [t for q in should for t in analyze_query(q)],
+            [t for q in must_not for t in analyze_query(q)],
+            minimum_should_match,
         )
-        msm = int(minimum_should_match)
-        if msm > 0 and msm > len(should_t):
-            return empty  # more should-matches required than clauses exist
-        agg = rows.groupBy("doc_id").agg(
-            F.sum("contrib").alias("score"),
-            F.count(F.when(F.col("term").isin(list(must_t)), 1)).alias("n_must"),
-            F.count(F.when(F.col("term").isin(list(should_t)), 1)).alias(
-                "n_should"
-            ),
-        )
-        keep = F.col("n_must") == len(must_t)
-        if msm > 0:
-            keep &= F.col("n_should") >= msm
-        out = agg.filter(keep).select("doc_id", "score")
-        present_not = [t for t, d in self._dfs_cached(not_t).items() if d] if not_t else []
-        if present_not:
-            excluded = self._decode_to_rows(present_not).select("doc_id").distinct()
-            out = out.join(excluded, "doc_id", "left_anti")
+        if out is None:
+            return self._rows_df([])
         if filter is not None:
             allowed = self.docs().filter(filter).select("doc_id")
             out = out.join(allowed, "doc_id", "left_semi")
@@ -1708,18 +1676,12 @@ class IndexReader:
         """BM25 scores for EVERY doc matching >= 1 analyzed query term
         (no top-k cut) -> (doc_id, score). The exhaustive companion to
         search(): pagination and aggregations need the full match set,
-        not the k winners. Cost = one pruned decode of the query terms'
-        postings + a hash agg — the same volume any deep ES
-        scroll/aggregation pays."""
-        terms = analyze_query(query)
-        dfs = self._dfs_cached(terms)
-        if not dfs:
+        not the k winners. It is the match core with every term a should
+        term: one pruned decode of the query terms' postings + a hash
+        agg — the same volume any deep ES scroll/aggregation pays."""
+        out = self._match(should=analyze_query(query))
+        if out is None:
             return self._rows_df([])
-        out = (
-            self._decode_to_rows(sorted(dfs))
-            .groupBy("doc_id")
-            .agg(F.sum("contrib").alias("score"))
-        )
         if round_to is not None:
             out = out.withColumn("score", F.round("score", round_to))
         return out
@@ -1906,16 +1868,12 @@ class IndexReader:
         the docs table on doc_id (hash join; column-pruned scan reads
         only doc_id + the field), then one hash agg — no corpus scan,
         no collect."""
-        terms = analyze_query(query)
-        dfs = self._dfs_cached(terms)
-        empty = self._local_df([], "key string, doc_count long")
-        if not dfs:
-            return empty
-        matched = (
-            self._decode_to_rows(sorted(dfs)).select("doc_id").distinct()
-        )
+        matched = self._match(should=analyze_query(query))
+        if matched is None:
+            return self._local_df([], "key string, doc_count long")
         return (
-            matched.join(self.docs().select("doc_id", field), "doc_id")
+            matched.select("doc_id")
+            .join(self.docs().select("doc_id", field), "doc_id")
             .groupBy(F.col(field).cast("string").alias("key"))
             .agg(F.count(F.lit(1)).alias("doc_count"))
             .orderBy(F.desc("doc_count"), F.asc("key"))
@@ -2270,16 +2228,14 @@ class IndexReader:
         from esbulk_spark.functions.analyzer import tokens_col
 
         terms = analyze_query(query)
-        dfs = self._dfs_cached(terms)
         empty = self._local_df(
             [], "key string, doc_count long, bg_count long, score double"
         )
-        if not dfs:
-            return empty
-        matched = self._decode_to_rows(sorted(dfs)).select("doc_id").distinct()
-        n_fg = matched.count()
+        matched = self._match(should=terms)
+        n_fg = 0 if matched is None else matched.count()
         if n_fg == 0:
             return empty
+        matched = matched.select("doc_id")
         text_col = self._text_col()
         fg = (
             matched.join(self.docs().select("doc_id", text_col), "doc_id")
@@ -2291,7 +2247,7 @@ class IndexReader:
             .groupBy("key")
             .agg(F.count(F.lit(1)).alias("doc_count"))
             .filter(F.col("doc_count") >= min_doc_count)
-            .filter(~F.col("key").isin(sorted(dfs)))
+            .filter(~F.col("key").isin(sorted(self._dfs_cached(terms))))
         )
         n_bg = self.n_docs
         joined = fg.join(
@@ -2408,15 +2364,10 @@ class IndexReader:
 
     def count(self, query: str) -> int:
         """ES ``_count`` API analog: the number of docs matching >= 1
-        analyzed query term — the same pruned decode + distinct count
-        ``track_total_hits`` runs, without scoring or fetching."""
-        terms = analyze_query(query)
-        dfs = self._dfs_cached(terms)
-        if not dfs:
-            return 0
-        return (
-            self._decode_to_rows(sorted(dfs)).select("doc_id").distinct().count()
-        )
+        analyzed query term: the size of score_all's match set
+        (``track_total_hits`` reports it)."""
+        matched = self._match(should=analyze_query(query))
+        return 0 if matched is None else matched.count()
 
     def get_docs(self, doc_ids: list[int]) -> list[dict]:
         """ES ``_mget`` analog: the stored fields of many ids in ONE
@@ -2508,21 +2459,15 @@ def boosting_query(
     query; any hit ALSO matching ``negative`` keeps its rank presence
     but its score is multiplied by ``negative_boost`` (demotion without
     exclusion — the compound ES offers between bool.must_not and
-    nothing). The negative side only needs a doc-id set, so it is a
-    pruned decode of the negative terms' postings + a left-semi-style
-    membership flag, never a corpus scan."""
+    nothing). The negative side only needs a doc-id set: the negative
+    terms' match set from the match core + a membership flag, never a
+    corpus scan."""
     if not (0.0 <= negative_boost <= 1.0):
         raise ValueError(f"negative_boost must be in [0, 1]: {negative_boost}")
     pos = reader.score_all(positive)
-    neg_terms = analyze_query(negative)
-    neg_dfs = reader._dfs_cached(neg_terms)
-    if neg_dfs:
-        neg = (
-            reader._decode_to_rows(sorted(neg_dfs))
-            .select("doc_id")
-            .distinct()
-            .withColumn("__neg", F.lit(True))
-        )
+    neg = reader._match(should=analyze_query(negative))
+    if neg is not None:
+        neg = neg.select("doc_id", F.lit(True).alias("__neg"))
         pos = pos.join(neg, "doc_id", "left").withColumn(
             "score",
             F.when(

@@ -1,6 +1,6 @@
 """Pluggable table storage for the index table set (SURVEY.md §1.1,
 M4): the index is a set of tables (docs / postings / dictionary /
-norms / positions) plus a JSON spec. How those tables are stored and
+positions) plus a JSON spec. How those tables are stored and
 committed is a backend concern:
 
 * ``ParquetDirIO`` (default, zero dependencies): one parquet directory

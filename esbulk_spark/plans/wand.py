@@ -32,8 +32,9 @@ This is block-max WAND's skipping logic reorganized from a doc-at-a-time
 cursor walk (pointer-chasing, per-doc Python cost) into a range-at-a-time
 vectorized sweep — same bounds, same skips, numpy throughput.
 
-``prune=False`` decodes and scores everything — the index-backed
-full-scan oracle; tests assert it matches both the pruned path and the
+``prune=False`` is the index-backed full-scan oracle: the dense kernel
+at every group size, which decodes and scores every posting and reads
+no block bound; tests assert it matches both the pruned path and the
 raw-corpus DataFrame oracle (plans/score.py).
 
 Chunk decode and the tf-norm come from the kernel in functions/codec.py:
@@ -57,6 +58,9 @@ RESULT_SCHEMA = "qid string, shard int, doc_id long, score double"
 # score_group groups at or under this many postings take the dense
 # decode-all path instead of the elementary-range WAND sweep
 DENSE_GROUP_MAX = 1 << 19
+# elementary ranges the WAND sweep scores per pass before it re-checks
+# the threshold
+BATCH_RANGES = 64
 
 
 def idf(df: int | np.ndarray, n_docs: int) -> float | np.ndarray:
@@ -163,7 +167,6 @@ def score_group(
     avgdl: float,
     block_size: int,
     prune: bool = True,
-    batch_ranges: int = 64,
     dense_max: int | None = None,
     exclude: np.ndarray | None = None,
     bound_scale: float = 1.0,
@@ -202,9 +205,10 @@ def score_group(
     # the group is large enough that skipped decode outweighs loop
     # overhead. Rows keep the cursors' (term, min_doc) order, so each
     # doc's contributions sum in the same order either way. Exact either
-    # way; rank-identity asserted in tests/test_rank_fuzz.
+    # way; rank-identity asserted in tests/test_rank_fuzz. Unpruned
+    # scoring (prune=False) is this path at every size.
     total_n = int(chunks["n"].sum())
-    if total_n <= (DENSE_GROUP_MAX if dense_max is None else dense_max):
+    if not prune or total_n <= (DENSE_GROUP_MAX if dense_max is None else dense_max):
         dense = ChunkRows(chunks.cols, rows)
         all_ids, tfs, dls = decode_rows(dense)
         row_idf = np.repeat(idfs, np.diff(np.append(firsts, rows.size)))
@@ -254,11 +258,10 @@ def score_group(
     i = 0
     n_ranges = ub_order.size
     while i < n_ranges:
-        take = ub_order[i: i + batch_ranges] if prune else ub_order
-        if prune:
-            take = take[r_ub[take] >= theta] if np.isfinite(theta) else take
-            if take.size == 0:
-                break
+        take = ub_order[i: i + BATCH_RANGES]
+        take = take[r_ub[take] >= theta] if np.isfinite(theta) else take
+        if take.size == 0:
+            break
         lo_b, hi_b = r_lo[take], r_hi[take]
         sel = np.argsort(lo_b, kind="stable")
         lo_b, hi_b = lo_b[sel], hi_b[sel]
@@ -298,11 +301,9 @@ def score_group(
             m_scores = np.concatenate([top_scores, scores])
             sel2 = np.lexsort((m_ids, -m_scores))[:k]
             top_ids, top_scores = m_ids[sel2], m_scores[sel2]
-            if prune and top_ids.size >= k:
+            if top_ids.size >= k:
                 theta = top_scores[-1]
-        if not prune:
-            break
-        i += batch_ranges
+        i += BATCH_RANGES
     return top_ids, top_scores
 
 

@@ -532,51 +532,44 @@ def test_phrase_without_positions_clear_error(spark, index_dir):
 
 
 def test_seeded_and_bool_match_unseeded(reader):
-    """VERDICT r3 item 3: the rarest-term seed prune must be invisible
-    to results — seeded and unseeded plans rank-identical. The volume
-    gate (seed_min_prunable) is zeroed to force the seed path on the
-    tiny fixture; production leaves it unseeded at this scale."""
-    from esbulk_spark.functions.analyzer import analyze_query
-
-    # a selective term (the guards skip seeding when the rarest term
-    # keeps most of the corpus) picked from the live dictionary
-    rare = (
-        reader.dictionary()
+    """The rarest-must-term seed prune must be invisible to results.
+    Under the default gate a selective must term engages it; seeded rows
+    equal the unseeded plan's (driver_score_max=0 turns the seed off)
+    for search_and and for search_bool with must_not, msm and filter."""
+    # selective terms (the guard skips seeding when the rarest term
+    # keeps more than half the corpus) picked from the live dictionary:
+    # the must term and a must_not term
+    rare, excl = (
+        r["term"] for r in reader.dictionary()
         .filter((F.col("df") >= 3) & (F.col("df") <= 60))
         .orderBy(F.desc("df"), "term")
-        .limit(1)
-        .collect()[0]["term"]
+        .limit(2)
+        .collect()
     )
+    assert reader._seed_doc_ids(reader.lookup_terms([rare])) is not None
     q = f"{rare} def func"
-    old_max, old_min = reader.seed_decode_max, reader.seed_min_prunable
-    try:
-        reader.seed_min_prunable = 0  # force-enable seeding
-        dfs = reader.lookup_terms(analyze_query(q))
-        assert reader._seed_doc_ids(dfs) is not None  # path exercised
-        seeded = [
-            (r.doc_id, round(r.score, 6)) for r in reader.search_and(q).collect()
-        ]
-        reader.seed_decode_max = 0  # force the unseeded full decode
-        unseeded = [
-            (r.doc_id, round(r.score, 6)) for r in reader.search_and(q).collect()
-        ]
-    finally:
-        reader.seed_decode_max, reader.seed_min_prunable = old_max, old_min
-    assert seeded == unseeded
+    runs = [
+        lambda: reader.search_and(q),
+        lambda: reader.search_bool(must=[rare], should=["def func"],
+                                   must_not=[excl]),
+        lambda: reader.search_bool(must=[rare], should=["def func return"],
+                                   minimum_should_match=2),
+        lambda: reader.search_bool(must=[rare], should=["def func"],
+                                   filter="lang is not null"),
+    ]
 
-    kw = dict(must=[rare], should=["def func"], must_not=["lambda"], k=10)
+    def rows(run):
+        return [(r.doc_id, round(r.score, 6)) for r in run().collect()]
+
+    seeded = [rows(run) for run in runs]
     try:
-        reader.seed_min_prunable = 0
-        seeded_b = [
-            (r.doc_id, round(r.score, 6)) for r in reader.search_bool(**kw).collect()
-        ]
-        reader.seed_decode_max = 0
-        unseeded_b = [
-            (r.doc_id, round(r.score, 6)) for r in reader.search_bool(**kw).collect()
-        ]
+        reader.driver_score_max = 0  # the unseeded full decode
+        assert reader._seed_doc_ids(reader.lookup_terms([rare])) is None
+        unseeded = [rows(run) for run in runs]
     finally:
-        reader.seed_decode_max, reader.seed_min_prunable = old_max, old_min
-    assert seeded_b == unseeded_b and seeded_b  # bool hits are non-empty
+        del reader.driver_score_max
+    assert seeded == unseeded
+    assert seeded[0] and seeded[1]  # AND and bool hits are non-empty
 
 
 def test_search_many_empty_schema_matches_nonempty(reader):

@@ -1323,6 +1323,46 @@ def test_incremental_lsh_equals_from_scratch(spark, tmp_path, sf_dir):
     assert {(r["id_a"], r["id_b"]) for r in again.collect()} <= full
 
 
+def test_incremental_lsh_ignores_a_concurrent_commit(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """A second incremental batch that commits between this batch's
+    history snapshot and its read-back (simulated by wrapping the
+    writer) never leaks into this batch's pairs: each batch reads back
+    exactly its own keys."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    state = str(tmp_path / "dedup_state")
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .limit(300)
+        .cache()
+    )
+    b1 = docs.filter(F.col("doc_id") % 2 == 0)
+    b2 = docs.filter(F.col("doc_id") % 2 == 1)
+    b2_ids = {r["doc_id"] for r in b2.collect()}
+    write = DataFrameWriter.parquet
+    committed = []
+
+    def write_then_commit_b2(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        if not committed:
+            committed.append(path)
+            dedup.minhash_lsh_pairs_incremental(spark, b2, "text", "doc_id", state)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_commit_b2)
+    pairs = dedup.minhash_lsh_pairs_incremental(spark, b1, "text", "doc_id", state)
+    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    monkeypatch.undo()
+    assert committed
+    assert not {i for p in got for i in p} & b2_ids
+    alone = dedup.minhash_lsh_pairs_incremental(
+        spark, b1, "text", "doc_id", str(tmp_path / "alone")
+    )
+    assert got == {(r["id_a"], r["id_b"]) for r in alone.collect()} and got
+
+
 def test_geohash_fuzz_matches_python_reference(spark):
     """Property fuzz: the Catalyst geohash == a pure-Python replica of
     the SAME binary-expansion arithmetic on random coordinates (the

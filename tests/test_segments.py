@@ -425,3 +425,49 @@ def test_search_many_over_segment_set(spark, seg_dirs):
             if round_to is None:
                 assert {q: [(d, round(s, 6)) for d, s in v]
                         for q, v in got.items()} == oracle
+
+
+@pytest.fixture(scope="module")
+def tombstoned_dir(spark, index_dir, tmp_path_factory):
+    """A copy of the shared index with every fifth doc deleted."""
+    from esbulk_spark.plans import admin
+
+    base = tmp_path_factory.mktemp("tomb")
+    d = str(base / "idx")
+    admin.snapshot_index(index_dir, str(base / "snap"))
+    admin.restore_index(str(base / "snap"), d)
+    admin.delete_by_ids(spark, d, list(range(0, 150, 5)))
+    return d
+
+
+@pytest.mark.parametrize("kind", ["fresh", "tombstoned", "segment_set"])
+def test_match_core_families_equal_full_scan(spark, index_dir, tombstoned_dir,
+                                             seg_dirs, kind):
+    """count, track_total_hits, search_and and score_all are adapters over
+    one match core: each equals the full-scan oracle over the index's
+    docs (deleted ones included, so the statistics are the index's),
+    restricted to the live docs."""
+    r = {
+        "fresh": lambda: IndexReader(spark, index_dir),
+        "tombstoned": lambda: IndexReader(spark, tombstoned_dir),
+        "segment_set": lambda: SegmentSetReader(spark, seg_dirs),
+    }[kind]()
+    live = {x.doc_id for x in r.docs().select("doc_id").collect()}
+    assert len(live) < r.n_docs if kind == "tombstoned" else len(live) == r.n_docs
+    for q in ("flushBuffer retry", "return error value", "zzznotaterm"):
+        full = [
+            (x.doc_id, round(x.score, 6))
+            for x in bm25_fullscan(r._table("docs"), q, text_col="content",
+                                   k=r.n_docs).collect()
+            if x.doc_id in live
+        ]
+        assert r.count(q) == len(full), q
+        resp = r.search_response(q, with_source=False, track_total_hits=True)
+        assert resp["hits"]["total"]["value"] == len(full), q
+        assert sorted(
+            (x.doc_id, x.score) for x in r.score_all(q, round_to=6).collect()
+        ) == sorted(full), q
+        both = [(x.doc_id, x.score) for x in r.search_and(q).collect()]
+        assert both == [(x.doc_id, x.score)
+                        for x in r.search_bool(must=[q]).collect()], q
+    assert full == [] and both == []  # the absent term matches nothing
